@@ -16,9 +16,9 @@ import com.fasterxml.jackson.databind.ObjectMapper
   * `Status=Success` in the body JSON — a 200 with a failed Status is
   * still a failure (the warehouse reports load errors in-band).
   *
-  * Retry idempotency: labels are deterministic per (db, tb, batch,
-  * chunk). A retried PUT after a transient network failure reuses the
-  * label; if the first attempt actually committed, the warehouse
+  * Retry idempotency: labels are deterministic per (db, tb, op, batch,
+  * partition, chunk). A retried PUT after a transient network failure
+  * reuses the label; if the first attempt actually committed, the warehouse
   * answers `Label Already Exists` with `ExistingJobStatus=FINISHED`,
   * which [[checkResponse]] accepts as success — the public stream-load
   * exactly-once contract.
@@ -45,10 +45,16 @@ object StreamLoadHttp {
     * warehouse's Label-Already-Exists dedup would silently drop every
     * partition after the first. A task RE-attempt re-PUTs the same
     * partition under the same labels, which is exactly the dedup we
-    * want.
+    * want. A non-empty `op` joins the label too: a hard-delete batch
+    * PUTs its upserts and its `__op='delete'` rows of one table and
+    * partition separately, and under one label the warehouse would
+    * answer the second PUT `Label Already Exists` and drop its rows.
     */
-  def label(cfg: Config, batchId: Long, part: Int, chunk: Int): String =
-    s"graft-${cfg.db}-${cfg.tb}-$batchId-$part-$chunk"
+  def label(cfg: Config, batchId: Long, part: Int, chunk: Int,
+      op: String = ""): String = {
+    val opPart = if (op.isEmpty) "" else s"$op-"
+    s"graft-${cfg.db}-${cfg.tb}-$opPart$batchId-$part-$chunk"
+  }
 
   /** Build the stream-load PUT — starrocks_sinker.rs:233-277. `op` is
     * "" for upsert batches, "delete" for hard-delete batches (the
@@ -65,7 +71,7 @@ object StreamLoadHttp {
       "format" -> "json",
       "strip_outer_array" -> "true",
       "timezone" -> "UTC",
-      "label" -> label(cfg, batchId, part, chunk))
+      "label" -> label(cfg, batchId, part, chunk, op))
     val headers =
       if (op.nonEmpty) base + ("columns" -> s"__op='$op'") else base
     Request("PUT",

@@ -42,8 +42,19 @@ object StreamLoadSink {
     def put(lines: Seq[String]): Unit
   }
 
-  /** Ship a batch: render JSON, group into chunks per partition
-    * bounded by BOTH row count and payload bytes, push each chunk.
+  /** Ship a batch to one destination: render JSON and push it through
+    * [[shipTagged]] with every line tagged for the one sink.
+    */
+  def ship(df: DataFrame, sinkFactory: () => PayloadSink,
+      batchRows: Int = 10000,
+      batchBytes: Long = Long.MaxValue): Unit =
+    shipTagged(jsonPayload(df).select(lit(0), col("payload")),
+      _ => sinkFactory(), batchRows, batchBytes)
+
+  /** Ship a destination-tagged payload frame `(dest: int, line: string)`:
+    * per partition, one sink per destination, opened by `sinkFor` on
+    * its first line, groups that destination's lines into chunks
+    * bounded by BOTH row count and payload bytes and pushes each chunk.
     *
     * The byte bound is the reference's `batch_memory_mb`
     * (sinker_config.rs): a row-count cap alone lets a batch of wide
@@ -52,28 +63,40 @@ object StreamLoadSink {
     * you don't control. A single over-wide row still ships alone (the
     * cap flushes BEFORE adding, never splits a row).
     */
-  def ship(df: DataFrame, sinkFactory: () => PayloadSink,
-      batchRows: Int = 10000,
-      batchBytes: Long = Long.MaxValue): Unit =
-    jsonPayload(df).foreachPartition {
+  def shipTagged(payload: DataFrame, sinkFor: Int => PayloadSink,
+      batchRows: Int, batchBytes: Long): Unit =
+    payload.foreachPartition {
       it: Iterator[org.apache.spark.sql.Row] =>
-        val sink = sinkFactory()
-        val buf = scala.collection.mutable.ArrayBuffer.empty[String]
-        var bytes = 0L
-        def flush(): Unit = if (buf.nonEmpty) {
-          sink.put(buf.toSeq); buf.clear(); bytes = 0L
+        val open = scala.collection.mutable.TreeMap.empty[Int, Chunks]
+        it.foreach { r =>
+          val d = r.getInt(0)
+          open.getOrElseUpdate(d,
+            new Chunks(sinkFor(d), batchRows, batchBytes))
+            .add(r.getString(1))
         }
-        it.map(_.getString(0)).foreach { line =>
-          // Cap on the ENCODED size: the request body ships UTF-8, so
-          // counting UTF-16 chars undercounts CJK/emoji text by up to
-          // ~3-4x and defeats the memory cap.
-          val lineBytes = line
-            .getBytes(java.nio.charset.StandardCharsets.UTF_8).length
-          if (buf.size >= batchRows ||
-            (buf.nonEmpty && bytes + lineBytes > batchBytes)) flush()
-          buf += line
-          bytes += lineBytes
-        }
-        flush()
+        open.valuesIterator.foreach(_.flush())
     }
+
+  /** One destination's pending chunk within a partition. */
+  private final class Chunks(sink: PayloadSink, batchRows: Int,
+      batchBytes: Long) {
+    private val buf = scala.collection.mutable.ArrayBuffer.empty[String]
+    private var bytes = 0L
+
+    def add(line: String): Unit = {
+      // Cap on the ENCODED size: the request body ships UTF-8, so
+      // counting UTF-16 chars undercounts CJK/emoji text by up to
+      // ~3-4x and defeats the memory cap.
+      val lineBytes = line
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8).length
+      if (buf.size >= batchRows ||
+        (buf.nonEmpty && bytes + lineBytes > batchBytes)) flush()
+      buf += line
+      bytes += lineBytes
+    }
+
+    def flush(): Unit = if (buf.nonEmpty) {
+      sink.put(buf.toSeq); buf.clear(); bytes = 0L
+    }
+  }
 }

@@ -1,8 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType,
+  StringType, StructField, StructType}
 
 import graft.config.TaskConfig
 import graft.infra.{Heartbeat, Monitoring}
@@ -86,7 +87,7 @@ object CdcTask {
     * the resume LSN as their position).
     */
   private def txnGroups(events: Seq[(Int, ChangeEvent)],
-      commitEnds: Seq[String]): Seq[(String, Seq[ChangeEvent])] =
+      commitEnds: IndexedSeq[String]): Seq[(String, Seq[ChangeEvent])] =
     events.groupBy(_._1).toSeq.sortBy(_._1).map { case (k, evs) =>
       val end =
         if (k < commitEnds.size) commitEnds(k)
@@ -114,11 +115,6 @@ object CdcTask {
     out.result()
   }
 
-  /** Ship one batch: per routed table, build the typed frame in the
-    * relation's wire column order, compact to final per-key state, and
-    * push sign+version-annotated JSON lines through the payload sink.
-    * Returns rows shipped per table.
-    */
   /** Sink factory: (schema, tb, batchId, op) — `op` is "" for
     * upsert/soft-delete batches and "delete" for hard-delete batches
     * (the stream-load `columns: __op='delete'` header,
@@ -127,77 +123,117 @@ object CdcTask {
   type SinkFactory =
     (String, String, Long, String) => StreamLoadSink.PayloadSink
 
+  /** One source table's share of a batch, resolved on the driver:
+    * shipped columns in wire order (ignore_cols applied, keys kept),
+    * key columns, and where routing sends them.
+    */
+  private final case class Layout(cols: Seq[String], keys: Seq[String],
+      routedCols: Seq[String], dest: (String, String))
+
+  private def layout(task: TaskConfig.Task, s: String, tb: String,
+      first: ChangeEvent,
+      relCols: Map[(String, String), Seq[String]],
+      relKeys: Map[(String, String), Seq[String]]): Layout = {
+    val wireCols = relCols.getOrElse((s, tb),
+      first.keyImage.keys.toSeq.sorted)
+    val keys = task.keysByTable.get(tb)
+      .orElse(relKeys.get((s, tb)).filter(_.nonEmpty))
+      .getOrElse(wireCols.take(1))
+    require(keys.forall(wireCols.contains),
+      s"key columns ${keys.mkString(",")} of $s.$tb are not among its " +
+        s"columns ${wireCols.mkString(",")}")
+    // ignore_cols applies to the CDC lane too (the same json: filter
+    // config as snapshot) — key columns never drop
+    val ignored = task.ignoreColsByTable.getOrElse((s, tb), Nil)
+    val cols = wireCols.filter(c => keys.contains(c) || !ignored.contains(c))
+    Layout(cols, keys, cols.map(c => task.router.routeColumn(s, tb, c)),
+      task.router.routeTable(s, tb))
+  }
+
+  /** Ship one batch as ONE plan, whatever the number of tables: every
+    * event becomes a row of a single frame `(_t, _k, _c0.._cN,
+    * row_type, _seq)` — source-table index, key values, positional
+    * column values — compacted in one shuffle on `(_t, _k)` and shipped
+    * by one job. `_k` is null when any key value is, so a table's
+    * null-keyed rows take compaction's serial lane. Each row renders as
+    * JSON with its own table's routed field names (plus the sign and
+    * version columns unless `hard_delete`), and goes to the sink of its
+    * (routed table, op). Returns rows shipped per routed table.
+    */
   def shipBatch(spark: SparkSession, task: TaskConfig.Task,
       batchId: Long, events: Seq[ChangeEvent],
       relCols: Map[(String, String), Seq[String]],
       relKeys: Map[(String, String), Seq[String]],
       sinkFor: SinkFactory)
-      : Map[(String, String), Long] = {
-    events.zipWithIndex.groupBy { case (e, _) => (e.schema, e.tb) }
-      .map { case ((s, tb), evs) =>
-        val wireCols = relCols.getOrElse((s, tb),
-          evs.head._1.keyImage.keys.toSeq.sorted)
-        val keys = task.keysByTable.get(tb)
-          .orElse(relKeys.get((s, tb)).filter(_.nonEmpty))
-          .getOrElse(wireCols.take(1))
-        // ignore_cols applies to the CDC lane too (the same json:
-        // filter config as snapshot) — key columns never drop
-        val ignored = task.ignoreColsByTable.getOrElse((s, tb), Nil)
-        val cols = wireCols.filter(c =>
-          keys.contains(c) || !ignored.contains(c))
-        val (toSchema, toTb) = task.router.routeTable(s, tb)
-        val routedCols =
-          cols.map(c => task.router.routeColumn(s, tb, c))
-        val routedKeys =
-          keys.map(c => task.router.routeColumn(s, tb, c))
-        val schema = StructType(
-          routedCols.map(StructField(_, StringType)) ++
-            Seq(StructField("row_type", StringType),
-              StructField("_seq", LongType)))
-        val rows = evs.map { case (e, i) =>
-          val img =
-            if (e.rowType == "delete") e.before else e.after
-          Row.fromSeq(cols.map(c => img.get(c).orNull) ++
-            Seq(e.rowType, i.toLong))
-        }
-        // partitions follow [pipeline] parallel_size (bounded by the
-        // row count): each partition ships through its own payload
-        // sink, so this is the PUT parallelism per table per batch
-        val slices = math.max(1,
-          math.min(task.parallelism, rows.size / 100 + 1))
-        val df = spark.createDataFrame(
-          spark.sparkContext.parallelize(rows, slices), schema)
-        val compacted = Compaction.compact(df, routedKeys,
-          Seq("_seq"), col("row_type"))
-        val batchBytes = task.sink.batchMemoryMb
-          .map(_.toLong * 1024 * 1024).getOrElse(Long.MaxValue)
-        if (task.sink.hardDelete) {
-          // hard delete: deletes ship as their own PUTs under
-          // `__op='delete'`, upserts raw — no sign/version columns
-          // (the table has no soft-delete sign). Compaction leaves at
-          // most one action per key, so the two PUT groups never
-          // race on a key.
-          val raw = compacted.drop(Compaction.ActionCol)
-          StreamLoadSink.ship(
-            raw.filter(col("row_type") =!= "delete")
-              .drop("row_type", "_seq"),
-            () => sinkFor(toSchema, toTb, batchId, ""),
-            task.batchSize, batchBytes)
-          StreamLoadSink.ship(
-            raw.filter(col("row_type") === "delete")
-              .drop("row_type", "_seq"),
-            () => sinkFor(toSchema, toTb, batchId, "delete"),
-            task.batchSize, batchBytes)
-        } else {
-          val signed = StreamLoadSink.withSignColumns(compacted,
-              col("row_type"), col("_seq"))
-            .drop("row_type", "_seq", Compaction.ActionCol)
-          StreamLoadSink.ship(signed,
-            () => sinkFor(toSchema, toTb, batchId, ""),
-            task.batchSize, batchBytes)
-        }
-        (toSchema, toTb) -> evs.size.toLong
-      }
+      : Map[(String, String), Long] = if (events.isEmpty) Map.empty else {
+    val byTable = events.groupBy(e => (e.schema, e.tb))
+    val tables = byTable.keys.toIndexedSeq.sorted
+    val tableIdx = tables.zipWithIndex.toMap
+    val layouts = tables.map { case (s, tb) =>
+      layout(task, s, tb, byTable((s, tb)).head, relCols, relKeys)
+    }
+    val width = layouts.map(_.cols.size).max
+    val schema = StructType(
+      Seq(StructField("_t", IntegerType),
+        StructField("_k", ArrayType(StringType))) ++
+        (0 until width).map(j => StructField(s"_c$j", StringType)) ++
+        Seq(StructField("row_type", StringType),
+          StructField("_seq", LongType)))
+    val rows = events.zipWithIndex.map { case (e, i) =>
+      val t = tableIdx((e.schema, e.tb))
+      val l = layouts(t)
+      val img = if (e.rowType == "delete") e.before else e.after
+      val keyVals = l.keys.map(img.get(_).orNull)
+      val values = l.cols.map(img.get(_).orNull)
+      Row.fromSeq(Seq(t, if (keyVals.contains(null)) null else keyVals) ++
+        values ++ Seq.fill(width - values.size)(null) ++
+        Seq(e.rowType, i.toLong))
+    }
+    // input slices follow [pipeline] parallel_size (bounded by the row
+    // count) and feed the compaction's map side; PUT parallelism is the
+    // number of post-shuffle partitions, each opening its own sinks
+    val slices = math.max(1,
+      math.min(task.parallelism, rows.size / 100 + 1))
+    val df = spark.createDataFrame(
+      spark.sparkContext.parallelize(rows, slices), schema)
+    val compacted = StreamLoadSink.withSignColumns(
+      Compaction.compact(df, Seq("_t", "_k"), Seq("_seq"), col("row_type")),
+      col("row_type"), col("_seq"))
+
+    // hard delete: deletes ship as their own PUTs under `__op='delete'`,
+    // upserts raw — no sign/version columns (the table has no
+    // soft-delete sign). Compaction leaves at most one action per key,
+    // so the two PUT groups never race on a key.
+    val hard = task.sink.hardDelete
+    val signCols =
+      if (hard) Nil
+      else Seq(col(StreamLoadSink.IsDeletedCol),
+        col(StreamLoadSink.VersionCol))
+    val lines = layouts.zipWithIndex.map { case (l, t) =>
+      val fields = l.routedCols.zipWithIndex.map { case (c, j) =>
+        col(s"_c$j").as(c)
+      } ++ signCols
+      (col("_t") === t, to_json(struct(fields: _*)))
+    }
+    val line = lines.tail.foldLeft(when(lines.head._1, lines.head._2)) {
+      case (acc, (isT, json)) => acc.when(isT, json)
+    }
+    // destination d = routed table index * 2 + (1 for a hard delete)
+    val dests = layouts.map(_.dest).distinct
+    val destOf = typedLit(layouts.map(l => dests.indexOf(l.dest) * 2))
+    val isDelete = if (hard) col("row_type") === "delete" else lit(false)
+    val tagged = compacted.select(
+      (destOf(col("_t")) + when(isDelete, 1).otherwise(0)).as("_d"),
+      line.as("payload"))
+    val batchBytes = task.sink.batchMemoryMb
+      .map(_.toLong * 1024 * 1024).getOrElse(Long.MaxValue)
+    StreamLoadSink.shipTagged(tagged, { d =>
+      val (s, tb) = dests(d / 2)
+      sinkFor(s, tb, batchId, if (d % 2 == 1) "delete" else "")
+    }, task.batchSize, batchBytes)
+
+    layouts.zip(tables).groupMapReduce(_._1.dest)(
+      lt => byTable(lt._2).size.toLong)(_ + _)
   }
 
   /** Run the task end-to-end over one captured stream. */
@@ -239,7 +275,7 @@ object CdcTask {
     val commitEnds = msgs.collect {
       case (_, c: PgOutput.Commit) => PgOutput.renderLsn(c.endLsn)
       case (_, sc: PgOutput.StreamCommit) => PgOutput.renderLsn(sc.endLsn)
-    }
+    }.toIndexedSeq // indexed once per txn by txnGroups
     val all = PgOutput.toChangeEventsIndexed(msgs, startLsn)
 
     // 3. pre-seek at transaction granularity: a replayed transaction is

@@ -184,39 +184,48 @@ object Tls {
   * passing silently.
   */
 final class FakeWire extends Wire {
-  private val served = new java.io.ByteArrayOutputStream()
+  // served bytes live in one growable array that reads index into, so a
+  // read costs what it returns, never a copy of the whole stream;
+  // serve and read lock the wire, as a spec may serve from another
+  // thread
+  private var served = new Array[Byte](256)
+  private var size = 0
   private var cursor = 0
   private var failAt: Int = -1 // absolute served-byte offset
   val sent = new java.io.ByteArrayOutputStream()
   var closed = false
 
   /** Enqueue bytes the next reads will return. */
-  def serve(bytes: Array[Byte]): Unit = served.write(bytes)
+  def serve(bytes: Array[Byte]): Unit = synchronized {
+    if (size + bytes.length > served.length)
+      served = java.util.Arrays.copyOf(served,
+        math.max(size + bytes.length, served.length * 2))
+    System.arraycopy(bytes, 0, served, size, bytes.length)
+    size += bytes.length
+  }
 
   /** Plant a connection failure once `read` crosses `atOffset` bytes
     * total — the reconnect-path trigger.
     */
   def failAfter(atOffset: Int): Unit = failAt = atOffset
 
-  override def read(n: Int): Array[Byte] = {
-    val all = served.toByteArray
+  override def read(n: Int): Array[Byte] = synchronized {
     if (failAt >= 0 && cursor + n > failAt)
       throw new java.io.IOException("planted connection failure")
-    if (cursor + n > all.length)
+    if (cursor + n > size)
       throw new java.io.EOFException(
-        s"fake wire drained: want $n at $cursor of ${all.length}")
-    val out = java.util.Arrays.copyOfRange(all, cursor, cursor + n)
+        s"fake wire drained: want $n at $cursor of $size")
+    val out = java.util.Arrays.copyOfRange(served, cursor, cursor + n)
     cursor += n
     out
   }
 
-  override def readSome(max: Int): Array[Byte] = {
-    val all = served.toByteArray
+  override def readSome(max: Int): Array[Byte] = synchronized {
     if (failAt >= 0 && cursor >= failAt)
       throw new java.io.IOException("planted connection failure")
-    if (cursor >= all.length)
+    if (cursor >= size)
       throw new java.io.EOFException("fake wire drained")
-    val take = math.min(max, all.length - cursor)
+    val take = math.min(max, size - cursor)
     val capped = if (failAt >= 0) math.min(take, failAt - cursor)
       else take
     read(math.max(1, capped))
@@ -227,5 +236,5 @@ final class FakeWire extends Wire {
   override def close(): Unit = closed = true
 
   def sentBytes: Array[Byte] = sent.toByteArray
-  def remaining: Int = served.size() - cursor
+  def remaining: Int = synchronized(size - cursor)
 }

@@ -26,12 +26,18 @@ class CdcTaskSpec extends SparkSuite {
 
   private val mapper = new ObjectMapper()
 
-  /** Loopback warehouse collecting stream-load PUT bodies. */
+  /** Loopback warehouse collecting stream-load PUT bodies. Labels
+    * dedup the way StarRocks dedups them: a PUT under a label already
+    * loaded is answered `Label Already Exists`/`FINISHED` and its rows
+    * are dropped.
+    */
   private final class Warehouse {
+    /** Bodies of the loads the warehouse accepted. */
     val bodies = mutable.ArrayBuffer.empty[String]
+    /** The label of every PUT, repeated ones included. */
     val labels = mutable.ArrayBuffer.empty[String]
-    /** The `columns` header per PUT ("" when absent) — hard-delete
-      * batches carry `__op='delete'` there.
+    /** The `columns` header per accepted load ("" when absent) —
+      * hard-delete batches carry `__op='delete'` there.
       */
     val ops = mutable.ArrayBuffer.empty[String]
     private val server =
@@ -40,15 +46,22 @@ class CdcTaskSpec extends SparkSuite {
       override def handle(ex: HttpExchange): Unit = try {
         val body = new String(ex.getRequestBody.readAllBytes(),
           StandardCharsets.UTF_8)
-        synchronized {
-          bodies += body
-          Option(ex.getRequestHeaders.getFirst("Label"))
-            .foreach(labels += _)
-          ops += Option(ex.getRequestHeaders.getFirst("columns"))
-            .getOrElse("")
+        val label =
+          Option(ex.getRequestHeaders.getFirst("Label")).getOrElse("")
+        val fresh = synchronized {
+          val fresh = !labels.contains(label)
+          labels += label
+          if (fresh) {
+            bodies += body
+            ops += Option(ex.getRequestHeaders.getFirst("columns"))
+              .getOrElse("")
+          }
+          fresh
         }
         val reply =
-          """{"Status":"Success","NumberLoadedRows":1}"""
+          (if (fresh) """{"Status":"Success","NumberLoadedRows":1}"""
+          else """{"Status":"Label Already Exists",""" +
+            """"ExistingJobStatus":"FINISHED"}""")
             .getBytes(StandardCharsets.UTF_8)
         ex.sendResponseHeaders(200, reply.length.toLong)
         val os = ex.getResponseBody
@@ -251,6 +264,11 @@ class CdcTaskSpec extends SparkSuite {
               "root", "", hardDelete = true), batchId, op),
         resumer = dual(store, tmp))
       assert(r.rowsShipped == 5L)
+      // every PUT carried its own label: batch 1 holds both an upsert
+      // (id=3) and a delete (id=2) of the same table and partition
+      val labels = wh.synchronized(wh.labels.toSeq)
+      assert(labels.distinct == labels, s"colliding labels: $labels")
+      assert(labels.exists(_.startsWith("graft-dw-orders_cdc-delete-1-")))
       // the delete of id=2 arrived under the hard-delete op header
       val deleteBodies = wh.synchronized {
         wh.ops.toSeq.zip(wh.bodies.toSeq)
