@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.config.TaskManager
 
 /** dt-cli analog entry point over [[graft.config.TaskManager]]:
@@ -35,15 +33,7 @@ object TaskCli {
           java.nio.file.Paths.get(args(3)))
         println(fmt(TaskManager.create(stateDir, args(2), ini)))
       case "start" =>
-        val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-        val spark = SparkSession.builder()
-          .master(s"local[$cpus]")
-          .appName("graft-task-cli")
-          .config("spark.sql.shuffle.partitions", cpus)
-          .config("spark.sql.session.timeZone", "UTC")
-          .config("spark.ui.enabled", "false")
-          .getOrCreate()
-        spark.sparkContext.setLogLevel("WARN")
+        val spark = Main.session("graft-task-cli")
         try println(fmt(TaskManager.start(spark, stateDir, args(2))))
         finally spark.stop()
       case "list" => TaskManager.list(stateDir).foreach(m => println(fmt(m)))
@@ -60,15 +50,7 @@ object TaskCli {
       // restart failed ones with capped backoff, until interrupted.
       // GRAFT_WATCH_PASSES bounds the loop for scripted runs.
       case "watch" =>
-        val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-        val spark = SparkSession.builder()
-          .master(s"local[$cpus]")
-          .appName("graft-task-watch")
-          .config("spark.sql.shuffle.partitions", cpus)
-          .config("spark.sql.session.timeZone", "UTC")
-          .config("spark.ui.enabled", "false")
-          .getOrCreate()
-        spark.sparkContext.setLogLevel("WARN")
+        val spark = Main.session("graft-task-watch")
         val passes = sys.env.get("GRAFT_WATCH_PASSES")
           .map(_.toInt).getOrElse(Int.MaxValue)
         val intervalMs = sys.env.get("GRAFT_WATCH_INTERVAL_MS")

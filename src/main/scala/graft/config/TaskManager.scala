@@ -127,10 +127,13 @@ object TaskManager {
       .foreach(Files.delete)
   }
 
-  /** Run the task in-process, one table unit at a time. `afterUnit`
-    * fires after each completed unit (test hook for interleaving a
-    * stop request). Any terminal-state task restarts from scratch;
-    * snapshot unit writes are idempotent overwrites.
+  /** Run the task in-process through [[TaskRunner.run]], lines to
+    * `task.log`, CDC positions in `positions.log` of the task dir.
+    * Snapshot and check tasks run one table unit at a time and honor
+    * the stop flag between units; `afterUnit` fires after each
+    * completed unit (test hook for interleaving a stop request). Any
+    * terminal-state task restarts from scratch; snapshot unit writes
+    * are idempotent overwrites.
     */
   def start(spark: SparkSession, stateDir: String, name: String,
       afterUnit: Int => Unit = _ => (),
@@ -144,244 +147,30 @@ object TaskManager {
     val ini = new String(Files.readAllBytes(dir.resolve("task.ini")),
       StandardCharsets.UTF_8)
     val task = TaskConfig.fromIni(ini, Some(dir))
-    var meta = meta0.copy(status = "running",
+    val running = meta0.copy(status = "running",
       startedMs = Some(System.currentTimeMillis()), endedMs = None,
       error = None)
-    writeMeta(dir, meta)
+    writeMeta(dir, running)
     // beacon at start: a freshly-started task must never look like a
     // crashed runner to a concurrent watch pass (the per-unit touches
     // keep it fresh from here)
     touchAlive(dir)
     log(dir, "started")
     def finish(status: String, error: Option[String]): TaskMeta = {
-      meta = meta.copy(status = status,
+      val meta = running.copy(status = status,
         endedMs = Some(System.currentTimeMillis()), error = error)
       writeMeta(dir, meta)
       log(dir, status + error.fold("")(e => s": $e"))
       meta
     }
-    def stopRequested = Files.exists(dir.resolve("stop.requested"))
     try {
-      // live mysql:// CDC: dial-pump-stream-land through LiveCdc (the
-      // url names a real server, not a fixture dir); drain-once per
-      // start, positions carried by the pump + streaming checkpoint
-      if (task.extractType == TaskConfig.CdcExtract &&
-          LiveCdc.isLiveUrl(task.sourceDir)) {
-        // beacon per pump/landing step: a live drain can outlast
-        // staleAliveMs, and a demoted-but-healthy runner would race a
-        // second pump onto the same capture dir + checkpoint.
-        // `resident=true` keeps pump + landing running until a stop
-        // request (the deployment posture); default drains once.
-        // Disk-safety gate: retention now defaults ON for resident
-        // tasks, so this only trips on an EXPLICIT opt-out — loud in
-        // the task log, because the capture dir then grows with the
-        // full replication history until the disk fills.
-        val gate = graft.infra.Precheck.checkResidentRetention(
-          task.source.resident, task.source.captureRetention)
-        if (gate.detail.nonEmpty) log(dir, s"precheck ${gate.detail}")
-        // one monitor per live run: the landers publish their
-        // face-completeness gauges here, flushed into the task log
-        // below (the same counters the drain report carries)
-        val liveMon = new graft.infra.Monitoring.Monitor(
-          "landed_face", "landed current-state face")
-        val r =
-          if (task.source.resident)
-            LiveCdc.runResident(spark, task, dir.toString,
-              stop = () => stopRequested, dialOverride = liveDial,
-              onProgress = () => touchAlive(dir),
-              dialNodeOverride = liveNodeDial,
-              monitor = Some(liveMon))
-          else LiveCdc.run(spark, task, dir.toString, liveDial,
-            onProgress = () => touchAlive(dir),
-            dialNodeOverride = liveNodeDial,
-            monitor = Some(liveMon))
-        log(dir, s"live_cdc segments=${r.segments} " +
-          s"events=${r.events} position=${r.position._1}:" +
-          s"${r.position._2} " +
-          r.tables.map { case (t, n) => s"$t=$n" }.mkString(" "))
-        liveMon.flushLines().foreach(l => log(dir, s"monitor $l"))
-        return finish("finished", None)
-      }
-      // CDC tasks are stream-scoped, not table-unit-scoped: one
-      // CdcTask drain per start, positions in the task dir's
-      // file-backed store (restart-safe) — same composition as Main
-      if (task.extractType == TaskConfig.CdcExtract &&
-          task.walCapture.isDefined && task.slot.isDefined) {
-        val capture = task.walCapture.get
-        // capture is a TASK path (may be s3a/hdfs) — Hadoop FS read
-        val bytes = graft.infra.Fs.readAllBytes(capture)
-        // [resumer] resume_type=from_log overrides the position-store
-        // location; from_db/from_target name the recorder's metadata
-        // table (table_full_name) — the reference's ResumerConfig
-        val posPath = task.positionStore.getOrElse(task.resumer match {
-          case TaskConfig.ResumeFromLog(logDir, _) if logDir.nonEmpty =>
-            java.nio.file.Paths.get(logDir)
-              .resolve(s"$name.positions.log").toString
-          case _ => dir.resolve("positions.log").toString
-        })
-        val store = new graft.sources.DbResumer.FileStore(posPath)
-        val (rSchema, rTable) = task.resumer match {
-          case r: TaskConfig.ResumeFromDb
-              if r.tableFullName.contains(".") =>
-            val Array(s, t) = r.tableFullName.split("\\.", 2)
-            (s, t)
-          case _ => (graft.sources.DbResumer.DefaultSchema,
-            graft.sources.DbResumer.DefaultTable)
-        }
-        val rec = new graft.sources.DbResumer.Recorder(name, store,
-          graft.sources.DbResumer.MySqlDialect, rSchema, rTable)
-        rec.init(isInit = false)
-        val resumer = new graft.sources.DbResumer.Dual(
-          new graft.sources.SnapshotResumer(s"$posPath.d"), rec,
-          () => new graft.sources.DbResumer.Recovery(name, store))
-        val uri = java.net.URI.create(task.sinkDir)
-        val report = graft.streaming.CdcTask.run(spark, task,
-          graft.streaming.CdcTask.PgAnswers(
-            graft.sources.PgSlotLifecycle.SlotStatus(exists = false),
-            pubExists = false, walStream = bytes),
-          (db, tb, batchId, op) =>
-            new graft.sinks.StreamLoadHttp.HttpPayloadSink(
-              graft.sinks.StreamLoadHttp.Config(uri.getHost,
-                uri.getPort, db, tb, task.sinkUser,
-                task.sinkPassword,
-                hardDelete = task.sink.hardDelete), batchId, op),
-          resumer,
-          limiter = task.maxRps.map(r =>
-            new graft.infra.RateLimiter(r)),
-          byteLimiter = task.sink.maxMbps
-            .orElse(task.source.maxMbps)
-            .map(m => new graft.infra.RateLimiter(
-              m * 1024L * 1024L)))
-        log(dir, s"cdc start_lsn=${report.startLsn} " +
-          s"shipped=${report.rowsShipped} " +
-          s"skipped=${report.eventsSkipped} end=${report.endLsn}")
-        return finish("finished", None)
-      }
-      // corpus-family prechecks (the dt-precheck gate applied to the
-      // curation extension): fail fast before any cluster work
-      val corpusKinds = Set[TaskConfig.ExtractType](
-        TaskConfig.CurationExtract, TaskConfig.CurationStreamExtract,
-        TaskConfig.LoaderExtract)
-      if (corpusKinds(task.extractType)) {
-        val isStream =
-          task.extractType == TaskConfig.CurationStreamExtract
-        val gates = graft.infra.Precheck.checkCorpusContract(spark,
-          task.sourceDir, needTs = isStream,
-          allowEmpty = isStream) ++
-          task.benchmarkDir.toSeq.flatMap(bd =>
-            graft.infra.Precheck.checkCorpusContract(spark, bd))
-        val bad = gates.filterNot(_.ok)
-        if (bad.nonEmpty) {
-          val detail = bad.map(g => s"${g.item}: ${g.detail}")
-            .mkString("; ")
-          log(dir, s"precheck failed: $detail")
-          return finish("error", Some(detail))
-        }
-      }
-      // curation tasks are corpus-scoped, not table-unit-scoped
-      if (task.extractType == TaskConfig.CurationExtract) {
-        val s = TaskRunner.runCuration(spark, task)
-        log(dir, s"curation docs=${s.nDocs} kept=${s.nKept} " +
-          s.reasons.toSeq.sorted.map { case (k, v) => s"$k=$v" }
-            .mkString(" "))
-        return finish("finished", None)
-      }
-      // loader layout is corpus-scoped too
-      if (task.extractType == TaskConfig.LoaderExtract) {
-        val s = TaskRunner.runLoader(spark, task)
-        log(dir, s"loader docs=${s.nDocs} shards=${s.nShards} " +
-          s"windows=${s.nWindows} tokens=${s.totalTokens}")
-        return finish("finished", None)
-      }
-      // WARC ingestion is corpus-scoped: crawl files → documents
-      if (task.extractType == TaskConfig.WarcExtract) {
-        val s = TaskRunner.runWarc(spark, task)
-        log(dir, s"warc docs=${s.nDocs} " +
-          s.records.toSeq.sorted.map { case (k, v) => s"$k=$v" }
-            .mkString(" "))
-        return finish("finished", None)
-      }
-      if (task.extractType == TaskConfig.JsonlExtract) {
-        val s = TaskRunner.runJsonl(spark, task)
-        log(dir, s"jsonl docs=${s.nDocs} bad_lines=${s.nBadLines} " +
-          s"with_url=${s.withUrl}")
-        return finish("finished", None)
-      }
-      // streaming curation: drain what has arrived; checkpoints under
-      // the sink dir make the next start resume after this one
-      if (task.extractType == TaskConfig.CurationStreamExtract) {
-        // [extractor] benchmark_dir: gate the stream against the
-        // held-out set's n-gram Bloom (built once here, batch-side)
-        val bloom = task.benchmarkDir.map(bd =>
-          graft.operators.CurationOps.benchmarkBloomFromDir(spark, bd))
-        val r = graft.streaming.StreamingCuration.drain(spark,
-          task.sourceDir, task.sinkDir, benchmarkBloom = bloom)
-        log(dir, s"curation_stream in=${r.docsIn} " +
-          s"quality_dropped=${r.qualityDropped} " +
-          s"contam_dropped=${r.contamDropped} " +
-          s"exact_dropped=${r.exactDropped} " +
-          s"neardup_flagged=${r.nearDupFlagged} kept=${r.kept}")
-        return finish("finished", None)
-      }
-      // the remaining reference extract types are single-shot runs
-      // through their TaskRunner drivers (not table-unit loops)
-      task.extractType match {
-        case TaskConfig.CheckLogExtract =>
-          TaskRunner.runCheckLogReplay(spark, task).foreach {
-            case (tb, n) => log(dir, s"check_log $tb revise=$n")
-          }
-          return finish("finished", None)
-        case TaskConfig.StructExtract =>
-          TaskRunner.runStruct(spark, task).foreach { case (tb, st) =>
-            log(dir, s"struct $tb statements=${st.size}")
-          }
-          return finish("finished", None)
-        case TaskConfig.SnapshotFileExtract =>
-          val r = TaskRunner.runSnapshotFile(spark, task)
-          log(dir, s"snapshot_file ${r.dstTable} rows=${r.rows}")
-          return finish("finished", None)
-        case TaskConfig.ScanExtract =>
-          val n = TaskRunner.runScan(spark, task).count()
-          log(dir, s"scan ${task.statisticType} report_rows=$n")
-          return finish("finished", None)
-        case TaskConfig.ReshardExtract =>
-          val n = TaskRunner.runReshard(spark, task).count()
-          log(dir, s"reshard planned_moves=$n")
-          return finish("finished", None)
-        case TaskConfig.FoxlakeS3Extract =>
-          TaskRunner.runFoxlakeS3(spark, task).foreach { r =>
-            log(dir, s"foxlake_s3 ${r.schema}.${r.tb} -> " +
-              s"${r.dstTable} rows=${r.rows}")
-          }
-          return finish("finished", None)
-        case _ => () // table-unit-scoped types fall through
-      }
-      val units = TaskRunner.units(task)
-      var i = 0
-      var stopped = false
-      while (i < units.length && !stopped) {
-        val (schema, tb) = units(i)
-        task.extractType match {
-          case TaskConfig.SnapshotExtract =>
-            val r = TaskRunner.snapshotTable(spark, task, schema, tb)
-            log(dir, s"snapshot $schema.$tb -> ${r.dstTable} rows=${r.rows}")
-          case TaskConfig.CheckExtract =>
-            TaskRunner.checkTable(spark, task, schema, tb) match {
-              case Some((t, counts)) =>
-                log(dir, s"check $t " + counts.toSeq.sortBy(_._1)
-                  .map { case (k, v) => s"$k=$v" }.mkString(" "))
-              case None => log(dir, s"check $schema.$tb skipped (no keys)")
-            }
-          case other =>
-            log(dir, s"$other unit $schema.$tb — provide the stream " +
-              "inputs (wal_capture/slot) to drain from the lifecycle")
-        }
-        afterUnit(i)
-        i += 1
-        if (i < units.length && stopRequested) stopped = true
-      }
-      if (stopped) finish("stopped", None)
-      else finish("finished", None)
+      val out = TaskRunner.run(spark, task, TaskRunner.Caller(name,
+        dir.toString, _ => dir.resolve("positions.log").toString,
+        log(dir, _),
+        stop = () => Files.exists(dir.resolve("stop.requested")),
+        afterUnit = afterUnit, alive = () => touchAlive(dir),
+        liveDial = liveDial, liveNodeDial = liveNodeDial))
+      finish(out.status, out.detail)
     } catch {
       case e: Exception => finish("failed", Some(e.toString))
     }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.infra.{CheckLogs, Precheck}
+import graft.infra.{CheckLogs, Monitoring, Precheck}
 import graft.operators.{Checker, Compaction}
 
 /** Config → running task — the reference's TaskRunner
@@ -27,14 +27,14 @@ object TaskRunner {
   def units(task: TaskConfig.Task): Seq[(String, String)] =
     task.filter.expand(catalog(task.sourceDir))
 
-  /** One snapshot unit: read a table, apply where_conditions and
-    * ignore_cols (the filter's `json:` configs — both reach the scan:
-    * the WHERE becomes a pushed filter, the drop prunes the parquet
-    * read schema), then the column map, then write to the routed
-    * destination.
+  /** One unit's source frame as the snapshot ships it: the table with
+    * where_conditions and ignore_cols applied (the filter's `json:`
+    * configs — both reach the scan: the WHERE becomes a pushed filter,
+    * the drop prunes the parquet read schema), then the `[processor]`
+    * Lua, then the column map; with its routed destination.
     */
-  def snapshotTable(spark: SparkSession, task: TaskConfig.Task,
-      schema: String, tb: String): TableResult = {
+  private def prepared(spark: SparkSession, task: TaskConfig.Task,
+      schema: String, tb: String): (DataFrame, (String, String)) = {
     val loaded = Tables.load(spark, task.sourceDir, tb)
     val conditioned = task.whereByTable.get((schema, tb))
       .map(c => loaded.filter(expr(c))).getOrElse(loaded)
@@ -47,8 +47,16 @@ object TaskRunner {
       case Some(f) => graft.transform.LuaScript.snapshotTransform(
         graft.infra.Fs.readString(f), schema, tb)(dropped)
     }
-    val routed = task.router.renameColumns(schema, tb, df)
-    val (toSchema, toTb) = task.router.routeTable(schema, tb)
+    (task.router.renameColumns(schema, tb, df),
+      task.router.routeTable(schema, tb))
+  }
+
+  /** One snapshot unit: the [[prepared]] frame written to the routed
+    * destination under the sink dir.
+    */
+  def snapshotTable(spark: SparkSession, task: TaskConfig.Task,
+      schema: String, tb: String): TableResult = {
+    val (routed, (toSchema, toTb)) = prepared(spark, task, schema, tb)
     val out = s"${task.sinkDir}/$toSchema.$toTb"
     // [extractor] partition_cols: the snapshot splits on the
     // configured column (config.md:20) — ranges of it become the
@@ -64,6 +72,28 @@ object TaskRunner {
     // `routed` would re-run the full source scan per table
     TableResult(schema, tb, spark.read.parquet(out).count(),
       s"$toSchema.$toTb")
+  }
+
+  /** One snapshot unit shipped to a stream-load warehouse instead —
+    * the snapshot stage of a single-config snapshot_and_cdc task, whose
+    * `[sinker] url` is the warehouse the CDC stage loads into. Rows go
+    * as upserts: sign 0 and version 0 unless `hard_delete`. The labels
+    * carry batch -1, so a retried copy dedups at the warehouse and
+    * never collides with a CDC batch's.
+    */
+  def shipSnapshotTable(spark: SparkSession, task: TaskConfig.Task,
+      schema: String, tb: String,
+      sinkFor: graft.streaming.CdcTask.SinkFactory): TableResult = {
+    import graft.sinks.StreamLoadSink
+    val (routed, (toSchema, toTb)) = prepared(spark, task, schema, tb)
+    val rows =
+      if (task.sink.hardDelete) routed
+      else routed.withColumn(StreamLoadSink.IsDeletedCol, lit(0))
+        .withColumn(StreamLoadSink.VersionCol, lit(0L))
+    StreamLoadSink.ship(rows, () => sinkFor(toSchema, toTb, -1L, ""),
+      task.batchSize, task.sink.batchMemoryMb
+        .map(_.toLong * 1024 * 1024).getOrElse(Long.MaxValue))
+    TableResult(schema, tb, routed.count(), s"$toSchema.$toTb")
   }
 
   /** Snapshot task: every admitted table through [[snapshotTable]]. */
@@ -85,20 +115,9 @@ object TaskRunner {
     val sub = new graft.infra.Subscription(s"${task.sinkDir}/spool")
     var offset = sub.offsets().lastOption.map(_ + 1).getOrElse(0L)
     val results = units(task).map { case (schema, tb) =>
-      val loaded = Tables.load(spark, task.sourceDir, tb)
-      val conditioned = task.whereByTable.get((schema, tb))
-        .map(c => loaded.filter(expr(c))).getOrElse(loaded)
-      val dropped = task.ignoreColsByTable.get((schema, tb))
-        .map(cols => conditioned.drop(cols: _*)).getOrElse(conditioned)
       // same [processor] position as snapshotTable: the staged spool
       // serves PROCESSED rows, like the reference's pipeline swap
-      val df = task.luaCodeFile match {
-        case None => dropped
-        case Some(f) => graft.transform.LuaScript.snapshotTransform(
-          graft.infra.Fs.readString(f), schema, tb)(dropped)
-      }
-      val routed = task.router.renameColumns(schema, tb, df)
-      val (toSchema, toTb) = task.router.routeTable(schema, tb)
+      val (routed, (toSchema, toTb)) = prepared(spark, task, schema, tb)
       sub.stage(routed.withColumn("dst_table",
         lit(s"$toSchema.$toTb")), offset)
       val rows = spark.read
@@ -640,5 +659,428 @@ object TaskRunner {
           spark.read.parquet(out).count(), s"$toSchema.$toTb"))
       }
     }
+  }
+
+  // ------------------------------------------------------------------
+  // the one task dispatcher: `graft.Main` and `TaskManager.start` both
+  // run every extract type through [[run]] — the reference's
+  // TaskRunner::start_task, which dt-main and dt-cli share
+
+  /** What differs between the callers of [[run]]: the recorder id of
+    * the CDC position store, the directory the live lanes keep their
+    * capture and checkpoint in, the position store's default path for
+    * a capture file, where report lines go, and the lifecycle hooks —
+    * the cooperative stop flag and per-unit hook of the table-unit
+    * loop, the liveness beacon, and the live lanes' dial seams.
+    */
+  final case class Caller(id: String, stateDir: String,
+      positionsFor: String => String, log: String => Unit,
+      stop: () => Boolean = () => false,
+      afterUnit: Int => Unit = _ => (),
+      alive: () => Unit = () => (),
+      liveDial: Option[() => graft.transport.Wire] = None,
+      liveNodeDial: Option[String => graft.transport.Wire] = None)
+
+  /** How a run ended: `finished`, `stopped` (the stop flag, honored
+    * between table units) or `error` (a precheck gate refused the task
+    * before any work; `detail` says why). A failure while running
+    * throws.
+    */
+  final case class Outcome(status: String, detail: Option[String] = None)
+
+  /** The extract types that read `[extractor] url` as the parquet
+    * table catalog — the ones the catalog precheck battery applies to.
+    */
+  private val catalogKinds = Set[TaskConfig.ExtractType](
+    TaskConfig.SnapshotExtract, TaskConfig.CheckExtract,
+    TaskConfig.SnapshotAndCdcExtract)
+
+  /** The corpus-family kinds, gated by the corpus contract instead. */
+  private val corpusKinds = Set[TaskConfig.ExtractType](
+    TaskConfig.CurationExtract, TaskConfig.CurationStreamExtract,
+    TaskConfig.LoaderExtract)
+
+  /** Run the catalog precheck battery when the task reads the catalog,
+    * one `precheck` line per check; empty for every other kind.
+    */
+  def precheckLogged(spark: SparkSession, task: TaskConfig.Task,
+      log: String => Unit): Seq[Precheck.CheckResult] = {
+    val checks =
+      if (catalogKinds(task.extractType)) precheck(spark, task) else Nil
+    checks.foreach(c => log(
+      s"precheck ${c.item} ${if (c.ok) "OK" else "FAIL"} ${c.detail}"))
+    checks
+  }
+
+  /** Run a task to its end. `cdcTask` is the second config of the
+    * two-file snapshot-then-CDC form (`Main snapshot.ini --then
+    * cdc.ini`); the one-file form is `extract_type=snapshot_and_cdc`.
+    * Monitors count every kind, and a `[metrics]` section serves them
+    * on `/metrics` for the length of the run.
+    */
+  def run(spark: SparkSession, task: TaskConfig.Task, caller: Caller,
+      cdcTask: Option[TaskConfig.Task] = None): Outcome = {
+    val monitors = Monitoring.PipelineMonitors(caller.id,
+      windowSecs = task.counterTimeWindowSecs.toLong,
+      maxSubCount = task.counterMaxSubCount)
+    val kind = task.extractType match {
+      case TaskConfig.SnapshotExtract | TaskConfig.CurationExtract |
+          TaskConfig.LoaderExtract | TaskConfig.WarcExtract |
+          TaskConfig.JsonlExtract => "snapshot"
+      case TaskConfig.CdcExtract | TaskConfig.CurationStreamExtract =>
+        "cdc"
+      case _ => "check"
+    }
+    val registry = task.metrics.map(mc =>
+      new Monitoring.PrometheusRegistry(mc.labels)
+        .registerStandard(Some(kind)))
+    val server = for (mc <- task.metrics; reg <- registry) yield {
+      val s = new Monitoring.MetricsServer(() => reg.exposition,
+        mc.httpHost, mc.httpPort)
+      caller.log(s"metrics serving /metrics on " +
+        s"${mc.httpHost}:${s.boundPort}")
+      s
+    }
+    def publish(extra: Map[String, Long]): Unit =
+      registry.foreach(_.setAll(
+        Monitoring.TaskMetrics.calc(monitors.roles) ++ extra))
+    try {
+      val out = dispatch(spark, task, cdcTask, caller, monitors, publish)
+      publish(Map.empty)
+      monitors.flushLines().foreach(l => caller.log(s"monitor $l"))
+      out
+    } finally server.foreach(_.stop())
+  }
+
+  private def dispatch(spark: SparkSession, task: TaskConfig.Task,
+      cdcTask: Option[TaskConfig.Task], caller: Caller,
+      monitors: Monitoring.PipelineMonitors,
+      publish: Map[String, Long] => Unit): Outcome = {
+    import TaskConfig._
+    val log = caller.log
+    def extracted(n: Long): Unit =
+      monitors.extractor.addBatchCounter(Monitoring.ExtractedRecords, n,
+        1L): Unit
+    def sinked(n: Long): Unit =
+      monitors.sinker.addBatchCounter(Monitoring.SinkedRecordTotal, n,
+        1L): Unit
+    val checks = precheckLogged(spark, task, log)
+    require(checks.filter(_.item == "source_readable").forall(_.ok),
+      "precheck failed: source not readable")
+    if (corpusKinds(task.extractType)) {
+      val isStream = task.extractType == CurationStreamExtract
+      val bad = (Precheck.checkCorpusContract(spark, task.sourceDir,
+        needTs = isStream, allowEmpty = isStream) ++
+        task.benchmarkDir.toSeq.flatMap(bd =>
+          Precheck.checkCorpusContract(spark, bd))).filterNot(_.ok)
+      if (bad.nonEmpty) {
+        val detail = bad.map(g => s"${g.item}: ${g.detail}")
+          .mkString("; ")
+        log(s"precheck failed: $detail")
+        return Outcome("error", Some(detail))
+      }
+    }
+    if (cdcTask.nonEmpty) {
+      require(task.extractType == SnapshotExtract,
+        "--then follows a snapshot task")
+      return fullSync(spark, task, cdcTask.get, "--then config", caller,
+        monitors)
+    }
+    task.extractType match {
+      case CdcExtract if LiveCdc.isLiveUrl(task.sourceDir) =>
+        liveCdc(spark, task, caller)
+      case CdcExtract if task.sinkType == "sql" =>
+        val n = runSqlSink(spark, task)
+        log(s"sql ${task.sinkDir}/sql.log statements=$n" +
+          (if (task.sink.sqlReverse) " (reversed)" else ""))
+        Outcome("finished")
+      case CdcExtract =>
+        require(task.walCapture.isDefined && task.slot.isDefined,
+          "cdc needs [extractor] wal_capture= and slot_name=, or a " +
+            "live source url")
+        val r = graft.streaming.CdcTask.run(spark, task,
+          capturedStream(task), streamLoadSinks(task),
+          positions(task, caller), monitors = monitors,
+          limiter = task.maxRps.map(new graft.infra.RateLimiter(_)),
+          byteLimiter = task.sink.maxMbps.orElse(task.source.maxMbps)
+            .map(m => new graft.infra.RateLimiter(m * 1024L * 1024L)))
+        log(cdcLine(r))
+        Outcome("finished")
+      case SnapshotAndCdcExtract =>
+        fullSync(spark, task, task, "snapshot_and_cdc", caller,
+          monitors)
+      case SnapshotExtract if task.pipelineType == "http_server" &&
+          !task.checker.exists(_.enable) =>
+        serveSnapshot(spark, task, log, monitors, publish)
+      case SnapshotExtract | CheckExtract =>
+        unitLoop(spark, task, caller, monitors, publish)
+      case CurationExtract =>
+        val s = runCuration(spark, task)
+        log(s"curation docs=${s.nDocs} kept=${s.nKept} " +
+          s.reasons.toSeq.sorted.map { case (k, v) => s"$k=$v" }
+            .mkString(" "))
+        extracted(s.nDocs); sinked(s.nKept)
+        Outcome("finished")
+      case LoaderExtract =>
+        val s = runLoader(spark, task)
+        log(s"loader docs=${s.nDocs} shards=${s.nShards} " +
+          s"windows=${s.nWindows} tokens=${s.totalTokens}")
+        extracted(s.nDocs); sinked(s.nDocs)
+        Outcome("finished")
+      case WarcExtract =>
+        val s = runWarc(spark, task)
+        log(s"warc docs=${s.nDocs} " +
+          s.records.toSeq.sorted.map { case (k, v) => s"$k=$v" }
+            .mkString(" "))
+        extracted(s.records.values.sum); sinked(s.nDocs)
+        Outcome("finished")
+      case JsonlExtract =>
+        val s = runJsonl(spark, task)
+        log(s"jsonl docs=${s.nDocs} bad_lines=${s.nBadLines} " +
+          s"with_url=${s.withUrl}")
+        extracted(s.nDocs + s.nBadLines); sinked(s.nDocs)
+        monitors.pipeline.addBatchCounter(Monitoring.FilteredRecords,
+          s.nBadLines, 1L)
+        Outcome("finished")
+      case CurationStreamExtract =>
+        // [extractor] benchmark_dir: gate the stream against the
+        // held-out set's n-gram Bloom (built once here, batch-side);
+        // checkpoints under the sink dir make the next start resume
+        val bloom = task.benchmarkDir.map(bd =>
+          graft.operators.CurationOps.benchmarkBloomFromDir(spark, bd))
+        val r = graft.streaming.StreamingCuration.drain(spark,
+          task.sourceDir, task.sinkDir, benchmarkBloom = bloom)
+        log(s"curation_stream in=${r.docsIn} " +
+          s"quality_dropped=${r.qualityDropped} " +
+          s"contam_dropped=${r.contamDropped} " +
+          s"exact_dropped=${r.exactDropped} " +
+          s"neardup_flagged=${r.nearDupFlagged} kept=${r.kept}")
+        extracted(r.docsIn); sinked(r.kept)
+        monitors.pipeline.addBatchCounter(Monitoring.FilteredRecords,
+          r.qualityDropped + r.contamDropped + r.exactDropped +
+            r.nearDupFlagged, 1L)
+        Outcome("finished")
+      case CheckLogExtract =>
+        runCheckLogReplay(spark, task).foreach { case (tb, n) =>
+          log(s"check_log $tb revise=$n")
+          monitors.checker.addBatchCounter(Monitoring.RecordCount, n, 1L)
+        }
+        Outcome("finished")
+      case StructExtract =>
+        val results = runStruct(spark, task)
+        results.foreach { case (tb, st) =>
+          log(s"struct $tb statements=${st.size}")
+        }
+        extracted(results.size.toLong)
+        Outcome("finished")
+      case SnapshotFileExtract =>
+        val r = runSnapshotFile(spark, task)
+        log(s"snapshot_file ${r.dstTable} rows=${r.rows}")
+        extracted(r.rows); sinked(r.rows)
+        Outcome("finished")
+      case ScanExtract =>
+        val n = runScan(spark, task).count()
+        log(s"scan ${task.statisticType} report_rows=$n")
+        extracted(n)
+        Outcome("finished")
+      case ReshardExtract =>
+        log(s"reshard planned_moves=${runReshard(spark, task).count()}")
+        Outcome("finished")
+      case FoxlakeS3Extract =>
+        runFoxlakeS3(spark, task).foreach { r =>
+          log(s"foxlake_s3 ${r.schema}.${r.tb} -> ${r.dstTable} " +
+            s"rows=${r.rows}")
+          extracted(r.rows); sinked(r.rows)
+        }
+        Outcome("finished")
+    }
+  }
+
+  /** Snapshot and check tasks, one table unit at a time; the stop flag
+    * is honored between units. The reference's check-task shape —
+    * `extract_type=snapshot` with an enabled `[checker]` — checks, it
+    * does not copy (dt-tests check/basic_test task_config.ini).
+    */
+  private def unitLoop(spark: SparkSession, task: TaskConfig.Task,
+      caller: Caller, monitors: Monitoring.PipelineMonitors,
+      publish: Map[String, Long] => Unit): Outcome = {
+    val check = task.extractType == TaskConfig.CheckExtract ||
+      task.checker.exists(_.enable)
+    val all = units(task)
+    var i = 0
+    while (i < all.length) {
+      val (schema, tb) = all(i)
+      if (check) checkTable(spark, task, schema, tb) match {
+        case Some((t, counts)) =>
+          caller.log(s"check $t " + counts.toSeq.sorted
+            .map { case (k, v) => s"$k=$v" }.mkString(" "))
+          monitors.checker
+            .addBatchCounter(Monitoring.RecordCount, counts.values.sum,
+              1L)
+            .addBatchCounter(Monitoring.CheckerMissCount,
+              counts.getOrElse("MISS", 0L), 1L)
+            .addBatchCounter(Monitoring.CheckerDiffCount,
+              counts.getOrElse("DIFF", 0L), 1L): Unit
+        case None => caller.log(s"check $schema.$tb skipped (no keys)")
+      }
+      else {
+        val r = snapshotTable(spark, task, schema, tb)
+        caller.log(s"snapshot $schema.$tb -> ${r.dstTable} rows=${r.rows}")
+        monitors.extractor
+          .addBatchCounter(Monitoring.ExtractedRecords, r.rows, 1L)
+          .addBatchCounter(Monitoring.RecordCount, r.rows, 1L)
+        monitors.sinker
+          .addBatchCounter(Monitoring.RecordCount, r.rows, 1L)
+          .addBatchCounter(Monitoring.SinkedRecordTotal, r.rows, 1L): Unit
+      }
+      publish(Monitoring.TaskMetrics.progress(all.size.toLong, i + 1L)
+        .map("progress" -> _).toMap)
+      caller.afterUnit(i)
+      i += 1
+      if (i < all.length && caller.stop()) return Outcome("stopped")
+    }
+    Outcome("finished")
+  }
+
+  /** `[pipeline] pipeline_type=http_server`: stage every admitted
+    * table into the spool and serve it over the subscription endpoints
+    * until the consumer acks everything or the serve timeout passes;
+    * no sink table is written.
+    */
+  private def serveSnapshot(spark: SparkSession, task: TaskConfig.Task,
+      log: String => Unit, monitors: Monitoring.PipelineMonitors,
+      publish: Map[String, Long] => Unit): Outcome = {
+    val (sub, results) = stageSnapshot(spark, task)
+    results.foreach { r =>
+      log(s"snapshot ${r.schema}.${r.tb} staged -> ${r.dstTable} " +
+        s"rows=${r.rows}")
+      monitors.extractor
+        .addBatchCounter(Monitoring.ExtractedRecords, r.rows, 1L)
+    }
+    val srv = new graft.infra.SubscriptionServer(spark, sub,
+      task.httpHost, task.httpPort)
+    try {
+      log(s"pipeline serving subscription on " +
+        s"${task.httpHost}:${srv.boundPort}")
+      publish(Map.empty)
+      val lastOffset = sub.offsets().lastOption.getOrElse(-1L)
+      val deadline = System.nanoTime() +
+        task.serveTimeoutSecs * 1000000000L
+      while (sub.acked() < lastOffset && System.nanoTime() < deadline)
+        Thread.sleep(100L)
+      log(if (sub.acked() >= lastOffset)
+        s"pipeline all ${results.size} batches acked"
+      else s"pipeline serve timeout, acked=${sub.acked()} of " +
+        s"$lastOffset — spool retained")
+    } finally srv.stop()
+    Outcome("finished")
+  }
+
+  /** Live `mysql://`/`pg://`/`redis://`/`mongodb://` CDC: dial, pump,
+    * stream and land through [[LiveCdc]]; drain-once per start, or
+    * until the stop flag with `resident=true`. The beacon is touched
+    * per pump/landing step, because a live drain can outlast a
+    * watcher's staleness limit.
+    */
+  private def liveCdc(spark: SparkSession, task: TaskConfig.Task,
+      caller: Caller): Outcome = {
+    // retention defaults on for resident tasks, so this only trips on
+    // an explicit opt-out: the capture dir then grows with the full
+    // replication history until the disk fills
+    val gate = Precheck.checkResidentRetention(task.source.resident,
+      task.source.captureRetention)
+    if (gate.detail.nonEmpty) caller.log(s"precheck ${gate.detail}")
+    // the landers publish their face-completeness gauges here
+    val liveMon = new Monitoring.Monitor("landed_face",
+      "landed current-state face")
+    val r =
+      if (task.source.resident)
+        LiveCdc.runResident(spark, task, caller.stateDir,
+          stop = caller.stop, dialOverride = caller.liveDial,
+          onProgress = caller.alive,
+          dialNodeOverride = caller.liveNodeDial, monitor = Some(liveMon))
+      else LiveCdc.run(spark, task, caller.stateDir, caller.liveDial,
+        onProgress = caller.alive,
+        dialNodeOverride = caller.liveNodeDial, monitor = Some(liveMon))
+    caller.log(s"live_cdc segments=${r.segments} events=${r.events} " +
+      s"position=${r.position._1}:${r.position._2} " +
+      r.tables.map { case (t, n) => s"$t=$n" }.mkString(" "))
+    liveMon.flushLines().foreach(l => caller.log(s"monitor $l"))
+    Outcome("finished")
+  }
+
+  /** Serial snapshot-then-CDC through [[graft.streaming.FullSyncTask]]:
+    * one position store for both stages, the slot fence before the
+    * copy, CDC from the consistent point.
+    */
+  private def fullSync(spark: SparkSession, snap: TaskConfig.Task,
+      cdc: TaskConfig.Task, what: String, caller: Caller,
+      monitors: Monitoring.PipelineMonitors): Outcome = {
+    require(cdc.walCapture.isDefined && cdc.slot.isDefined,
+      s"$what needs [extractor] wal_capture= and slot_name=")
+    val r = graft.streaming.FullSyncTask.run(spark, snap, cdc,
+      capturedStream(cdc), streamLoadSinks(cdc), positions(cdc, caller),
+      monitors)
+    r.slotPlan.statements.foreach(s => caller.log(s"slot $s"))
+    r.snapshot.foreach(t => caller.log(s"snapshot ${t.schema}.${t.tb} " +
+      s"-> ${t.dstTable} rows=${t.rows}"))
+    r.snapshotSkipped.foreach(t =>
+      caller.log(s"snapshot $t already finished, skipped"))
+    caller.log(cdcLine(r.cdc))
+    Outcome("finished")
+  }
+
+  private def cdcLine(r: graft.streaming.CdcTask.RunReport): String =
+    s"cdc start_lsn=${r.startLsn} shipped=${r.rowsShipped} " +
+      s"skipped=${r.eventsSkipped} end=${r.endLsn}"
+
+  /** The captured pgoutput stream of `[extractor] wal_capture` (a task
+    * path: read through the Hadoop FS layer), with a fresh slot.
+    */
+  private def capturedStream(task: TaskConfig.Task)
+      : graft.streaming.CdcTask.PgAnswers =
+    graft.streaming.CdcTask.PgAnswers(
+      graft.sources.PgSlotLifecycle.SlotStatus(exists = false),
+      pubExists = false,
+      walStream = graft.infra.Fs.readAllBytes(task.walCapture.get))
+
+  /** Stream-load PUTs to the `[sinker] url` warehouse. */
+  private def streamLoadSinks(task: TaskConfig.Task)
+      : graft.streaming.CdcTask.SinkFactory = {
+    val uri = java.net.URI.create(task.sinkDir)
+    (db, tb, batchId, op) =>
+      new graft.sinks.StreamLoadHttp.HttpPayloadSink(
+        graft.sinks.StreamLoadHttp.Config(uri.getHost, uri.getPort, db,
+          tb, task.sinkUser, task.sinkPassword,
+          hardDelete = task.sink.hardDelete), batchId, op)
+  }
+
+  /** The task's restart-safe position store: `position_store`, else
+    * `[resumer] resume_type=from_log` under its log_dir, else the
+    * caller's default for the capture; `from_db`/`from_target` name the
+    * recorder's metadata table with table_full_name — the reference's
+    * ResumerConfig.
+    */
+  private def positions(task: TaskConfig.Task, caller: Caller)
+      : graft.sources.DbResumer.Dual = {
+    import graft.sources.DbResumer
+    val posPath = task.positionStore.getOrElse(task.resumer match {
+      case TaskConfig.ResumeFromLog(logDir, _) if logDir.nonEmpty =>
+        s"${logDir.stripSuffix("/")}/" +
+          s"${graft.infra.Fs.fileName(caller.id)}.positions.log"
+      case _ => caller.positionsFor(task.walCapture.get)
+    })
+    val store = new DbResumer.FileStore(posPath)
+    val (schema, table) = task.resumer match {
+      case r: TaskConfig.ResumeFromDb if r.tableFullName.contains(".") =>
+        val Array(s, t) = r.tableFullName.split("\\.", 2)
+        (s, t)
+      case _ => (DbResumer.DefaultSchema, DbResumer.DefaultTable)
+    }
+    val rec = new DbResumer.Recorder(caller.id, store,
+      DbResumer.MySqlDialect, schema, table)
+    rec.init(isInit = false)
+    new DbResumer.Dual(new graft.sources.SnapshotResumer(s"$posPath.d"),
+      rec, () => new DbResumer.Recovery(caller.id, store))
   }
 }

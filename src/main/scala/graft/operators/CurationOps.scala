@@ -526,7 +526,10 @@ object CurationOps {
         .select(col("v"), bump(col("label"),
           least(col("label"), coalesce(col("nmin"), col("label"))))
             .as("label"))
-        .localCheckpoint()
+        // eager on purpose: the checkpoint job is what runs `bump`, so
+        // acc.value is only this round's count once it has finished —
+        // a lazy checkpoint would read 0 and stop after one round
+        .localCheckpoint(eager = true)
       converged = acc.value == 0L
       labels = next
       i += 1

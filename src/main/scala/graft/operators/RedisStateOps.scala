@@ -3065,6 +3065,12 @@ object RedisStateOps {
       val b = Vector.newBuilder[(String, Long, String, Op)]
       var lastP: String = null
       packed.foreach { p =>
+        // a delta row with a null rank packs to null: fail on it by
+        // key instead of dropping the op or NPE-ing in unpackOp
+        if (p == null) throw new IllegalStateException(
+          "state-face fold: null packed op for key " +
+            key.replace('\u0000', ':') + " (a delta row with a null " +
+            "rank)")
         if (p != lastP) {
           lastP = p
           val (sseg, rank, op) = unpackOp(p)

@@ -242,7 +242,8 @@ object CdcTask {
       sinkFor: SinkFactory,
       resumer: DbResumer.Dual,
       heartbeat: Option[Heartbeat.Emitter] = None,
-      monitors: Option[Monitoring.PipelineMonitors] = None,
+      monitors: Monitoring.PipelineMonitors =
+        Monitoring.PipelineMonitors("cdc-task"),
       // [pipeline] max_rps — the reference governor awaited between
       // batch applies; None/unlimited skips the gate entirely
       limiter: Option[graft.infra.RateLimiter] = None,
@@ -288,9 +289,8 @@ object CdcTask {
         PgSlotLifecycle.parseLsn(end) > startCmp
       }
     val skipped = skippedTxns.map(_._2.size.toLong).sum
-    monitors.foreach(_.extractor.addBatchCounter(
-      Monitoring.ExtractedRecords,
-      freshTxns.map(_._2.size.toLong).sum, 1L): Unit)
+    monitors.extractor.addBatchCounter(Monitoring.ExtractedRecords,
+      freshTxns.map(_._2.size.toLong).sum, 1L)
 
     // 4. row-level filter (schema/tb admission + event types); a txn
     //    filtered to nothing drops — the next batch's commit end covers
@@ -346,14 +346,12 @@ object CdcTask {
       val t0 = System.nanoTime()
       val shipped =
         shipBatch(spark, task, i.toLong, evs, relCols, relKeys, sinkFor)
-      monitors.foreach { m =>
-        m.sinker.addCounter(Monitoring.RtPerQuery,
+      monitors.sinker
+        .addCounter(Monitoring.RtPerQuery,
           (System.nanoTime() - t0) / 1000000L)
-        m.sinker
-          .addBatchCounter(Monitoring.RecordCount, evs.size.toLong, 1L)
-          .addBatchCounter(Monitoring.SinkedRecordTotal,
-            evs.size.toLong, 1L): Unit
-      }
+        .addBatchCounter(Monitoring.RecordCount, evs.size.toLong, 1L)
+        .addBatchCounter(Monitoring.SinkedRecordTotal,
+          evs.size.toLong, 1L)
       resumer.recordCdc(Position.PgCdc(lsn))
       heartbeat.foreach(_.maybeBeat(Heartbeat.Positions(
         receivedSegment = commitEnds.lastOption.getOrElse(lsn),

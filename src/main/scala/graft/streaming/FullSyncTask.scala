@@ -32,8 +32,11 @@ object FullSyncTask {
       cdc: CdcTask.RunReport)
 
   /** Run both stages. `snapshotTask`/`cdcTask` are the two INI configs
-    * of the reference tutorial; `answers` carries the slot state BEFORE
-    * this task ran plus the captured stream.
+    * of the reference tutorial (or one snapshot_and_cdc config twice);
+    * `answers` carries the slot state BEFORE this task ran plus the
+    * captured stream. A snapshot sink that is a stream-load warehouse
+    * URL gets the copied rows through `sinkFor` too; any other is a
+    * parquet directory.
     *
     * The snapshot stage records per-table finish marks into the SAME
     * dual resumer the CDC stage uses, so a restart skips finished
@@ -46,7 +49,8 @@ object FullSyncTask {
       answers: CdcTask.PgAnswers,
       sinkFor: CdcTask.SinkFactory,
       resumer: DbResumer.Dual,
-      monitors: Option[Monitoring.PipelineMonitors] = None): Report = {
+      monitors: Monitoring.PipelineMonitors =
+        Monitoring.PipelineMonitors("full-sync-task")): Report = {
     val slotCfg = cdcTask.slot.getOrElse(throw new IllegalArgumentException(
       "cdc stage needs [extractor] slot_name"))
 
@@ -60,11 +64,17 @@ object FullSyncTask {
     val units = TaskRunner.units(snapshotTask)
     val (skip, todo) =
       units.partition { case (s, t) => resumer.isFinished(s, t) }
+    val toWarehouse = snapshotTask.sinkDir.startsWith("http://") ||
+      snapshotTask.sinkDir.startsWith("https://")
     val results = todo.map { case (schema, tb) =>
-      val r = TaskRunner.snapshotTable(spark, snapshotTask, schema, tb)
+      val r =
+        if (toWarehouse)
+          TaskRunner.shipSnapshotTable(spark, snapshotTask, schema, tb,
+            sinkFor)
+        else TaskRunner.snapshotTable(spark, snapshotTask, schema, tb)
       resumer.finish(schema, tb)
-      monitors.foreach(_.extractor.addBatchCounter(
-        Monitoring.ExtractedRecords, r.rows, 1L): Unit)
+      monitors.extractor.addBatchCounter(Monitoring.ExtractedRecords,
+        r.rows, 1L)
       r
     }
 

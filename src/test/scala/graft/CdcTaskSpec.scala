@@ -193,7 +193,7 @@ class CdcTaskSpec extends SparkSuite {
             StreamLoadHttp.Config("127.0.0.1", port, db, tb,
               "root", ""), batchId, op),
         resumer = resumer, heartbeat = Some(hb),
-        monitors = Some(monitors))
+        monitors = monitors)
 
       // lifecycle: fresh server → create publication + slot, stream
       // from the consistent point with proto v2 streaming on

@@ -228,6 +228,33 @@ class RedisStateOpsSpec extends graft.SparkSuite {
       ops: Seq[String], resets: ResetPoints = noResets): String =
     foldKey(k, base, ops, resets)
 
+  test("a null packed op fails the fold with its key named, on the " +
+      "direct fold and through the merger") {
+    val k = key(0, "broken")
+    val good = packed(("psync.000001.log", 1L,
+      Op(k, "set", "string", "", "v", None)))
+    val e = intercept[IllegalStateException](fold(k, null, good :+ null))
+    assert(e.getMessage.contains("null packed op for key 0:broken"),
+      e.getMessage)
+    // a delta row with a null rank packs to null in the merger
+    val s = spark
+    import s.implicits._
+    val deltas = Seq(
+      ("psync.000001.log", Option(1L), k, 0L, "set", "string", "", "v",
+        Option.empty[Long]),
+      ("psync.000001.log", Option.empty[Long], k, 0L, "set", "string",
+        "", "w", Option.empty[Long]))
+      .toDF("sseg", "rank", "key", "db", "op", "value_type", "field",
+        "value", "expire_ms")
+    val err = intercept[Exception](
+      RedisStateOps.Merger.merge(spark, None, deltas, 0L).collect())
+    val messages = Iterator.iterate[Throwable](err)(_.getCause)
+      .takeWhile(_ != null).map(t => String.valueOf(t.getMessage))
+    assert(messages.exists(_.contains("null packed op for key 0:broken")),
+      err)
+    RedisStateOps.Merger.release()
+  }
+
   test("foldKey: set / del / hash / incr / append / list semantics") {
     val k = key(0, "k")
     def op(o: Op, rank: Long, sseg: String = "psync.000001.log") =
