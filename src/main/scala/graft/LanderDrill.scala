@@ -1,14 +1,12 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
-import graft.operators.Compaction
 import graft.sinks.LandedTable
 
 /** Scale drill for the live LANDER — the half of the resident lane
   * TailSweep doesn't price. Replays the landing loop's per-trigger
-  * work (compact the micro-batch → one delta write; every
+  * work (one compacted delta write per micro-batch; every
   * `cadence` triggers a base merge + flat publish) against a landed
   * state seeded at two sizes 10× apart, and prices the resident
   * monitor's poll at both. The O(batch)/O(state) claims in
@@ -84,7 +82,7 @@ object LanderDrill {
         spark.range(keys).selectExpr("0L as bseq", "id as seq",
           "'insert' as row_type", "cast(id as string) as key",
           "repeat('v', 24) as payload"), table, 0L)
-      LandedTable.compactTo(spark, table, 0L)
+      LandedTable.compactAll(spark, Seq(table))
       LandedTable.publishFlat(spark, table)
     }
     val (_, pollCleanMs) =
@@ -95,18 +93,12 @@ object LanderDrill {
     (1 to triggers).foreach { i =>
       val bid = i.toLong
       val (_, ms) = timed {
-        val delta = Compaction.compact(batchDf(bid, batchRows, keys),
-          Seq("key"), Seq("bseq", "seq"), col("row_type"))
-          .select(col("bseq"), col("seq"),
-            when(col(Compaction.ActionCol) === Compaction.Delete,
-              lit("delete")).otherwise(lit("insert")).as("row_type"),
-            col("key"), col("payload"))
-        LandedTable.writeDelta(delta, table, bid)
+        LandedTable.writeDelta(batchDf(bid, batchRows, keys), table, bid)
       }
       plain += ms
       if (bid % cadence == (cadence - 1)) {
         val (_, mms) = timed {
-          LandedTable.compactTo(spark, table, bid)
+          LandedTable.compactAll(spark, Seq(table), bid)
           LandedTable.publishFlat(spark, table)
         }
         merges += mms
@@ -115,12 +107,7 @@ object LanderDrill {
     // the monitor poll with half a cadence of outstanding deltas
     (1 to cadence / 2).foreach { j =>
       val bid = triggers + j.toLong
-      LandedTable.writeDelta(
-        Compaction.compact(batchDf(bid, batchRows, keys),
-          Seq("key"), Seq("bseq", "seq"), col("row_type"))
-          .select(col("bseq"), col("seq"), lit("insert")
-            .as("row_type"), col("key"), col("payload")),
-        table, bid)
+      LandedTable.writeDelta(batchDf(bid, batchRows, keys), table, bid)
     }
     val (_, pollDeltasMs) =
       timed(LandedTable.read(spark, table).count())

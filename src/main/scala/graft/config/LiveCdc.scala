@@ -449,17 +449,24 @@ object LiveCdc {
     */
   private[config] val CompactEvery = 8
 
-  /** The micro-batch writer both modes share: per-table filter,
-    * route, key-compact WITHIN the batch, and append one bounded
-    * delta to the table's LSM layout ([[graft.sinks.LandedTable]]).
-    * Deletes ride as tombstone rows until a cadence merge folds them
-    * away; merges commit by dir rename, so a crash at any point
-    * leaves the previous committed state readable. Per-trigger work
-    * is O(batch) — the previous lander re-read and rewrote the FULL
-    * landed state every 500 ms, which made a long-running stream's
-    * cumulative write volume quadratic in table size.
-    */
-  /** `touched` accumulates routed tables adopted since the LAST
+  /** The micro-batch writer both modes share. One plan per batch:
+    * filter (event kinds, table patterns) and route IN-PLAN — the
+    * routed `db.tb` destination comes from Catalyst map lookups, with
+    * no driver-side table list — then compact WITHIN the batch on the
+    * routed (destination, key), so two source tables mapped to one
+    * destination resolve their colliding keys by `seq` right here,
+    * and ONE write partitioned by destination into a staging dir.
+    * Each destination's partition dir is then RENAMED into its
+    * table's delta slot ([[graft.sinks.LandedTable]]), destinations
+    * listed from the staging dir (metadata, not a collect). Every
+    * delta therefore holds at most one row per non-null key — the
+    * invariant that lets `LandedTable.compactAll` merge a single
+    * outstanding delta without compacting it again. Deletes ride as
+    * tombstone rows until a merge folds them away; merges commit by
+    * dir rename, so a crash at any point leaves the previous
+    * committed state readable. Per-trigger work is O(batch).
+    *
+    * `touched` accumulates destinations adopted since the LAST
     * cadence merge (shared across batches by the caller): merging
     * only the tables in the cadence batch itself left a table quiet
     * on every 8th batch with all its rows in underscore-hidden delta
@@ -497,82 +504,42 @@ object LiveCdc {
           .parquet(markerDir)
       }
     }
-    // single-pass landing (round-12 verdict Wrong #2): the old shape
-    // ran one filter+write job per (table × trigger) — T scans of the
-    // micro-batch and T job-scheduling round-trips every 500 ms. Now:
-    // ONE compaction keyed by (schema, tb, key), ONE write partitioned
-    // by source table into a staging dir, then a pure-metadata RENAME
-    // of each partition dir into its (routed) table's delta slot. The
-    // table-list collect is bounded — a catalog, not data.
-    val tables = batch.select("schema", "tb").distinct()
-      .collect().map(r => (r.getString(0), r.getString(1)))
-    val allowed = tables.filter { case (db, tb) =>
-      task.filter.allowTable(db, tb)
-    }
-    if (allowed.nonEmpty) {
-      import graft.operators.Compaction
-      val tableKey = concat_ws("\u0000", col("schema"), col("tb"))
-      val admitted = batch
-        .filter(col("row_type").isin(task.filter.doEvents.toSeq: _*))
-        .filter(tableKey.isin(allowed.map { case (db, tb) =>
-          s"$db\u0000$tb" }: _*))
-      val delta = Compaction.compact(
-        admitted.select(col("schema"), col("tb"), col("seq"),
-          col("row_type"), col("key"), col("payload")),
-        Seq("schema", "tb", "key"), Seq("seq"), col("row_type"))
-        .select(col("schema"), col("tb"),
-          lit(batchId).as("bseq"), col("seq"),
-          when(col(Compaction.ActionCol) === Compaction.Delete,
-            lit("delete")).otherwise(lit("insert")).as("row_type"),
-          col("key"), col("payload"))
-      val staging = s"$outDir/_landing-$batchId"
-      delta.write.mode(SaveMode.Overwrite)
-        .partitionBy("schema", "tb").parquet(staging)
-      import org.apache.spark.sql.catalyst.catalog
-        .ExternalCatalogUtils.escapePathName
-      // routed destination -> number of source tables folded so far:
-      // two sources mapped to one destination must MERGE their batch
-      // partitions (a second adopt would replace the first's rows)
-      val adopted = scala.collection.mutable.Map[String, Int]()
-      allowed.foreach { case (db, tb) =>
-        val src = s"$staging/schema=${escapePathName(db)}" +
-          s"/tb=${escapePathName(tb)}"
-        // a table whose batch rows were all event-filtered writes no
-        // partition dir — nothing to adopt
-        if (graft.infra.Fs.exists(src)) {
-          val (toDb, toTb) = task.router.routeTable(db, tb)
-          val out = s"$outDir/$toDb.$toTb"
-          adopted.get(out) match {
-            case None =>
-              graft.sinks.LandedTable.adoptDelta(src, out, batchId)
-              adopted(out) = 1
-            case Some(k) =>
-              graft.sinks.LandedTable.foldDelta(src, out, batchId, k)
-              adopted(out) = k + 1
-          }
-        }
+    import graft.operators.Compaction
+    val admitted = batch
+      .filter(col("row_type").isin(task.filter.doEvents.toSeq: _*))
+      .filter(task.filter.tableAllowed(col("schema"), col("tb")))
+      .select(task.router.routedName(col("schema"), col("tb"))
+          .as("dest"),
+        col("seq"), col("row_type"), col("key"), col("payload"))
+    val delta = Compaction.compact(admitted, Seq("dest", "key"),
+        Seq("seq"), col("row_type"))
+      .select(col("dest"), lit(batchId).as("bseq"), col("seq"),
+        when(col(Compaction.ActionCol) === Compaction.Delete,
+          lit("delete")).otherwise(lit("insert")).as("row_type"),
+        col("key"), col("payload"))
+    val staging = s"$outDir/_landing-$batchId"
+    delta.write.mode(SaveMode.Overwrite)
+      .partitionBy("dest").parquet(staging)
+    val adopted = graft.infra.Fs.listNames(staging)
+      .filter(_.startsWith("dest=")).map { d =>
+        val out = s"$outDir/" + org.apache.spark.sql.catalyst.catalog
+          .ExternalCatalogUtils.unescapePathName(d.drop(5))
+        graft.sinks.LandedTable.adoptDelta(s"$staging/$d", out, batchId)
+        out
       }
-      touched ++= adopted.keys
-      // cadence merges AFTER every adopt/fold: merging mid-loop would
-      // fold the delta into the base before a colliding source's rows
-      // joined it (they would land under a batch id the base already
-      // covers — invisible forever). Merge every table touched SINCE
-      // the last cadence, not just this batch's.
-      if (batchId % CompactEvery == (CompactEvery - 1)) {
-        touched.toSeq.sorted.foreach { out =>
-          graft.sinks.LandedTable.compactTo(spark, out, batchId)
-          // refresh the plain-parquet face on the same cadence (a
-          // byte copy of the just-committed base — no Spark job), so
-          // external flat readers of a RESIDENT lane see state at
-          // most CompactEvery triggers old instead of only the
-          // finalize snapshot
-          graft.sinks.LandedTable.publishFlat(spark, out)
-        }
-        touched.clear()
-      }
-      graft.infra.Fs.delete(staging)
+    graft.infra.Fs.delete(staging)
+    touched ++= adopted
+    // merge every table touched SINCE the last cadence, not just this
+    // batch's, and refresh their plain-parquet faces on the same
+    // cadence (a byte copy of the just-committed base — no Spark job),
+    // so external flat readers of a RESIDENT lane see state at most
+    // CompactEvery triggers old instead of only the finalize snapshot
+    if (batchId % CompactEvery == (CompactEvery - 1)) {
+      graft.sinks.LandedTable
+        .compactAll(spark, touched.toSeq.sorted, batchId)
+        .foreach(graft.sinks.LandedTable.publishFlat(spark, _))
+      touched.clear()
     }
-    ()
   }
 
   private def changeStream(spark: SparkSession, task: TaskConfig.Task,
@@ -722,7 +689,7 @@ object LiveCdc {
     val tables = graft.sinks.LandedTable
       .finalizeAll(spark, task.sinkDir)
     val landed = tables.map { t =>
-      t -> spark.read.parquet(s"${task.sinkDir}/$t").count()
+      t -> graft.sinks.LandedTable.flatRowCount(s"${task.sinkDir}/$t")
     }
     Report(segments, events, landed, position)
   }

@@ -92,32 +92,30 @@ private[config] object LiveLanders {
         .decodeAll(spark, captureDir, fresh)
       val obs = Observation()
       val staging = s"$sink/_redis-landing"
+      // raw faces partition by segment (their deterministic seg dirs);
+      // every segment's ops share ONE partition — the pass's single
+      // state delta (op rows carry their segment as `sseg`)
+      val ops = s"$staging/face=op/seg=ops"
       rows.observe(obs,
           coalesce(sum(when(col("face") === "snap", 1L)
             .otherwise(0L)), lit(0L)).as("snap"),
           coalesce(sum(when(col("face") === "cmd", 1L)
             .otherwise(0L)), lit(0L)).as("cmd"))
+        .withColumn("seg", when(col("face") === "op", lit("ops"))
+          .otherwise(col("seg")))
         .write.mode(SaveMode.Overwrite)
         .partitionBy("face", "seg").parquet(staging)
-      // raw faces adopt their deterministic seg dirs; all segments'
-      // ops fold into ONE delta for the pass
-      var adopted = 0
       fresh.foreach { seg =>
         val e = escapePathName(seg)
         moveFace(s"$staging/face=snap/seg=$e",
           s"$sink/redis.snapshot/seg=$e")
         moveFace(s"$staging/face=cmd/seg=$e",
           s"$sink/redis.commands/seg=$e")
-        val src = s"$staging/face=op/seg=$e"
-        if (Fs.exists(src)) {
-          if (adopted == 0)
-            LandedTable.adoptDelta(src, stateTable, nextDelta)
-          else
-            LandedTable.foldDelta(src, stateTable, nextDelta, adopted)
-          adopted += 1
-        }
       }
-      if (adopted > 0) nextDelta += 1
+      if (Fs.exists(ops)) {
+        LandedTable.adoptDelta(ops, stateTable, nextDelta)
+        nextDelta += 1
+      }
       Fs.delete(staging)
       fresh.foreach(ledger.mark)
       landedSegments += fresh.size
@@ -170,10 +168,7 @@ private[config] object LiveLanders {
     /** Flat-face row count of the state table (metadata-only footers;
       * 0 before any state landed) — the drain-once report entry.
       */
-    def stateCount(): Long =
-      if (Fs.exists(stateTable))
-        spark.read.parquet(stateTable).count()
-      else 0L
+    def stateCount(): Long = LandedTable.flatRowCount(stateTable)
   }
 
   // ---- mongo ---------------------------------------------------------
@@ -294,12 +289,8 @@ private[config] object LiveLanders {
         .map(t => s"$sink/$t") ++ touched).distinct.sorted
 
     def compactNow(): Unit = {
-      stateTables().foreach { table =>
-        LandedTable.deltaIds(table).lastOption.foreach { last =>
-          LandedTable.compactTo(spark, table, last)
-          LandedTable.publishFlat(spark, table)
-        }
-      }
+      LandedTable.compactAll(spark, stateTables())
+        .foreach(LandedTable.publishFlat(spark, _))
       TieredLog.fold(spark, s"$sink/mongo.changes",
         foldable = ledger.contains)
     }
@@ -317,7 +308,7 @@ private[config] object LiveLanders {
           Seq("mongo.changes" -> spark.read.parquet(changes).count())
         else Seq.empty
       log ++ stateTables().map { t =>
-        Fs.fileName(t) -> spark.read.parquet(t).count()
+        Fs.fileName(t) -> LandedTable.flatRowCount(t)
       }
     }
   }

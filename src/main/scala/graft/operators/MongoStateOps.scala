@@ -72,12 +72,14 @@ object MongoStateOps {
     * order across segments regardless of how Spark packed a
     * multi-file read; `seq` is the file-offset sequence the PARSE
     * stamped into the log face ([[lineSeq]]) — exact within-segment
-    * order under any split. Events with no ns (malformed lines) or
-    * updates whose post-image lookup raced a delete stay in the log
-    * face only.
+    * order under any split. Compacted per (db, coll, segment) to one
+    * row per documentKey — each segment lands as one delta, and
+    * LandedTable's delta invariant is at most one row per key. Events
+    * with no ns (malformed lines) or updates whose post-image lookup
+    * raced a delete stay in the log face only.
     */
   def deriveState(landedFace: DataFrame): DataFrame =
-    landedFace
+    Compaction.compact(landedFace
       .filter(col("op").isin("insert", "update", "replace",
         "delete"))
       .filter(col("op") === "delete" || col("doc").isNotNull)
@@ -88,5 +90,7 @@ object MongoStateOps {
         col("seq"),
         when(col("op") === "delete", lit("delete"))
           .otherwise(lit("insert")).as("row_type"),
-        col("key"), col("doc").as("payload"))
+        col("key"), col("doc").as("payload")),
+      Seq("db", "coll", "bseq", "key"), Seq("seq"), col("row_type"))
+      .drop(Compaction.ActionCol)
 }

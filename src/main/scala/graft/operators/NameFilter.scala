@@ -2,6 +2,9 @@ package graft.operators
 
 import java.util.regex.Pattern
 
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions.lit
+
 /** Schema/table allow-deny filtering with the reference's pattern language
   * (/root/reference/dt-common/src/rdb_filter.rs:30-225): `*` and `?`
   * wildcards, `r#…#`-delimited raw regex, and exact-match escapes via
@@ -32,12 +35,21 @@ object NamePattern {
 
   def matches(token: String, name: String): Boolean =
     compile(token).matcher(name).matches()
+
+  /** [[matches]] as a Catalyst predicate: `rlike` finds, so the
+    * compiled pattern is anchored to the whole string.
+    */
+  def matchesCol(token: String, name: Column): Column =
+    name.rlike(s"\\A(?:${compile(token).pattern})\\z")
 }
 
 /** `schema.tb` token pair. Tokens may individually be wildcards/regex. */
 final case class TableToken(schema: String, tb: String) {
   def matches(s: String, t: String): Boolean =
     NamePattern.matches(schema, s) && NamePattern.matches(tb, t)
+
+  def matchesCol(s: Column, t: Column): Column =
+    NamePattern.matchesCol(schema, s) && NamePattern.matchesCol(tb, t)
 }
 
 /** Allow/deny filter over schemas, tables, and event kinds (reference
@@ -76,6 +88,21 @@ final case class NameFilter(
         doSchemas.exists(NamePattern.matches(_, schema))
       !denied && allowed
     })
+
+  /** [[allowTable]] as a row-level predicate over (schema, tb)
+    * columns, so an event batch filters in-plan with no driver-side
+    * table list.
+    */
+  def tableAllowed(schema: Column, tb: Column): Column = {
+    def any(ms: Seq[Column]) = ms.foldLeft(lit(false))(_ || _)
+    val denied = any(ignoreTbs.map(_.matchesCol(schema, tb)) ++
+      ignoreSchemas.map(NamePattern.matchesCol(_, schema)))
+    val allowed =
+      if (doTbs.isEmpty && doSchemas.isEmpty) lit(true)
+      else any(doTbs.map(_.matchesCol(schema, tb)) ++
+        doSchemas.map(NamePattern.matchesCol(_, schema)))
+    allowed && !denied
+  }
 
   def allowEvent(rowType: String): Boolean = doEvents.contains(rowType)
 

@@ -3509,7 +3509,8 @@ object RedisStateOps {
       // this side is O(state))
       val aNonMv = foldPlain(spark,
         base.map(_.join(
-          flagged.where(col("isdef") || col("issrc")).select("key"),
+          flagged.where(col("isdef") || col("issrc")).select("key")
+            .distinct(),
           Seq("key"), "left_anti")),
         flagged.where(!col("isdef") && !col("issrc"))
           .select("key", "p"),
@@ -3531,7 +3532,8 @@ object RedisStateOps {
             }
           case Some(b0) =>
             val bg = b0
-              .join(srcRows.select("key"), Seq("key"), "left_semi")
+              .join(srcRows.select("key").distinct(), Seq("key"),
+                "left_semi")
               .select(col("key"), col("payload").as("p"))
               .groupBy(col("key")).as[String, KP]
             bg.cogroupSorted(srcG)()(col("p")) { (k, bIt, oIt) =>
@@ -3559,7 +3561,8 @@ object RedisStateOps {
       val side2 = base match {
         case None => emits
         case Some(b0) =>
-          b0.join(defRows.select("key"), Seq("key"), "left_semi")
+          b0.join(defRows.select("key").distinct(), Seq("key"),
+            "left_semi")
             .select(col("key"), lit(0).as("tg"),
               col("payload").as("s"))
             .unionByName(emits)

@@ -1,6 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.functions.{coalesce, concat, lit,
+  try_element_at, typedLit}
 
 /** Rename/addressing maps — the reference's rdb_router
   * (/root/reference/dt-connector/src/rdb_router.rs:24-98,247-330):
@@ -19,6 +21,17 @@ final case class Router(
   def routeTable(schema: String, tb: String): (String, String) =
     tbMap.getOrElse((schema, tb),
       (schemaMap.getOrElse(schema, schema), tb))
+
+  /** [[routeTable]] as a column: the routed `schema.tb` name from
+    * Catalyst map lookups, so a batch routes in-plan.
+    */
+  def routedName(schema: Column, tb: Column): Column = {
+    val tbs = typedLit(tbMap.map { case ((s, t), (ts, tt)) =>
+      s"$s\u0000$t" -> s"$ts.$tt" })
+    coalesce(try_element_at(tbs, concat(schema, lit("\u0000"), tb)),
+      concat(coalesce(try_element_at(typedLit(schemaMap), schema), schema),
+        lit("."), tb))
+  }
 
   def routeColumn(schema: String, tb: String, colName: String): String =
     colMap.get((schema, tb)).flatMap(_.get(colName)).getOrElse(colName)

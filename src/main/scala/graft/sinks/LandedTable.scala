@@ -1,11 +1,14 @@
 package graft.sinks
 
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField,
   StructType}
 
 import graft.infra.Fs
+import graft.operators.Compaction
 
 /** The live-CDC landed-table layout: an LSM-style parquet table whose
   * per-micro-batch write cost is O(batch), not O(table).
@@ -51,6 +54,18 @@ import graft.infra.Fs
   * delta key set and the survivors pass through scan-shaped. That
   * keeps a resident monitor's poll and the cadence merge free of any
   * O(state) shuffle (round-12 verdict Wrong #1).
+  *
+  * Delta invariant (row-compaction tables): every delta holds AT MOST
+  * ONE row per non-null key — its writer already compacted it
+  * (`writeDelta` compacts its input; the live lander compacts on the
+  * routed (destination, key), so several source tables routed to one
+  * destination land as one delta — the per-source `foldDelta` that
+  * used to append a second source's rows into an adopted delta is
+  * gone; the mongo lander compacts per segment). A table with exactly
+  * one outstanding delta therefore merges by dropping tombstones, with
+  * no second compaction; `compactAll` re-compacts only tables with
+  * several outstanding deltas. NULL-key rows are serial and always
+  * pass through.
   */
 object LandedTable {
 
@@ -125,12 +140,17 @@ object LandedTable {
   private def baseDir(table: String, batchId: Long) =
     f"$table/_base-$batchId%08d"
 
-  /** Write one micro-batch's compacted rows. O(batch) — the only work
-    * a steady-state trigger does.
+  /** Write one micro-batch's rows as `table`'s delta for `batchId`,
+    * compacted to one row per non-null key first (the delta
+    * invariant; last-writer-wins compaction is idempotent, so an
+    * already-compacted input lands unchanged). O(batch) — the only
+    * work a steady-state trigger does.
     */
   def writeDelta(delta: DataFrame, table: String,
       batchId: Long): Unit =
-    delta.write.mode(SaveMode.Overwrite)
+    Compaction.compact(delta, Seq("key"), Seq("bseq", "seq"),
+        col("row_type"))
+      .drop(Compaction.ActionCol).write.mode(SaveMode.Overwrite)
       .parquet(deltaDir(table, batchId))
 
   /** Adopt an already-materialized parquet dir as `table`'s delta for
@@ -146,27 +166,6 @@ object LandedTable {
     if (!Fs.rename(src, dst))
       throw new java.io.IOException(
         s"delta adopt rename failed: $src -> $dst")
-  }
-
-  /** Fold a FURTHER materialized dir into the batch's already-adopted
-    * delta — the route-collision case (several source tables mapped to
-    * one destination in one trigger). Part names gain a per-source
-    * prefix: the staging write names files identically across
-    * partition dirs, and a replace-rename here would silently drop the
-    * first source's rows for the batch. Replay idempotency holds
-    * because the batch's FIRST adopt replaced the dir wholesale.
-    */
-  def foldDelta(src: String, table: String, batchId: Long,
-      sourceIdx: Int): Unit = {
-    val dst = deltaDir(table, batchId)
-    Fs.listNames(src)
-      .filter(n => !n.startsWith(".") && n != "_SUCCESS")
-      .foreach { n =>
-        if (!Fs.rename(s"$src/$n", s"$dst/r$sourceIdx-$n"))
-          throw new java.io.IOException(
-            s"delta fold rename failed: $src/$n -> $dst/r$sourceIdx-$n")
-      }
-    Fs.delete(src)
   }
 
   /** (maxCommittedBatchId, path) of the newest committed base. */
@@ -195,56 +194,67 @@ object LandedTable {
     else spark.read.schema(FlatSchema).parquet(files: _*)
   }
 
-  /** The default fold: last-writer-wins row compaction. Base ∪
-    * compacted newer deltas WITHOUT shuffling the base: delta keys
-    * override by anti-join (broadcast under the budget — the delta
-    * set is bounded by the CompactEvery cadence in resident mode;
-    * bulk loads land through the no-base branch), survivors pass
-    * through scan-shaped. The overridden key set comes from the RAW
-    * delta scan — the same non-null key set the compacted frame
-    * carries — so the window/compaction subtree evaluates once per
-    * merge, not twice.
+  /** The last-writer-wins fold over `_t`-tagged tables (`_t` tells
+    * the tables apart; one table is a single tag). Bases — committed
+    * faces, one row per key — pass through scan-shaped WITHOUT a
+    * shuffle, minus the keys `overriding` (the raw delta rows of the
+    * tables that have a base) carries; `single` deltas, already one
+    * row per key (the delta invariant), contribute minus their
+    * tombstones; `multi` deltas are compacted on (`_t`, key) first.
+    * NULL-key rows are serial: never overridden, always kept — the
+    * same contract Compaction.compact gives the appliers.
+    *
+    * The anti-join key side is broadcast while the overriding delta
+    * bytes fit the budget. The bound holds on the CompactEvery
+    * cadence (resident mode), but a drain-once catch-up can put an
+    * arbitrarily large backlog into ONE delta range — size the delta
+    * bytes (file metadata, no job) and fall back to a shuffle
+    * anti-join past the budget rather than collecting millions of
+    * keys onto the driver.
+    */
+  private def lastWriterWins(spark: SparkSession,
+      bases: Option[DataFrame], single: Option[DataFrame],
+      multi: Option[DataFrame], overriding: Option[DataFrame],
+      overridingBytes: Long): DataFrame = {
+    val upserts = (single.map(_.filter(
+        col("key").isNull || col("row_type") =!= "delete")) ++
+      multi.map(d => Compaction.compact(d, Seq("_t", "key"),
+          Seq("bseq", "seq"), col("row_type"))
+        .filter(col(Compaction.ActionCol) =!= Compaction.Delete)))
+      .map(_.select("_t", "key", "payload")).reduce(_.unionByName(_))
+    bases.zip(overriding).fold(upserts) { case (b, d) =>
+      // the anti-join matches ONE combined (_t, key) string: on the
+      // two columns the optimizer pushes the join into every base leg
+      // of a union with the key side pruned to that leg's literal
+      // `_t` — a broadcast per table. One key side is one broadcast,
+      // which every leg reuses. Duplicate keys (several deltas of a
+      // table) do not change an anti-join, so no distinct.
+      def tk(df: DataFrame) = concat(df("_t").cast("string"),
+        lit("\u0000"), df("key"))
+      val budget = spark.conf
+        .getOption("graft.landed.broadcast_delta_bytes")
+        .map(_.toLong).getOrElse(BroadcastDeltaBytes)
+      val keys = d.select(tk(d).as("_k")).where(col("_k").isNotNull)
+      val keySet =
+        if (overridingBytes <= budget) broadcast(keys) else keys
+      b.join(keySet, tk(b) === keySet("_k"), "left_anti")
+        .select("_t", "key", "payload").unionByName(upserts)
+    }
+  }
+
+  /** The default fold: last-writer-wins row compaction of ONE table's
+    * outstanding deltas (any number, so always compacted) over its
+    * base. `read` (the resident poll) folds through this; committed
+    * merges of row-compaction tables go through [[compactAll]].
     */
   object StandardMerger extends Merger {
     override def deltaSchema: StructType = Schema
 
-    /** One row per key with the winning action, plus NULL-key serial
-      * rows passed through — the same contract Compaction.compact
-      * gives the appliers.
-      */
-    private def compacted(deltas: DataFrame): DataFrame = {
-      import graft.operators.Compaction
-      Compaction.compact(deltas,
-        Seq("key"), Seq("bseq", "seq"), col("row_type"))
-    }
-
     override def merge(spark: SparkSession, base: Option[DataFrame],
         deltas: DataFrame, deltaBytes: Long): DataFrame = {
-      import graft.operators.Compaction
-      val upserts = compacted(deltas)
-        .filter(col(Compaction.ActionCol) =!= Compaction.Delete)
-        .select("key", "payload")
-      base match {
-        case None => upserts
-        case Some(b) =>
-          val overridden = deltas
-            .select("key").where(col("key").isNotNull).distinct()
-          // the broadcast bound holds on the CompactEvery cadence
-          // (resident mode), but a drain-once catch-up can put an
-          // arbitrarily large backlog into ONE delta range — size
-          // the outstanding delta bytes (file metadata, no job) and
-          // fall back to a shuffle anti-join past the broadcast
-          // budget rather than collecting millions of keys onto the
-          // driver
-          val budget = spark.conf
-            .getOption("graft.landed.broadcast_delta_bytes")
-            .map(_.toLong).getOrElse(BroadcastDeltaBytes)
-          val keySet =
-            if (deltaBytes <= budget) broadcast(overridden)
-            else overridden
-          b.join(keySet, Seq("key"), "left_anti")
-            .unionByName(upserts)
-      }
+      def tag(df: DataFrame) = df.withColumn("_t", lit(0))
+      lastWriterWins(spark, base.map(tag), None, Some(tag(deltas)),
+        Some(tag(deltas)), deltaBytes).drop("_t")
     }
   }
 
@@ -255,14 +265,14 @@ object LandedTable {
   private[sinks] val BroadcastDeltaBytes: Long = 128L * 1024 * 1024
 
   private def merge(spark: SparkSession, basePath: Option[String],
-      table: String, ids: Seq[Long], merger: Merger): DataFrame = {
-    val deltas = spark.read.schema(merger.deltaSchema)
-      .parquet(ids.map(id => deltaDir(table, id)): _*)
-    val deltaBytes =
-      ids.map(id => Fs.dirSize(deltaDir(table, id))).sum
-    merger.merge(spark, basePath.map(baseState(spark, _)), deltas,
-      deltaBytes)
-  }
+      table: String, ids: Seq[Long], merger: Merger): DataFrame =
+    merger.merge(spark, basePath.map(baseState(spark, _)),
+      spark.read.schema(merger.deltaSchema)
+        .parquet(ids.map(deltaDir(table, _)): _*),
+      deltaBytes(table, ids))
+
+  private def deltaBytes(table: String, ids: Seq[Long]): Long =
+    ids.map(id => Fs.dirSize(deltaDir(table, id))).sum
 
   /** The committed BASE as a frame — bookkeeping rows INCLUDED (what
     * a merger's flatView hides from readers). None before the first
@@ -296,18 +306,24 @@ object LandedTable {
     merger.flatView.fold(raw)(f => f(raw))
   }
 
-  /** Merge base + deltas ≤ `uptoBatch` into a new committed base.
-    * Commit is the stage→base dir rename; cleanup of the old base and
-    * merged deltas happens after (a crash between leaves only garbage
-    * that the max-N reader rule ignores and the next merge sweeps).
+  /** One table's pending merge: the committed base it folds over and
+    * the outstanding delta ids (ascending) it folds in. The new base
+    * is named after the newest merged delta.
     */
-  def compactTo(spark: SparkSession, table: String,
-      uptoBatch: Long, merger: Merger = StandardMerger): Unit = {
+  private final case class Pending(table: String,
+      base: Option[(Long, String)], ids: Seq[Long]) {
+    def target: String = baseDir(table, ids.last)
+  }
+
+  /** Sweep garbage from crashed merges, then list what a merge up to
+    * `uptoBatch` folds — None when nothing is outstanding. Garbage is
+    * uncommitted stages, superseded bases (a crash between the rename
+    * commit and cleanup leaves the OLD base orphaned — each one a
+    * full table copy), and deltas the committed base already folded
+    * in.
+    */
+  private def pending(table: String, uptoBatch: Long): Option[Pending] = {
     val prev = committedBase(table)
-    // sweep garbage from crashed merges before staging: uncommitted
-    // stages, superseded bases (a crash between the rename commit and
-    // cleanup leaves the OLD base orphaned — each one a full table
-    // copy), and deltas the committed base already folded in
     Fs.listNames(table).filter(_.startsWith("_stage-"))
       .foreach(n => Fs.delete(s"$table/$n"))
     prev.foreach { case (n, _) =>
@@ -321,19 +337,103 @@ object LandedTable {
     }
     val ids = deltaIds(table)
       .filter(id => id <= uptoBatch && prev.forall(_._1 < id))
-    if (ids.isEmpty) return
-    val merged = merge(spark, prev.map(_._2), table, ids, merger)
-    val stage = f"$table/_stage-$uptoBatch%08d"
-    try merged.write.mode(SaveMode.Overwrite).parquet(stage)
-    finally merger.release() // the stage write consumed the plan
-    val committed = baseDir(table, uptoBatch)
-    if (!Fs.exists(committed) && !Fs.rename(stage, committed))
+    if (ids.isEmpty) None else Some(Pending(table, prev, ids))
+  }
+
+  /** The commit: RENAME the staged merge output to the new base, then
+    * clean up the old base and the merged deltas (a crash between
+    * leaves only garbage that the max-N reader rule ignores and the
+    * next `pending` sweeps).
+    */
+  private def commit(p: Pending, staged: String): Unit = {
+    if (!Fs.exists(p.target) && !Fs.rename(staged, p.target))
       throw new java.io.IOException(
-        s"landed-table commit failed: $stage -> $committed")
-    // post-commit cleanup: old base, merged deltas, leftover stage
-    prev.foreach { case (_, p) => Fs.delete(p) }
-    ids.foreach(id => Fs.delete(deltaDir(table, id)))
-    if (Fs.exists(stage)) Fs.delete(stage)
+        s"landed-table commit failed: $staged -> ${p.target}")
+    p.base.foreach { case (_, path) => Fs.delete(path) }
+    p.ids.foreach(id => Fs.delete(deltaDir(p.table, id)))
+    if (Fs.exists(staged)) Fs.delete(staged)
+  }
+
+  /** Merge base + deltas ≤ `uptoBatch` into a new committed base
+    * through a custom `merger` (the Redis state table's op fold).
+    * Row-compaction tables merge through [[compactAll]].
+    */
+  def compactTo(spark: SparkSession, table: String,
+      uptoBatch: Long, merger: Merger = StandardMerger): Unit =
+    pending(table, uptoBatch).foreach { p =>
+      val stage = f"$table/_stage-${p.ids.last}%08d"
+      try merge(spark, p.base.map(_._2), table, p.ids, merger)
+        .write.mode(SaveMode.Overwrite).parquet(stage)
+      finally merger.release() // the stage write consumed the plan
+      commit(p, stage)
+    }
+
+  /** Merge every row-compaction table's deltas ≤ `uptoBatch` into a
+    * new committed base in ONE plan and ONE write, whatever the table
+    * count: each table's rows are tagged `_t` (its index here) and
+    * fold through [[lastWriterWins]]. A table with exactly one
+    * outstanding delta skips the compaction (the delta invariant);
+    * tables with several (resident cadence, crash leftovers) share
+    * one compaction on (`_t`, key). The write is partitioned by `_t`
+    * into an underscore-prefixed, dot-free stage beside the tables
+    * (never listed as a table); the per-table RENAME of
+    * `_t=<i>` into that table's `_base-N` stays the commit, so a
+    * crash after any number of commits leaves every table readable
+    * and the next call merges exactly the uncommitted ones.
+    * `afterCommits` sees the number of tables committed so far, before
+    * each commit and after the last (the crash-point test seam).
+    * Returns the tables it merged.
+    */
+  def compactAll(spark: SparkSession, tables: Seq[String],
+      uptoBatch: Long = Long.MaxValue,
+      afterCommits: Int => Unit = _ => ()): Seq[String] = {
+    if (tables.isEmpty) return Nil
+    val stage = tables.head.substring(0, tables.head.lastIndexOf('/')) +
+      "/_compact-stage"
+    if (Fs.exists(stage)) Fs.delete(stage) // a crashed previous merge
+    val todo = tables.flatMap(pending(_, uptoBatch))
+    if (todo.isEmpty) return Nil
+    def union(frames: Seq[DataFrame]): Option[DataFrame] =
+      frames.reduceOption(_.unionByName(_))
+    val deltas = todo.zipWithIndex.map { case (p, i) =>
+      p -> spark.read.schema(Schema)
+        .parquet(p.ids.map(deltaDir(p.table, _)): _*)
+        .withColumn("_t", lit(i))
+    }
+    val (single, multi) = deltas.partition(_._1.ids.size == 1)
+    val withBase = deltas.filter(_._1.base.nonEmpty)
+    val merged = lastWriterWins(spark,
+      union(todo.zipWithIndex.flatMap { case (p, i) =>
+        p.base.map { case (_, path) =>
+          baseState(spark, path).withColumn("_t", lit(i))
+        }
+      }),
+      union(single.map(_._2)), union(multi.map(_._2)),
+      union(withBase.map(_._2)),
+      withBase.map { case (p, _) => deltaBytes(p.table, p.ids) }.sum)
+    merged.write.mode(SaveMode.Overwrite).partitionBy("_t")
+      .parquet(stage)
+    // a table whose merged state is empty wrote no partition dir; its
+    // base still needs a (schema-only) part file, or the published
+    // flat face would be an unreadable dir
+    val empty = todo.indices.filterNot(i => Fs.exists(s"$stage/_t=$i"))
+    if (empty.nonEmpty) {
+      val blank = s"$stage/_blank"
+      spark.createDataFrame(spark.sparkContext
+        .emptyRDD[org.apache.spark.sql.Row], FlatSchema)
+        .write.mode(SaveMode.Overwrite).parquet(blank)
+      val parts = Fs.listNames(blank)
+        .filter(n => !n.startsWith(".") && !n.startsWith("_"))
+      empty.foreach(i => parts.foreach(n =>
+        Fs.copyFile(s"$blank/$n", s"$stage/_t=$i/$n")))
+    }
+    todo.zipWithIndex.foreach { case (p, i) =>
+      afterCommits(i)
+      commit(p, s"$stage/_t=$i")
+    }
+    afterCommits(todo.size)
+    Fs.delete(stage)
+    todo.map(_.table)
   }
 
   /** Refresh the flat published snapshot (the plain-parquet face of
@@ -388,16 +488,29 @@ object LandedTable {
   }
 
   /** Finalize every landed table under `outDir`: fold all deltas into
-    * the base and refresh the flat snapshot — the drain-once epilogue.
+    * the bases (one [[compactAll]] plan) and refresh each flat
+    * snapshot — the drain-once epilogue.
     */
   def finalizeAll(spark: SparkSession, outDir: String): Seq[String] = {
     val tables = Fs.listNames(outDir).filter(_.contains("."))
       .filter(n => Fs.isDirectory(s"$outDir/$n")).sorted
-    tables.foreach { t =>
-      val table = s"$outDir/$t"
-      deltaIds(table).lastOption.foreach(compactTo(spark, table, _))
-      publishFlat(spark, table)
-    }
+    val paths = tables.map(t => s"$outDir/$t")
+    compactAll(spark, paths)
+    paths.foreach(publishFlat(spark, _))
     tables
+  }
+
+  /** Rows in `table`'s published flat face, summed from the part
+    * files' parquet footers — file metadata only, no Spark job.
+    */
+  def flatRowCount(table: String): Long = {
+    val conf = Fs.conf
+    Fs.listNames(table)
+      .filter(n => !n.startsWith("_") && !n.startsWith("."))
+      .map { n =>
+        val reader = ParquetFileReader.open(HadoopInputFile
+          .fromPath(new org.apache.hadoop.fs.Path(s"$table/$n"), conf))
+        try reader.getRecordCount finally reader.close()
+      }.sum
   }
 }
