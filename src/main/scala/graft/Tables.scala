@@ -22,7 +22,14 @@ object Tables {
     // every query path flows through here — make the engine's native
     // expressions available in this session
     graft.functions.GraftFunctions.register(spark)
-    spark.read.parquet(s"$dir/$name.parquet")
+    // the schema comes from one footer read here on the driver, so the
+    // read plans no inference job; a missing or empty table has no
+    // footer, and Spark's read then raises its own missing-path or
+    // cannot-infer-schema error
+    val path = s"$dir/$name.parquet"
+    val reader = spark.read
+    graft.infra.Footers.schema(spark, path).fold(reader)(reader.schema)
+      .parquet(path)
   }
 
   /** Restore scan parallelism over a physically unsplittable local

@@ -689,7 +689,7 @@ object LiveCdc {
     val tables = graft.sinks.LandedTable
       .finalizeAll(spark, task.sinkDir)
     val landed = tables.map { t =>
-      t -> graft.sinks.LandedTable.flatRowCount(s"${task.sinkDir}/$t")
+      t -> graft.infra.Footers.rowCount(s"${task.sinkDir}/$t")
     }
     Report(segments, events, landed, position)
   }

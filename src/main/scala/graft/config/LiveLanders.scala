@@ -3,7 +3,7 @@ package graft.config
 import org.apache.spark.sql.{Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.infra.{ConsumedLedger, Fs}
+import graft.infra.{ConsumedLedger, Footers, Fs}
 import graft.sinks.{LandedTable, TieredLog}
 
 /** The redis/mongo live-lane landing halves — SINGLE-PASS (round-13
@@ -168,7 +168,7 @@ private[config] object LiveLanders {
     /** Flat-face row count of the state table (metadata-only footers;
       * 0 before any state landed) — the drain-once report entry.
       */
-    def stateCount(): Long = LandedTable.flatRowCount(stateTable)
+    def stateCount(): Long = Footers.rowCount(stateTable)
   }
 
   // ---- mongo ---------------------------------------------------------
@@ -305,10 +305,10 @@ private[config] object LiveLanders {
       val changes = s"$sink/mongo.changes"
       val log =
         if (Fs.exists(changes))
-          Seq("mongo.changes" -> spark.read.parquet(changes).count())
+          Seq("mongo.changes" -> Footers.rowCount(changes))
         else Seq.empty
       log ++ stateTables().map { t =>
-        Fs.fileName(t) -> LandedTable.flatRowCount(t)
+        Fs.fileName(t) -> Footers.rowCount(t)
       }
     }
   }

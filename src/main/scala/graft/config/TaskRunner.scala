@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.infra.{CheckLogs, Monitoring, Precheck}
+import graft.infra.{CheckLogs, Footers, Monitoring, Precheck}
 import graft.operators.{Checker, Compaction}
 
 /** Config → running task — the reference's TaskRunner
@@ -67,11 +67,10 @@ object TaskRunner {
         col(task.router.routeColumn(schema, tb, c))))
       .getOrElse(routed)
     partitioned.write.mode(SaveMode.Overwrite).parquet(out)
-    // count the WRITTEN output, not the source again — a parquet
-    // count() is satisfied from row-group metadata, while re-counting
-    // `routed` would re-run the full source scan per table
-    TableResult(schema, tb, spark.read.parquet(out).count(),
-      s"$toSchema.$toTb")
+    // count the WRITTEN output from its part files' footers: the write
+    // is the unit's one Spark job (re-counting `routed` would re-run
+    // the source scan, and a parquet read-back plans three more jobs)
+    TableResult(schema, tb, Footers.rowCount(out), s"$toSchema.$toTb")
   }
 
   /** One snapshot unit shipped to a stream-load warehouse instead —
@@ -90,10 +89,12 @@ object TaskRunner {
       if (task.sink.hardDelete) routed
       else routed.withColumn(StreamLoadSink.IsDeletedCol, lit(0))
         .withColumn(StreamLoadSink.VersionCol, lit(0L))
-    StreamLoadSink.ship(rows, () => sinkFor(toSchema, toTb, -1L, ""),
-      task.batchSize, task.sink.batchMemoryMb
-        .map(_.toLong * 1024 * 1024).getOrElse(Long.MaxValue))
-    TableResult(schema, tb, routed.count(), s"$toSchema.$toTb")
+    // the ship counts its lines: one job, no second scan to count rows
+    val shipped = StreamLoadSink.ship(rows,
+      () => sinkFor(toSchema, toTb, -1L, ""), task.batchSize,
+      task.sink.batchMemoryMb.map(_.toLong * 1024 * 1024)
+        .getOrElse(Long.MaxValue))
+    TableResult(schema, tb, shipped, s"$toSchema.$toTb")
   }
 
   /** Snapshot task: every admitted table through [[snapshotTable]]. */
@@ -120,8 +121,7 @@ object TaskRunner {
       val (routed, (toSchema, toTb)) = prepared(spark, task, schema, tb)
       sub.stage(routed.withColumn("dst_table",
         lit(s"$toSchema.$toTb")), offset)
-      val rows = spark.read
-        .parquet(s"${task.sinkDir}/spool/batch=$offset").count()
+      val rows = Footers.rowCount(s"${task.sinkDir}/spool/batch=$offset")
       offset += 1
       TableResult(schema, tb, rows, s"$toSchema.$toTb")
     }
@@ -479,7 +479,7 @@ object TaskRunner {
           s"$toSchema.$toTb", keys)
         val out = s"${task.sinkDir}/revise/$toSchema.$toTb"
         revise.write.mode(SaveMode.Overwrite).parquet(out)
-        tb -> spark.read.parquet(out).count()
+        tb -> Footers.rowCount(out)
       }
     }
   }
@@ -576,8 +576,8 @@ object TaskRunner {
       .toDF("db", "key", "value_type", "field", "value", "expire_ms")
     val out = s"${task.sinkDir}/redis.snapshot"
     df.write.mode(SaveMode.Overwrite).parquet(out)
-    TableResult("redis", "snapshot",
-      spark.read.parquet(out).count(), "redis.snapshot")
+    TableResult("redis", "snapshot", Footers.rowCount(out),
+      "redis.snapshot")
   }
 
   /** `extract_type=scan`: keyspace statistics over a captured keyspace
@@ -655,8 +655,8 @@ object TaskRunner {
         val (toSchema, toTb) = task.router.routeTable(schema, tb)
         val out = s"${task.sinkDir}/$toSchema.$toTb"
         df.write.mode(SaveMode.Overwrite).parquet(out)
-        Some(TableResult(schema, tb,
-          spark.read.parquet(out).count(), s"$toSchema.$toTb"))
+        Some(TableResult(schema, tb, Footers.rowCount(out),
+          s"$toSchema.$toTb"))
       }
     }
   }

@@ -3381,21 +3381,28 @@ object RedisStateOps {
       * sort_array(concat(ops, eops)). Cross-iterator comparisons go
       * through UTF8String: JVM String.compareTo orders supplementary
       * characters differently, and the merged order must be exactly
-      * what one Spark sort over the union would have produced.
+      * what one Spark sort over the union would have produced. Each
+      * head is converted once: its UTF8String is cached until that
+      * side advances.
       */
     private def mergeSorted(a: Iterator[String],
         b: Iterator[String]): Iterator[String] =
       new scala.collection.AbstractIterator[String] {
         private val ab = a.buffered
         private val bb = b.buffered
+        private var au: UTF8String = null
+        private var bu: UTF8String = null
+        private def nextA(): String = { au = null; ab.next() }
+        private def nextB(): String = { bu = null; bb.next() }
         def hasNext: Boolean = ab.hasNext || bb.hasNext
         def next(): String =
-          if (!bb.hasNext) ab.next()
-          else if (!ab.hasNext) bb.next()
-          else if (UTF8String.fromString(ab.head)
-              .compareTo(UTF8String.fromString(bb.head)) <= 0)
-            ab.next()
-          else bb.next()
+          if (!bb.hasNext) nextA()
+          else if (!ab.hasNext) nextB()
+          else {
+            if (au == null) au = UTF8String.fromString(ab.head)
+            if (bu == null) bu = UTF8String.fromString(bb.head)
+            if (au.compareTo(bu) <= 0) nextA() else nextB()
+          }
       }
 
     override def merge(spark: SparkSession, base: Option[DataFrame],

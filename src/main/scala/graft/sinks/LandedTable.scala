@@ -1,7 +1,5 @@
 package graft.sinks
 
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField,
@@ -498,19 +496,5 @@ object LandedTable {
     compactAll(spark, paths)
     paths.foreach(publishFlat(spark, _))
     tables
-  }
-
-  /** Rows in `table`'s published flat face, summed from the part
-    * files' parquet footers — file metadata only, no Spark job.
-    */
-  def flatRowCount(table: String): Long = {
-    val conf = Fs.conf
-    Fs.listNames(table)
-      .filter(n => !n.startsWith("_") && !n.startsWith("."))
-      .map { n =>
-        val reader = ParquetFileReader.open(HadoopInputFile
-          .fromPath(new org.apache.hadoop.fs.Path(s"$table/$n"), conf))
-        try reader.getRecordCount finally reader.close()
-      }.sum
   }
 }

@@ -43,11 +43,12 @@ object StreamLoadSink {
   }
 
   /** Ship a batch to one destination: render JSON and push it through
-    * [[shipTagged]] with every line tagged for the one sink.
+    * [[shipTagged]] with every line tagged for the one sink. Returns the
+    * lines shipped.
     */
   def ship(df: DataFrame, sinkFactory: () => PayloadSink,
       batchRows: Int = 10000,
-      batchBytes: Long = Long.MaxValue): Unit =
+      batchBytes: Long = Long.MaxValue): Long =
     shipTagged(jsonPayload(df).select(lit(0), col("payload")),
       _ => sinkFactory(), batchRows, batchBytes)
 
@@ -62,20 +63,30 @@ object StreamLoadSink {
     * body — at 100 TB the row-width distribution is exactly the thing
     * you don't control. A single over-wide row still ships alone (the
     * cap flushes BEFORE adding, never splits a row).
+    *
+    * Returns the lines shipped, counted in the same job: Spark applies
+    * an action's accumulator update once per task, so a retried task
+    * does not count twice.
     */
   def shipTagged(payload: DataFrame, sinkFor: Int => PayloadSink,
-      batchRows: Int, batchBytes: Long): Unit =
+      batchRows: Int, batchBytes: Long): Long = {
+    val lines = payload.sparkSession.sparkContext.longAccumulator
     payload.foreachPartition {
       it: Iterator[org.apache.spark.sql.Row] =>
         val open = scala.collection.mutable.TreeMap.empty[Int, Chunks]
+        var n = 0L
         it.foreach { r =>
           val d = r.getInt(0)
           open.getOrElseUpdate(d,
             new Chunks(sinkFor(d), batchRows, batchBytes))
             .add(r.getString(1))
+          n += 1
         }
         open.valuesIterator.foreach(_.flush())
+        lines.add(n)
     }
+    lines.value
+  }
 
   /** One destination's pending chunk within a partition. */
   private final class Chunks(sink: PayloadSink, batchRows: Int,

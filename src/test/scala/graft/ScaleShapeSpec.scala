@@ -47,10 +47,17 @@ class ScaleShapeSpec extends SparkSuite {
   private def keyExchanges(plan: String): Int =
     // negative lookbehind: a ReusedExchange re-reads an existing
     // shuffle's output — counting it would double-charge the one
-    // exchange it reuses (and the bare substring also matched it)
+    // exchange it reuses (and the bare substring also matched it).
+    // It also leaves out BroadcastExchange on purpose: a broadcast
+    // ships a join's small side, not a key shuffle of the payload;
+    // claims that cover broadcasts count them with broadcastExchanges
     "(?<![A-Za-z])Exchange ".r.findAllMatchIn(plan).size -
       ("(?<![A-Za-z])Exchange RoundRobinPartitioning\\(\\d+\\), " +
         "REPARTITION_BY_NUM").r.findAllMatchIn(plan).size
+
+  /** BroadcastExchange nodes in the plan text. */
+  private def broadcastExchanges(plan: String): Int =
+    "(?<![A-Za-z])BroadcastExchange ".r.findAllMatchIn(plan).size
 
   test("salted aggregation equals direct aggregation on a hot key") {
     // hot key: 90% of rows share key 1
@@ -106,8 +113,9 @@ class ScaleShapeSpec extends SparkSuite {
     // the avro codec fans out the unsplittable single-file scan
     // (Tables.fanout — a no-op on many-file inputs); the load-bearing
     // claim stays: no KEY shuffle anywhere in the per-row plan
-    assert(keyExchanges(
-      planOf(graft.operators.Relational2.avroRoundTrip(spark, sf))) == 0)
+    val avro = planOf(graft.operators.Relational2.avroRoundTrip(spark, sf))
+    assert(keyExchanges(avro) == 0, avro)
+    assert(broadcastExchanges(avro) == 0, avro)
     assert(!planOf(graft.operators.Cdc.scriptTransform(spark, sf))
       .contains("Exchange"))
   }
@@ -319,6 +327,7 @@ class ScaleShapeSpec extends SparkSuite {
     // explode; the only admissible exchange is the round-robin scan
     // fan-out over the unsplittable local fixture (no-op at scale)
     assert(keyExchanges(p) == 0, p)
+    assert(broadcastExchanges(p) == 0, p)
   }
 
   test("q123 c4 rules is map-only; q124 boilerplate verdict joins " +
@@ -327,6 +336,7 @@ class ScaleShapeSpec extends SparkSuite {
       .queryExecution.executedPlan.toString
     // map-only modulo the scan fan-out (see q118 note)
     assert(keyExchanges(p123) == 0, p123)
+    assert(broadcastExchanges(p123) == 0, p123)
     assert(!p123.contains("Join"), p123)
     val p124 = graft.operators.CurationOps.lineBoilerplate(spark, sf)
       .queryExecution.executedPlan.toString

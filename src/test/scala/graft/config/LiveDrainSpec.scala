@@ -3,7 +3,7 @@ package graft.config
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.infra.Fs
+import graft.infra.{Footers, Fs}
 import graft.operators.{NameFilter, Router, TableToken}
 import graft.sinks.LandedTable
 
@@ -120,7 +120,7 @@ class LiveDrainSpec extends graft.SparkSuite {
           assert(flat(sink) == want)
           assert(tables.sorted == want.keys.toSeq.sorted)
           tables.foreach { tb =>
-            assert(LandedTable.flatRowCount(s"$sink/$tb") ==
+            assert(Footers.rowCount(s"$sink/$tb") ==
               want(tb).size.toLong, tb)
           }
           all
@@ -198,10 +198,10 @@ class LiveDrainSpec extends graft.SparkSuite {
         val sink = landedTables(n, deltas)
         val jobs = jobsDuring {
           LandedTable.finalizeAll(spark, sink).foreach(t =>
-            LandedTable.flatRowCount(s"$sink/$t"))
+            Footers.rowCount(s"$sink/$t"))
         }
         assert(Fs.listNames(sink).count(_.contains(".")) == n)
-        assert(LandedTable.flatRowCount(s"$sink/app.t00") ==
+        assert(Footers.rowCount(s"$sink/app.t00") ==
           20L + 10L * deltas)
         jobs
       }
