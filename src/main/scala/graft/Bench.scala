@@ -1,10 +1,27 @@
 package graft
 
+import scala.collection.mutable.ArrayBuffer
+import scala.util.control.NonFatal
+
+import org.apache.spark.executor.TaskMetrics
+import org.apache.spark.scheduler.{SparkListener,
+  SparkListenerStageCompleted, StageInfo}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PlanBridge
 
-/** Benchmark main: times every registered query on SPARK_GRAFT_SF_DIR and
-  * prints ONE JSON line for the driver.
+/** Benchmark main and the one query harness:
+  * `runMain graft.Bench [sfDir] [qNNN|full_name …] [--force]`
+  * (sfDir defaults to SPARK_GRAFT_SF_DIR, else the sf0.1 test data).
+  *
+  *  - With no selector it times every registered query and prints ONE
+  *    machine-read JSON line; per-query medians, mins and stage stats
+  *    go to `bench_queries.json`.
+  *  - With selectors it times only the selected queries and prints, for
+  *    each, its formatted physical plan, the warm run's `[stage]` lines
+  *    (wall/executor/CPU/GC time, input and shuffle volumes, spill) and
+  *    a `[qtime]` min/median/max line — so the dominant stage is a
+  *    fact, not a guess.
   *
   * Methodology:
   *  - the session is warmed up first (JVM + codegen + parquet footer
@@ -22,6 +39,8 @@ import org.apache.spark.sql.functions._
   */
 object Bench {
 
+  type Query = (SparkSession, String) => DataFrame
+
   private def runNoop(df: DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
 
@@ -31,15 +50,125 @@ object Bench {
     (System.nanoTime() - t0) / 1e9
   }
 
-  /** Sorted [min, median, max] of 3 timed runs of `f`. Reporting the
-    * spread makes a contended record self-evident (max ≫ min ⇒ machine
-    * jitter; min high too ⇒ genuinely slow plan) — the r2/r3 bench
-    * whiplash was exactly this ambiguity.
-    */
-  private def timeTriple(f: => Unit): Seq[Double] =
-    Seq.fill(3)(time(f)).sorted
+  private def timeMedian(f: => Unit): Double =
+    Seq.fill(3)(time(f)).sorted.apply(1)
 
-  private def timeMedian(f: => Unit): Double = timeTriple(f)(1)
+  /** The plan settings every harnessed query runs under, set once for
+    * both Bench and Verify, so Verify checks the plans Bench times.
+    */
+  def queryPlanSettings(spark: SparkSession): Unit = {
+    // Post-shuffle coalescing floor: AQE's default 1 MB
+    // minPartitionSize sizes partitions by BYTES, but the state-fold
+    // and codec stages are CPU-dense per byte — a 15 MB shuffle
+    // coalesced to 11 tasks leaves 21 of 32 cores idle for the most
+    // expensive stages. 256 KB lets parallelismFirst (default on)
+    // actually reach the core count; at production shuffle volumes
+    // every partition clears either floor, so the setting is inert
+    // at scale.
+    spark.conf.set(
+      "spark.sql.adaptive.coalescePartitions.minPartitionSize", "256k")
+    // Spark's default 10 MB threshold shuffles both sides of a join
+    // whose small side (a dimension table, a per-key aggregate) is
+    // 10–64 MB at bench scale; broadcast it instead
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "64MB")
+  }
+
+  /** A query selector is `qNNN` or a full query name. Anything else is
+    * the sf dir, including a path whose basename starts with `q`.
+    */
+  private[graft] def isSelector(a: String): Boolean =
+    a.matches("q\\d+(_.*)?")
+
+  /** `[sfDir] [selector …] [--force]` → (sf dir, selectors). */
+  private[graft] def parseArgs(args: Seq[String],
+      defaultSf: String): (String, Seq[String]) = {
+    val (sels, rest) = args.filterNot(_ == "--force").partition(isSelector)
+    require(rest.size <= 1, s"one sf dir expected, got ${rest.mkString(" ")}")
+    (rest.headOption.getOrElse(defaultSf), sels)
+  }
+
+  /** The registered names the selectors pick, matched up to the first
+    * underscore exactly (`q15` does not pick q150–q159). A selector that
+    * picks nothing is an error, not an empty run.
+    */
+  private[graft] def selected(sels: Seq[String],
+      names: Seq[String]): Seq[String] =
+    sels.flatMap { s =>
+      val hit = names.filter(n => n == s || n.takeWhile(_ != '_') == s)
+      require(hit.nonEmpty, s"no registered query matches $s")
+      hit
+    }.distinct
+
+  /** Stages completed since the last [[drain]], from the listener bus. */
+  private final class StageLog extends SparkListener {
+    private val done = ArrayBuffer.empty[StageInfo]
+    override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
+      done.synchronized { done += s.stageInfo; () }
+    def drain(spark: SparkSession): Seq[StageInfo] = {
+      PlanBridge.settleListeners(spark)
+      done.synchronized { val out = done.toSeq; done.clear(); out }
+    }
+  }
+
+  /** One query's sorted [min, median, max] seconds and the stages its
+    * last (warm) run completed.
+    */
+  private[graft] final case class Timing(secs: Seq[Double],
+      stages: Seq[StageInfo])
+
+  /** Time each query 3× into the noop sink. A query that throws fails
+    * the harness with its name: a failure must not read as a fast query.
+    */
+  private[graft] def timeQueries(spark: SparkSession, sfDir: String,
+      queries: Seq[(String, Query)]): Seq[(String, Timing)] = {
+    val log = new StageLog
+    spark.sparkContext.addSparkListener(log)
+    try {
+      log.drain(spark)
+      queries.map { case (name, fn) =>
+        val runs =
+          try Seq.fill(3) {
+            val sec = time(runNoop(fn(spark, sfDir)))
+            (sec, log.drain(spark))
+          } catch { case NonFatal(e) =>
+            throw new RuntimeException(
+              s"bench query $name failed: ${e.getMessage}", e)
+          } finally
+            // drain merger-pinned caches between queries: state-face
+            // fixtures pin frames to the merge lifecycle, released in
+            // production by the landed-table writer's post-write hook —
+            // the noop sink has no writer, so without this drain the
+            // last fixture's cache would pressure every later query's
+            // memory (untimed)
+            operators.RedisStateOps.Merger.release()
+        name -> Timing(runs.map(_._1).sorted, runs.last._2)
+      }
+    } finally spark.sparkContext.removeSparkListener(log)
+  }
+
+  private def stageLine(si: StageInfo): String = {
+    val m = si.taskMetrics
+    val wall = (for {a <- si.completionTime; b <- si.submissionTime}
+      yield a - b).getOrElse(-1L)
+    f"[stage] ${si.stageId}%4d tasks=${si.numTasks}%3d " +
+      f"wall=${wall}%5dms exec=${m.executorRunTime}%6dms " +
+      f"cpu=${m.executorCpuTime / 1000000}%6dms " +
+      f"gc=${m.jvmGCTime}%5dms " +
+      f"in=${m.inputMetrics.bytesRead / 1e6}%8.1fMB " +
+      f"sr=${m.shuffleReadMetrics.totalBytesRead / 1e6}%7.1fMB " +
+      f"sw=${m.shuffleWriteMetrics.bytesWritten / 1e6}%7.1fMB " +
+      f"spill=${m.diskBytesSpilled / 1e6}%6.1fMB  " +
+      si.name.linesIterator.next().take(70)
+  }
+
+  private def statsJson(stages: Seq[StageInfo]): String = {
+    def sum(f: TaskMetrics => Long) = stages.map(si => f(si.taskMetrics)).sum
+    s"""{"stages":${stages.size},""" +
+      s""""shuffle_read_bytes":${sum(_.shuffleReadMetrics.totalBytesRead)},""" +
+      s""""shuffle_write_bytes":${sum(_.shuffleWriteMetrics.bytesWritten)},""" +
+      s""""spill_bytes":${sum(_.diskBytesSpilled)},""" +
+      s""""gc_ms":${sum(_.jvmGCTime)}}"""
+  }
 
   /** 1-minute load average — stamped into both outputs so a contended
     * snapshot self-identifies (three rounds of judge adjudication have
@@ -85,9 +214,11 @@ object Bench {
   }
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
+    val defaultSf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
       "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val (sfDir, sels) = parseArgs(args.toSeq, defaultSf)
+    val queries = SparkEntry.queries.toSeq.sortBy(_._1)
+    val picked = selected(sels, queries.map(_._1))
     // Load gate (round-15 verdict item 7): WARN-and-wait while the
     // box is loaded, then refuse with a nonzero exit unless --force
     // (or SPARK_GRAFT_BENCH_FORCE=1) — a loaded run's medians are
@@ -108,50 +239,33 @@ object Bench {
         s""""hint":"re-run on a quiet box or pass --force"}""")
       sys.exit(2)
     }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // a loaded box (or a long GC pause on a busy executor) must not
-      // tear the session down: the local heartbeat shares one JVM, so
-      // an expiry is always a false positive here — seen once when a
-      // concurrent DuckDB sweep starved the driver for >120s
-      .config("spark.network.timeout", "600s")
-      .config("spark.executor.heartbeatInterval", "60s")
-      // Post-shuffle coalescing floor: AQE's default 1 MB
-      // minPartitionSize sizes partitions by BYTES, but the state-fold
-      // and codec stages are CPU-dense per byte — a 15 MB shuffle
-      // coalesced to 11 tasks leaves 21 of 32 cores idle for the most
-      // expensive stages. 256 KB lets parallelismFirst (default on)
-      // actually reach the core count; at production shuffle volumes
-      // every partition clears either floor, so the setting is inert
-      // at scale. Overridable for experiments.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PARTITION", "256k"))
-      .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session("graft-bench")
+    try {
+      queryPlanSettings(spark)
+      // Warmup: JVM, whole-stage codegen, shuffle machinery, file listings.
+      spark.range(2000000).selectExpr("sum(id)").collect()
+      Tables.names.foreach(t =>
+        Tables.load(spark, sfDir, t).limit(1).collect())
+      if (sels.isEmpty) fullRun(spark, sfDir, queries, loadStart)
+      else {
+        val registry = queries.toMap
+        picked.foreach { name =>
+          println(s"===== $name =====")
+          registry(name)(spark, sfDir).explain("formatted")
+          val t = timeQueries(spark, sfDir,
+            Seq(name -> registry(name))).head._2
+          println(s"===== $name warm-run stages =====")
+          t.stages.foreach(si => println(stageLine(si)))
+          println(f"[qtime] $name: min=${t.secs(0)}%.2f " +
+            f"median=${t.secs(1)}%.2f max=${t.secs(2)}%.2f s")
+        }
+      }
+    } finally spark.stop()
+  }
 
-    // Warmup: JVM, whole-stage codegen, shuffle machinery, file listings.
-    spark.range(2000000).selectExpr("sum(id)").collect()
-    Tables.names.foreach(t =>
-      Tables.load(spark, sfDir, t).limit(1).collect())
-
-    val results = SparkEntry.queries.toSeq.sortBy(_._1).map {
-      case (name, fn) =>
-        val triple = try timeTriple(runNoop(fn(spark, sfDir)))
-          catch { case _: Throwable => Seq(-1.0, -1.0, -1.0) }
-        // drain merger-pinned caches between queries: state-face
-        // fixtures pin frames to the merge lifecycle, released in
-        // production by the landed-table writer's post-write hook —
-        // the noop sink has no writer, so without this drain the
-        // last fixture's cache would pressure every later query's
-        // memory. Timing methodology is unchanged (the drain runs
-        // outside the timed region).
-        operators.RedisStateOps.Merger.release()
-        name -> triple
-    }
+  private def fullRun(spark: SparkSession, sfDir: String,
+      queries: Seq[(String, Query)], loadStart: Double): Unit = {
+    val results = timeQueries(spark, sfDir, queries)
 
     // Bulk snapshot pipeline: full lineitem scan → route/annotate → sink.
     // The sf fixture is ONE parquet file with ONE row group — physically
@@ -159,9 +273,10 @@ object Bench {
     // the cluster size. A real snapshot source is many files/chunks (the
     // SnapshotChunker contract); re-shard once, UNTIMED, to recreate
     // that layout, then measure the pipeline at its design parallelism.
+    val cpus = Session.cpus
     val snapDir = java.nio.file.Files
       .createTempDirectory("graft-bench-li").toString
-    Tables.lineitem(spark, sfDir).repartition(cpus.toInt)
+    Tables.lineitem(spark, sfDir).repartition(cpus)
       .write.mode("overwrite").parquet(snapDir)
     // scan the shard set 8× per run (same files listed repeatedly): the
     // timed region grows from ~0.2 s — jitter-dominated even as a
@@ -180,12 +295,12 @@ object Bench {
 
     def fmt(d: Double): String = f"$d%.4f"
     def fmt3(d: Double): String = f"$d%.3f"
-    val total = results.map(_._2(1)).filter(_ >= 0).sum
+    val total = results.map(_._2.secs(1)).sum
     // Detail line first: full names, [min, median, max] triples — the
     // contention self-defense record (max ≫ min ⇒ jitter; min high too
     // ⇒ genuinely slow plan). For human/judge eyes scanning full stdout.
     val detail = results.map { case (k, t) =>
-      s""""$k":[${t.map(fmt).mkString(",")}]"""
+      s""""$k":[${t.secs.map(fmt).mkString(",")}]"""
     }.mkString("{", ",", "}")
     println(s"""{"metric":"detail_min_median_max","queries":$detail}""")
     // Per-query medians go to a FILE, not stdout: at 144 queries even the
@@ -193,15 +308,16 @@ object Bench {
     // stdout tail window in round 9 (BENCH_r09 recorded parsed:null). The
     // machine-read final line stays under ~200 bytes and carries the file
     // path so the full medians remain one read away.
-    val qs = results.map { case (k, t) =>
-      s""""${k.takeWhile(_ != '_')}":${fmt3(t(1))}"""
+    def byPrefix(f: Timing => String): String = results.map { case (k, t) =>
+      s""""${k.takeWhile(_ != '_')}":${f(t)}"""
     }.mkString("{", ",", "}")
     // mins alongside medians: min-of-3 is the contention-robust
     // number a judge compares across rounds (the median still rules
-    // the headline so a genuinely-slow plan can't hide)
-    val qmins = results.map { case (k, t) =>
-      s""""${k.takeWhile(_ != '_')}":${fmt3(t.head)}"""
-    }.mkString("{", ",", "}")
+    // the headline so a genuinely-slow plan can't hide); query_stats
+    // carry the warm run's stage count, shuffle bytes, spill and GC
+    val qs = byPrefix(t => fmt3(t.secs(1)))
+    val qmins = byPrefix(t => fmt3(t.secs.head))
+    val qstats = byPrefix(t => statsJson(t.stages))
     val loadEnd = load1
     val conditions =
       s""""load1_start":${fmt3(loadStart)},""" +
@@ -209,7 +325,7 @@ object Bench {
     val qPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
       "/root/repo/bench_queries.json")
     try java.nio.file.Files.write(java.nio.file.Paths.get(qPath),
-      (s"""{"queries":$qs,"query_mins":$qmins,""" +
+      (s"""{"queries":$qs,"query_mins":$qmins,"query_stats":$qstats,""" +
         s"""$conditions,"sf":"$sfDir"}""").getBytes("UTF-8"))
     catch { case _: Throwable => () } // bench result > medians file
     val rps =
@@ -218,6 +334,5 @@ object Bench {
     println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec",""" +
       s""""n_queries":${results.size},"queries_file":"$qPath",""" +
       s"""$rps,$conditions,"sf":"$sfDir"}""")
-    spark.stop()
   }
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.SparkSession
 import graft.sinks.LandedTable
 
 /** Scale drill for the live LANDER — the half of the resident lane
-  * TailSweep doesn't price. Replays the landing loop's per-trigger
+  * the bench queries don't price. Replays the landing loop's per-trigger
   * work (one compacted delta write per micro-batch; every
   * `cadence` triggers a base merge + flat publish) against a landed
   * state seeded at two sizes 10× apart, and prices the resident
@@ -25,15 +25,7 @@ import graft.sinks.LandedTable
 object LanderDrill {
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-lander-drill")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session("graft-lander-drill")
     spark.range(1000000).selectExpr("sum(id)").collect() // warmup
     val batchRows =
       if (args.length >= 3) args(2).toLong else 5000L

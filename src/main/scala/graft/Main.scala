@@ -12,25 +12,8 @@ import graft.config.{TaskConfig, TaskRunner}
   */
 object Main {
 
-  /** The local session every task entry point runs in:
-    * `local[$SPARK_GRAFT_CPUS]` (default 4) with as many shuffle
-    * partitions.
-    */
-  def session(appName: String): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(appName)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
-
   def main(args: Array[String]): Unit = {
-    val spark = session("graft-task")
+    val spark = Session("graft-task")
     try run(spark, args) finally spark.stop()
   }
 

@@ -33,7 +33,7 @@ object TaskCli {
           java.nio.file.Paths.get(args(3)))
         println(fmt(TaskManager.create(stateDir, args(2), ini)))
       case "start" =>
-        val spark = Main.session("graft-task-cli")
+        val spark = Session("graft-task-cli")
         try println(fmt(TaskManager.start(spark, stateDir, args(2))))
         finally spark.stop()
       case "list" => TaskManager.list(stateDir).foreach(m => println(fmt(m)))
@@ -50,7 +50,7 @@ object TaskCli {
       // restart failed ones with capped backoff, until interrupted.
       // GRAFT_WATCH_PASSES bounds the loop for scripted runs.
       case "watch" =>
-        val spark = Main.session("graft-task-watch")
+        val spark = Session("graft-task-watch")
         val passes = sys.env.get("GRAFT_WATCH_PASSES")
           .map(_.toInt).getOrElse(Int.MaxValue)
         val intervalMs = sys.env.get("GRAFT_WATCH_INTERVAL_MS")

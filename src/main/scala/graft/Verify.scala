@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -16,30 +15,8 @@ object Verify {
     }
     require(isData(sfDir), s"no lineitem.parquet under $sfDir")
     require(!isData(outDir), s"refusing to write into data dir $outDir")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // a loaded box (or a long GC pause on a busy executor) must not
-      // tear the session down: the local heartbeat shares one JVM, so
-      // an expiry is always a false positive here — seen once when a
-      // concurrent DuckDB sweep starved the driver for >120s
-      // Post-shuffle coalescing floor: AQE's default 1 MB
-      // minPartitionSize sizes partitions by BYTES, but the state-fold
-      // and codec stages are CPU-dense per byte — a 15 MB shuffle
-      // coalesced to 11 tasks leaves 21 of 32 cores idle for the most
-      // expensive stages. 256 KB lets parallelismFirst (default on)
-      // actually reach the core count; at production shuffle volumes
-      // every partition clears either floor, so the setting is inert
-      // at scale. Overridable for experiments.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PARTITION", "256k"))
-      .config("spark.network.timeout", "600s")
-      .config("spark.executor.heartbeatInterval", "60s")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session("graft-verify")
+    Bench.queryPlanSettings(spark)
     new java.io.File(outDir).mkdirs()
     // GRAFT_VERIFY_SKIP: comma-separated query names to leave out of
     // BOTH the dump and the oracle json — tools/sweep.py uses it to

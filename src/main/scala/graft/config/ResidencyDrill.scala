@@ -48,15 +48,7 @@ object ResidencyDrill {
     // SORT...STORE) that must NOT tombstone, and sketch surgery
     // (PFADD) that must, over bounded key families
     val mix = if (args.length >= 6) args(5) else "clean"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-residency-drill")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session("graft-residency-drill")
     spark.range(1000000).selectExpr("sum(id)").collect() // warmup
 
     val sink = java.nio.file.Files

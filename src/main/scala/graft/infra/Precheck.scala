@@ -13,34 +13,25 @@ object Precheck {
 
   final case class CheckResult(item: String, ok: Boolean, detail: String)
 
-  /** Source connectivity: can the path be listed and read? */
+  /** Source connectivity: does the path hold a readable parquet footer?
+    * Read on the driver, so the check starts no Spark job.
+    */
   def checkSourceReadable(spark: SparkSession, path: String): CheckResult =
-    try {
-      spark.read.parquet(path).schema
-      CheckResult("source_readable", ok = true, path)
-    } catch {
-      case e: Exception =>
-        CheckResult("source_readable", ok = false,
-          s"$path: ${e.getMessage.linesIterator.next()}")
+    readSchema(spark, path) match {
+      case Right(_) => CheckResult("source_readable", ok = true, path)
+      case Left(err) =>
+        CheckResult("source_readable", ok = false, s"$path: $err")
     }
 
-  /** Struct existence: every required table present. Probes through
-    * the Hadoop FileSystem API so the check works on any configured
-    * scheme (s3a/hdfs/file) — a `java.io.File` probe answers "no" for
-    * every object-store path and would mask the real read error.
+  /** `path`'s schema from its first data file's footer, or why there is
+    * none: no data file, or one that is not parquet.
     */
-  def checkTablesExist(spark: SparkSession, dir: String,
-      tables: Seq[String]): Seq[CheckResult] =
-    tables.map { t =>
-      val p = new org.apache.hadoop.fs.Path(s"$dir/$t.parquet")
-      val exists =
-        (try {
-          p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-            .exists(p)
-        } catch { case _: Exception => false }) ||
-        (try { spark.read.parquet(p.toString).schema; true }
-        catch { case _: Exception => false })
-      CheckResult("table_exists", exists, t)
+  private def readSchema(spark: SparkSession,
+      path: String): Either[String, StructType] =
+    try Footers.schema(spark, path).toRight("no parquet data file")
+    catch { case e: Exception =>
+      Left(Option(e.getMessage).flatMap(_.linesIterator.nextOption())
+        .getOrElse(e.getClass.getName))
     }
 
   /** Table identity: a declared key must exist in the schema and be
@@ -240,7 +231,6 @@ object Precheck {
           "explicit opt-out is for audit trails with external purges")
     else CheckResult("capture_retention", ok = true, "")
 
-  /** Run the standard battery for a snapshot task over parquet tables. */
   /** Precheck battery for the curation-family task kinds (curation /
     * curation_stream / loader / warc) — the struct_existed /
     * table_structs analog for the corpus side: the reference gates
@@ -275,15 +265,17 @@ object Precheck {
       val (fs, p) = hfs(s"$dir/documents.parquet")
       if (fs.exists(p)) s"$dir/documents.parquet" else dir
     }
-    val readable = checkSourceReadable(spark, docsPath)
-    if (!readable.ok) {
-      val (fs, p) = hfs(dir)
-      if (allowEmpty && fs.exists(p) && fs.getFileStatus(p).isDirectory)
-        return Seq(CheckResult("source_readable", ok = true,
-          s"$dir: empty spool (schema deferred to the stream reader)"))
-      return Seq(readable)
+    val schema = readSchema(spark, docsPath) match {
+      case Right(sc) => sc
+      case Left(err) =>
+        val (fs, p) = hfs(dir)
+        if (allowEmpty && fs.exists(p) && fs.getFileStatus(p).isDirectory)
+          return Seq(CheckResult("source_readable", ok = true,
+            s"$dir: empty spool (schema deferred to the stream reader)"))
+        return Seq(CheckResult("source_readable", ok = false,
+          s"$docsPath: $err"))
     }
-    val schema = spark.read.parquet(docsPath).schema
+    val readable = CheckResult("source_readable", ok = true, docsPath)
     def field(name: String): Option[StructField] =
       schema.fields.find(_.name == name)
     val hasDoc = field("doc_id") match {
@@ -316,18 +308,20 @@ object Precheck {
     Seq(readable, hasDoc, hasText) ++ ts
   }
 
+  /** Run the standard battery for a snapshot task over parquet tables,
+    * one footer read per table.
+    */
   def runAll(spark: SparkSession, dir: String, tables: Seq[String],
-      keysByTable: Map[String, Seq[String]]): Seq[CheckResult] = {
-    val base = tables.flatMap { t =>
-      val readable = checkSourceReadable(spark, s"$dir/$t.parquet")
-      if (!readable.ok) Seq(readable.copy(detail = t))
-      else {
-        val schema = spark.read.parquet(s"$dir/$t.parquet").schema
-        Seq(readable.copy(detail = t),
-          checkKeys(schema, keysByTable.getOrElse(t, Nil), t),
-          checkTypes(schema, t))
+      keysByTable: Map[String, Seq[String]]): Seq[CheckResult] =
+    tables.flatMap { t =>
+      val path = s"$dir/$t.parquet"
+      readSchema(spark, path) match {
+        case Left(err) =>
+          Seq(CheckResult("source_readable", ok = false, s"$path: $err"))
+        case Right(schema) =>
+          Seq(CheckResult("source_readable", ok = true, t),
+            checkKeys(schema, keysByTable.getOrElse(t, Nil), t),
+            checkTypes(schema, t))
       }
     }
-    base
-  }
 }

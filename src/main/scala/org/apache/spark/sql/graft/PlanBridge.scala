@@ -9,7 +9,8 @@ import org.apache.spark.sql.classic
   * `Dataset.ofRows`, which Spark scopes to its own `sql` package — the
   * same access pattern every plan-extending library uses (Delta, Sedona,
   * Pathling's SqlStrategy setup). Everything else in graft goes through
-  * the public API; only plan-node construction passes through here.
+  * the public API; only plan-node construction and the listener-bus
+  * drain pass through here.
   */
 object PlanBridge {
 
@@ -26,4 +27,11 @@ object PlanBridge {
     */
   def analyzed(df: org.apache.spark.sql.DataFrame): LogicalPlan =
     df.asInstanceOf[classic.Dataset[_]].queryExecution.analyzed
+
+  /** Block until every listener has seen every event posted so far:
+    * Spark delivers listener events asynchronously and scopes the
+    * drain to its own package.
+    */
+  def settleListeners(spark: org.apache.spark.sql.SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
 }

@@ -1,8 +1,13 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.atomic.AtomicInteger
+
 import scala.collection.mutable.ArrayBuffer
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PlanBridge
 import org.apache.spark.sql.types._
 
 import graft.infra.Precheck
@@ -278,6 +283,43 @@ class InfraSpec extends SparkSuite {
   test("precheck flags missing source") {
     val r = Precheck.checkSourceReadable(spark, "/tmp/nope_missing.parquet")
     assert(!r.ok)
+  }
+
+  test("precheck reads footers: no Spark job, and a missing dir or a " +
+      "non-parquet file is not readable") {
+    val group = "precheck-jobs"
+    val jobs = new AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        if (js.properties != null &&
+            js.properties.getProperty("spark.jobGroup.id") == group) {
+          jobs.incrementAndGet(); ()
+        }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val res = try {
+      spark.sparkContext.setJobGroup(group, "precheck")
+      try Precheck.runAll(spark, sf, Seq("orders", "lineitem"),
+        Map("orders" -> Seq("o_orderkey")))
+      finally spark.sparkContext.clearJobGroup()
+    } finally {
+      PlanBridge.settleListeners(spark)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(jobs.get == 0)
+    assert(res.filter(_.item == "source_readable").map(_.detail) ==
+      Seq("orders", "lineitem"))
+    assert(res.forall(r => r.ok || r.item == "pk_present"))
+
+    val dir = Files.createTempDirectory("precheck-unreadable").toString
+    Files.writeString(Paths.get(dir, "junk.parquet"), "not parquet")
+    val bad = Precheck.runAll(spark, dir, Seq("missing", "junk"), Map.empty)
+    assert(bad.map(r => (r.item, r.ok)) ==
+      Seq(("source_readable", false), ("source_readable", false)))
+    assert(bad(0).detail.startsWith(s"$dir/missing.parquet: "))
+    assert(bad(1).detail.startsWith(s"$dir/junk.parquet: "))
+    assert(!Precheck.checkSourceReadable(spark, s"$dir/junk.parquet").ok)
+    assert(!Precheck.checkSourceReadable(spark, s"$dir/missing.parquet").ok)
   }
 }
 
