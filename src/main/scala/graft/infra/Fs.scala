@@ -16,13 +16,19 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * Config resolution: the active session's hadoopConfiguration on the
   * driver; on executors (no active session) the default `Configuration`
   * loads core-site.xml from the executor classpath — the standard
-  * DSv2-reader posture when no per-partition config is threaded.
+  * DSv2-reader posture when no per-partition config is threaded. That
+  * default is built once per JVM: a fresh `Configuration` parses its
+  * XML resources on first lookup, a cost every executor segment read
+  * would pay again. This is the only `new Configuration()` in src/main
+  * (SessionDisciplineSpec).
   */
 object Fs {
+  private lazy val default = new Configuration()
+
   def conf: Configuration =
     org.apache.spark.sql.SparkSession.getActiveSession
       .map(_.sparkContext.hadoopConfiguration)
-      .getOrElse(new Configuration())
+      .getOrElse(default)
 
   def fs(path: String): FileSystem = new Path(path).getFileSystem(conf)
 

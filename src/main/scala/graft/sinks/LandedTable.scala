@@ -374,10 +374,15 @@ object LandedTable {
     * tables with several (resident cadence, crash leftovers) share
     * one compaction on (`_t`, key). The write is partitioned by `_t`
     * into an underscore-prefixed, dot-free stage beside the tables
-    * (never listed as a table); the per-table RENAME of
-    * `_t=<i>` into that table's `_base-N` stays the commit, so a
-    * crash after any number of commits leaves every table readable
-    * and the next call merges exactly the uncommitted ones.
+    * (never listed as a table) by at most one task per core, or one
+    * per `spark.sql.files.maxPartitionBytes` of input when that is
+    * more: uncoalesced, the union of per-table scans runs (and writes)
+    * one task per delta part file, each decoding the write job's
+    * Hadoop conf, and the flat publish byte-copies every file written.
+    * The per-table RENAME of `_t=<i>` into that table's `_base-N`
+    * stays the commit, so a crash after any number of commits leaves
+    * every table readable and the next call merges exactly the
+    * uncommitted ones.
     * `afterCommits` sees the number of tables committed so far, before
     * each commit and after the last (the crash-point test seam).
     * Returns the tables it merged.
@@ -400,6 +405,11 @@ object LandedTable {
     }
     val (single, multi) = deltas.partition(_._1.ids.size == 1)
     val withBase = deltas.filter(_._1.base.nonEmpty)
+    val sizes = todo.map(p => deltaBytes(p.table, p.ids))
+    val input = sizes.sum +
+      todo.flatMap(_.base).map { case (_, path) => Fs.dirSize(path) }.sum
+    val tasks = math.max(spark.sparkContext.defaultParallelism,
+      (input / spark.sessionState.conf.filesMaxPartitionBytes).toInt + 1)
     val merged = lastWriterWins(spark,
       union(todo.zipWithIndex.flatMap { case (p, i) =>
         p.base.map { case (_, path) =>
@@ -408,8 +418,8 @@ object LandedTable {
       }),
       union(single.map(_._2)), union(multi.map(_._2)),
       union(withBase.map(_._2)),
-      withBase.map { case (p, _) => deltaBytes(p.table, p.ids) }.sum)
-    merged.write.mode(SaveMode.Overwrite).partitionBy("_t")
+      todo.zip(sizes).collect { case (p, n) if p.base.nonEmpty => n }.sum)
+    merged.coalesce(tasks).write.mode(SaveMode.Overwrite).partitionBy("_t")
       .parquet(stage)
     // a table whose merged state is empty wrote no partition dir; its
     // base still needs a (schema-only) part file, or the published

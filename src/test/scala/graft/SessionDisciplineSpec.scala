@@ -6,7 +6,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * SparkSession through [[graft.Session]], so two numbers taken by two
   * mains run under the same master, partitions and timeouts. This spec
   * greps the source tree at test time, so a re-pasted builder or a
-  * hard-coded core count fails CI.
+  * hard-coded core count fails CI. The same goes for Hadoop confs: a
+  * fresh `Configuration` parses its XML resources on first lookup, so
+  * src/main builds exactly one (`Fs`'s per-JVM default), and no footer
+  * read goes through the single-argument `ParquetFileReader.open`,
+  * which builds its options from a fresh one per file.
   */
 class SessionDisciplineSpec extends AnyFunSuite {
 
@@ -36,6 +40,39 @@ class SessionDisciplineSpec extends AnyFunSuite {
     val offenders = mainCode.collect {
       case (rel, code) if "local\\[\\d+\\]".r.findFirstIn(code).isDefined =>
         rel
+    }
+    assert(offenders.isEmpty, offenders.mkString(", "))
+  }
+
+  test("src/main builds one Hadoop Configuration, in graft/infra/Fs.scala") {
+    val built = mainCode.flatMap { case (rel, code) =>
+      Seq.fill("""new\s+(org\.apache\.hadoop\.conf\.)?Configuration\s*\("""
+        .r.findAllIn(code).size)(rel)
+    }
+    assert(built == Seq("graft/infra/Fs.scala"), built.mkString(", "))
+  }
+
+  test("no src/main footer read uses the one-argument " +
+      "ParquetFileReader.open") {
+    /** Top-level argument count of the call whose `(` is at `open`. */
+    def arity(code: String, open: Int): Int = {
+      var depth = 1
+      var commas = 0
+      var i = open + 1
+      while (depth > 0) {
+        code(i) match {
+          case '(' | '[' | '{' => depth += 1
+          case ')' | ']' | '}' => depth -= 1
+          case ',' if depth == 1 => commas += 1
+          case _ => ()
+        }
+        i += 1
+      }
+      commas + 1
+    }
+    val offenders = mainCode.flatMap { case (rel, code) =>
+      """ParquetFileReader\.open\s*\(""".r.findAllMatchIn(code)
+        .filter(m => arity(code, m.end - 1) == 1).map(_ => rel)
     }
     assert(offenders.isEmpty, offenders.mkString(", "))
   }

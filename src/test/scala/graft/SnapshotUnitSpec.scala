@@ -9,7 +9,7 @@ import org.apache.spark.sql.AnalysisException
 import org.apache.spark.sql.functions._
 
 import graft.config.{TaskConfig, TaskRunner}
-import graft.infra.Footers
+import graft.infra.{Footers, Fs}
 import graft.sinks.StreamLoadSink
 
 /** A snapshot unit is one Spark job — the write. The source schema comes
@@ -139,6 +139,32 @@ class SnapshotUnitSpec extends SparkSuite {
       "orders")
     assert(empty.rows == 0 && written(empty) == 0)
     assert(Footers.rowCount(s"$sink/missing") == 0)
+  }
+
+  test("a filter predicate in the session's Hadoop conf does not " +
+      "change the footer row count") {
+    import org.apache.parquet.HadoopReadOptions
+    import org.apache.parquet.filter2.predicate.FilterApi
+    import org.apache.parquet.hadoop.{ParquetFileReader, ParquetInputFormat}
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val out = s"${tmp("snap-unit-pred")}/orders"
+    Tables.orders(spark, sf).repartition(3).write.parquet(out)
+    val conf = spark.sparkContext.hadoopConfiguration
+    // every order key is positive, so row-group stats drop every group
+    ParquetInputFormat.setFilterPredicate(conf, FilterApi.lt(
+      FilterApi.longColumn("o_orderkey"), java.lang.Long.valueOf(0L)))
+    val (filtered, counted) = try {
+      val part = Fs.listNames(out).filter(_.endsWith(".parquet")).head
+      val reader = ParquetFileReader.open(
+        HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(
+          s"$out/$part"), conf), HadoopReadOptions.builder(conf).build())
+      val f = try reader.getRecordCount finally reader.close()
+      (f, Footers.rowCount(out))
+    } finally conf.unset(ParquetInputFormat.FILTER_PREDICATE)
+    // the predicate bites a reader that takes its filter from the conf
+    assert(filtered == 0)
+    assert(counted > 0)
+    assert(counted == spark.read.parquet(out).count())
   }
 
   test("a missing or empty source table fails the load") {

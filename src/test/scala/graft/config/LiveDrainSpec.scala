@@ -11,8 +11,9 @@ import graft.sinks.LandedTable
   * `LandedTable.compactAll`/`finalizeAll` — against a naive
   * last-writer-wins replay: routed-key compaction within a batch, one
   * merge plan over every landed table, the single-delta rule, a
-  * constant Spark job count whatever the table count, and restart
-  * after a crash between any two per-table commits.
+  * constant Spark job count whatever the table count, a merge write of
+  * at most one task per core, and restart after a crash between any
+  * two per-table commits.
   */
 class LiveDrainSpec extends graft.SparkSuite {
 
@@ -210,6 +211,43 @@ class LiveDrainSpec extends graft.SparkSuite {
         s"$deltas outstanding deltas per table: finalize ran " +
           s"${counts.head} jobs for 1 table, ${counts.last} for 12")
     }
+  }
+
+  test("compactAll's write runs at most one task per core, not one " +
+      "per delta file") {
+    val sink = tmp("drain-tasks")
+    val s = spark
+    import s.implicits._
+    val tables = (0 until 12).map { i =>
+      val table = f"$sink/app.t$i%02d"
+      val src = s"$sink/_src-$i"
+      (0 until 20).map(k => (0L, k.toLong, "insert", k.toString, s"v$i-$k"))
+        .toDF("bseq", "seq", "row_type", "key", "payload")
+        .repartition(4).write.parquet(src)
+      LandedTable.adoptDelta(src, table, 0L)
+      assert(Fs.listNames(s"$table/_delta/d00000000")
+        .count(_.endsWith(".parquet")) == 4)
+      table
+    }
+    val widest = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onStageCompleted(st: org.apache.spark.scheduler
+          .SparkListenerStageCompleted): Unit = {
+        widest.accumulateAndGet(st.stageInfo.numTasks,
+          (a, b) => math.max(a, b)); ()
+      }
+    }
+    org.apache.spark.sql.graft.PlanBridge.settleListeners(spark)
+    spark.sparkContext.addSparkListener(listener)
+    try assert(LandedTable.compactAll(spark, tables) == tables)
+    finally {
+      org.apache.spark.sql.graft.PlanBridge.settleListeners(spark)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(widest.get > 0)
+    assert(widest.get <= spark.sparkContext.defaultParallelism,
+      s"the compaction write ran ${widest.get} tasks")
+    tables.foreach(t => assert(LandedTable.read(spark, t).count() == 20, t))
   }
 
   test("a crash after k of n per-table commits, for every k, then a " +
