@@ -3,6 +3,7 @@ package graft.config
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.infra.Monitoring
 import graft.transport.{FsSegmentStore, LiveDial, MysqlReplicationPump,
   PumpPositions, Wire}
 
@@ -47,7 +48,7 @@ object LiveCdc {
       taskDir: String, dialOverride: Option[() => Wire] = None,
       onProgress: () => Unit = () => (),
       dialNodeOverride: Option[String => Wire] = None,
-      monitor: Option[graft.infra.Monitoring.Monitor] = None)
+      monitor: Monitoring.Monitor = Monitoring.landedFace())
       : Report =
     if (task.sourceDir.startsWith("mysql://"))
       runMysql(spark, task, taskDir, dialOverride, onProgress)
@@ -189,7 +190,7 @@ object LiveCdc {
   def runRedis(spark: SparkSession, task: TaskConfig.Task,
       taskDir: String, dialOverride: Option[() => Wire] = None,
       onProgress: () => Unit = () => (),
-      monitor: Option[graft.infra.Monitoring.Monitor] = None)
+      monitor: Monitoring.Monitor = Monitoring.landedFace())
       : Report = {
     val captureDir = s"$taskDir/capture"
     val store = new FsSegmentStore(captureDir)
@@ -272,7 +273,7 @@ object LiveCdc {
       taskDir: String, dialOverride: Option[() => Wire] = None,
       dialNodeOverride: Option[String => Wire] = None,
       onProgress: () => Unit = () => (),
-      monitor: Option[graft.infra.Monitoring.Monitor] = None)
+      monitor: Monitoring.Monitor = Monitoring.landedFace())
       : Report = {
     val captureDir = s"$taskDir/capture"
     val store = new FsSegmentStore(captureDir)
@@ -322,7 +323,7 @@ object LiveCdc {
       dialNodeOverride: Option[String => Wire] = None,
       triggerMs: Long = 500L,
       onProgress: () => Unit = () => (),
-      monitor: Option[graft.infra.Monitoring.Monitor] = None)
+      monitor: Monitoring.Monitor = Monitoring.landedFace())
       : Report = {
     val captureDir = s"$taskDir/capture"
     // listing-only view of the shared capture dir: each pump thread
@@ -615,7 +616,7 @@ object LiveCdc {
       triggerMs: Long = 500L,
       onProgress: () => Unit = () => (),
       dialNodeOverride: Option[String => Wire] = None,
-      monitor: Option[graft.infra.Monitoring.Monitor] = None)
+      monitor: Monitoring.Monitor = Monitoring.landedFace())
       : Report =
     if (task.sourceDir.startsWith("mysql://"))
       runMysqlResident(spark, task, taskDir, stop, dialOverride,
@@ -780,7 +781,7 @@ object LiveCdc {
       dialOverride: Option[() => Wire] = None,
       triggerMs: Long = 500L,
       onProgress: () => Unit = () => (),
-      monitor: Option[graft.infra.Monitoring.Monitor] = None)
+      monitor: Monitoring.Monitor = Monitoring.landedFace())
       : Report = {
     val captureDir = s"$taskDir/capture"
     val store = new FsSegmentStore(captureDir)

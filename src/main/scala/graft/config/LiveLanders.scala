@@ -3,7 +3,7 @@ package graft.config
 import org.apache.spark.sql.{Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.infra.{ConsumedLedger, Footers, Fs}
+import graft.infra.{ConsumedLedger, Footers, Fs, Monitoring}
 import graft.sinks.{LandedTable, TieredLog}
 
 /** The redis/mongo live-lane landing halves — SINGLE-PASS (round-13
@@ -61,7 +61,7 @@ private[config] object LiveLanders {
   final class RedisLander(spark: SparkSession,
       task: TaskConfig.Task, taskDir: String, captureDir: String,
       onProgress: () => Unit,
-      monitor: Option[graft.infra.Monitoring.Monitor] = None) {
+      monitor: Monitoring.Monitor = Monitoring.landedFace()) {
     val ledger = new ConsumedLedger(taskDir)
     private val sink = task.sinkDir
     private val stateTable = s"$sink/redis.state"
@@ -77,9 +77,9 @@ private[config] object LiveLanders {
       * verdict Missing #4): keys the fold lost track of (tombstones
       * hidden from the flat face) / total keys in the committed
       * base. Also published as the `face_tombstone_keys` /
-      * `face_total_keys` gauges when the caller supplies a monitor
-      * (TaskManager flushes it into the task log) — the number that
-      * decides whether the honest drops matter for a workload.
+      * `face_total_keys` gauges on `monitor` (TaskRunner flushes it
+      * into the task log) — the number that decides whether the
+      * honest drops matter for a workload.
       */
     var tombstonedKeys = 0L
     var trackedKeys = 0L
@@ -147,11 +147,9 @@ private[config] object LiveLanders {
       LandedTable.readBase(spark, stateTable).foreach { base =>
         trackedKeys = base.count()
         tombstonedKeys = math.max(0L, trackedKeys - stateCount())
-        monitor.foreach(_
-          .setCounter(graft.infra.Monitoring.FaceTombstoneKeys,
-            tombstonedKeys)
-          .setCounter(graft.infra.Monitoring.FaceTotalKeys,
-            trackedKeys))
+        monitor
+          .setCounter(Monitoring.FaceTombstoneKeys, tombstonedKeys)
+          .setCounter(Monitoring.FaceTotalKeys, trackedKeys)
       }
       TieredLog.fold(spark, s"$sink/redis.snapshot",
         foldable = ledger.contains)

@@ -11,9 +11,12 @@ import graft.operators.{Checker, Compaction}
   * (/root/reference/dt-task/src/task_runner.rs:153-263): expand the
   * filter against the catalog, wire extractor → route → sink per table,
   * report per-table progress. Here the catalog is the parquet fixture
-  * directory and the sink is a parquet directory (the applier/stream-load
-  * paths are exercised by their own modules); the wiring, filtering,
-  * routing, and check semantics are the product.
+  * directory. A snapshot unit writes parquet under the sink directory;
+  * a captured CDC stream (and the snapshot stage of snapshot_and_cdc)
+  * ships to the `[sinker]` warehouse by stream load; `sink_type=sql`
+  * renders statements to `sql.log`; a live source url lands tables
+  * through [[LiveCdc]]. The wiring, filtering, routing, and check
+  * semantics are the product.
   */
 object TaskRunner {
 
@@ -991,17 +994,16 @@ object TaskRunner {
       task.source.captureRetention)
     if (gate.detail.nonEmpty) caller.log(s"precheck ${gate.detail}")
     // the landers publish their face-completeness gauges here
-    val liveMon = new Monitoring.Monitor("landed_face",
-      "landed current-state face")
+    val liveMon = Monitoring.landedFace()
     val r =
       if (task.source.resident)
         LiveCdc.runResident(spark, task, caller.stateDir,
           stop = caller.stop, dialOverride = caller.liveDial,
           onProgress = caller.alive,
-          dialNodeOverride = caller.liveNodeDial, monitor = Some(liveMon))
+          dialNodeOverride = caller.liveNodeDial, monitor = liveMon)
       else LiveCdc.run(spark, task, caller.stateDir, caller.liveDial,
         onProgress = caller.alive,
-        dialNodeOverride = caller.liveNodeDial, monitor = Some(liveMon))
+        dialNodeOverride = caller.liveNodeDial, monitor = liveMon)
     caller.log(s"live_cdc segments=${r.segments} events=${r.events} " +
       s"position=${r.position._1}:${r.position._2} " +
       r.tables.map { case (t, n) => s"$t=$n" }.mkString(" "))

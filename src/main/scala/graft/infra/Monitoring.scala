@@ -285,6 +285,14 @@ object Monitoring {
     }
   }
 
+  /** A fresh monitor for the live landers' face-completeness gauges
+    * ([[FaceTombstoneKeys]] / [[FaceTotalKeys]]) — the live lanes'
+    * default, so a caller that does not read it costs only an empty
+    * monitor.
+    */
+  def landedFace(): Monitor =
+    new Monitor("landed_face", "landed current-state face")
+
   // ------------------------------------------------------ task metrics
   /** Derive the per-task metric map from role-tagged monitors —
     * task_monitor.rs:312-648. Roles are "extractor" / "pipeline" /

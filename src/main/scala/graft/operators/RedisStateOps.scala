@@ -1,11 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField,
   StructType}
-import org.apache.spark.unsafe.types.UTF8String
 
 /** The Redis CURRENT-STATE face (`redis.state`): the live lane's
   * landed answer to "what does the keyspace hold right now", built by
@@ -74,10 +73,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * tombstone. Typed ops against a key of another type fold as
   * no-ops — the server rejects them with WRONGTYPE, so the state
   * they'd build was never held. Replay semantics: op identity is the
-  * exact packed row, so a crash-window double landing dedupes
-  * exactly — non-idempotent ops (APPEND/INCR/pushes) still fold
-  * exactly once. A key written by TWO cluster shards in one window
-  * (mid-flight slot migration) lands only when both per-shard
+  * whole delta row ([[RedisStateOps.OpRow]] equality), so a
+  * crash-window double landing dedupes exactly — non-idempotent
+  * ops (APPEND/INCR/pushes) still fold exactly once. A key written
+  * by TWO cluster shards in one window (mid-flight slot migration)
+  * lands only when both per-shard
   * orderings fold to the same face (then dual-attributed, so either
   * owner's resync replaces it); otherwise it tombstones.
   */
@@ -98,6 +98,16 @@ object RedisStateOps {
     StructField("field", StringType),
     StructField("value", StringType),
     StructField("expire_ms", LongType)))
+
+  /** One delta row as the fold consumes it: [[DeltaSchema]] without
+    * `db` (the key carries it), fields named like the columns so
+    * `as[OpRow]` binds by name. A movement emission is an OpRow too:
+    * an `mvdata` row addressed to the destination key at its `mvin`'s
+    * (sseg, rank).
+    */
+  final case class OpRow(sseg: String, rank: Long, key: String,
+      op: String, value_type: String, field: String, value: String,
+      expire_ms: Option[Long])
 
   /** One state op. `ex` = expire ms (None = not set by this op). */
   final case class Op(key: String, op: String, vtype: String,
@@ -1384,54 +1394,12 @@ object RedisStateOps {
 
   // ---- the fold ------------------------------------------------------
 
-  /** Packed-op separators: fields are escaped so the pack round-trips
-    * arbitrary bytes (`\` -> `\\`, `\u0001` -> `\1`).
-    */
-  private def pesc(s: String): String = {
-    if (s == null) return ""
-    val sb = new java.lang.StringBuilder(s.length + 4)
-    var i = 0
-    while (i < s.length) {
-      s.charAt(i) match {
-        case '\\' => sb.append("\\\\")
-        case '\u0001' => sb.append("\\1")
-        case c => sb.append(c)
-      }
-      i += 1
-    }
-    sb.toString
-  }
-
-  private def punesc(s: String): String = {
-    if (s.indexOf('\\') < 0) return s
-    val sb = new java.lang.StringBuilder(s.length)
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\\' && i + 1 < s.length) {
-        s.charAt(i + 1) match {
-          case '\\' => sb.append('\\'); i += 2
-          case '1' => sb.append('\u0001'); i += 2
-          case o => sb.append(o); i += 2
-        }
-      } else { sb.append(c); i += 1 }
-    }
-    sb.toString
-  }
-
-  /** Pack one op row into the sortable string the merger's per-key
-    * sorted-group fold streams: `sseg\u0001 rank(zero-padded) \u0001
-    * op \u0001 vtype \u0001 field \u0001 value \u0001 ex`. Sorting
-    * the packed strings == sorting by (sseg, rank) because both lead
-    * and rank is fixed-width.
-    */
   /** Zero-pad a non-negative long to `width` digits — the hot-path
     * replacement for `f"...%0Nd"` (String.format re-parses its
-    * pattern on every call; these sites render once per op row /
-    * list element, millions of times per merge). Negative input
-    * falls back to String.format for byte-identical output
-    * (unreachable in practice: ranks and list indices are
-    * non-negative).
+    * pattern on every call; a list renders once per element,
+    * millions of times per merge). Negative input falls back to
+    * String.format for byte-identical output (unreachable in
+    * practice: list indices are non-negative).
     */
   private def zpad(n: Long, width: Int): String =
     if (n < 0) ("%0" + width + "d").format(n)
@@ -1445,40 +1413,6 @@ object RedisStateOps {
         sb.append(s).toString
       }
     }
-
-  private[operators] val packOpF =
-    (sseg: String, rank: Long, op: String, vtype: String,
-        field: String, value: String, ex: java.lang.Long) => {
-      val sb = new java.lang.StringBuilder()
-      sb.append(pesc(sseg)).append('\u0001')
-      sb.append(zpad(rank, 20)).append('\u0001')
-      sb.append(op).append('\u0001')
-      sb.append(pesc(vtype)).append('\u0001')
-      sb.append(pesc(field)).append('\u0001')
-      sb.append(pesc(value)).append('\u0001')
-      sb.append(if (ex == null) "" else ex.toString)
-      sb.toString
-    }
-
-  private def unpackOp(packed: String): (String, Long, Op) = {
-    val parts = new Array[String](7)
-    var start = 0
-    var idx = 0
-    var i = 0
-    while (i < packed.length && idx < 6) {
-      if (packed.charAt(i) == '\u0001') {
-        parts(idx) = packed.substring(start, i)
-        idx += 1
-        start = i + 1
-      }
-      i += 1
-    }
-    parts(6) = packed.substring(start)
-    val ex = if (parts(6).isEmpty) None else parts(6).toLongOption
-    (punesc(parts(0)), parts(1).toLong,
-      Op("", parts(2), punesc(parts(3)), punesc(parts(4)),
-        punesc(parts(5)), ex))
-  }
 
   /** 2^53 — the largest magnitude whose integers a double represents
     * exactly (and whose `toLong` is therefore faithful). Beyond it
@@ -3019,32 +2953,30 @@ object RedisStateOps {
     */
   private[operators] val DualNodeSep = '\u0002'
 
-  /** Fold one key: base payload (nullable) + packed ops (pre-sorted
-    * — the merger's sorted-group fold streams them in (sseg, rank)
-    * order) → new payload or null (dead key), plus the
-    * key's cross-key movement EMISSIONS: one (destination key,
-    * packed `mvdata` op) per `mvout` the fold applied, targeted at
-    * the paired `mvin`'s (sseg, rank) — the merger's second fold
-    * phase injects them into the destinations' op lists. Dedupes
-    * exact packed-row replays so a crash-window double landing
-    * applies every op (and emits every movement) exactly once.
+  /** Fold one key: base payload (nullable) + op rows (pre-sorted —
+    * the merger's sorted-group fold streams them in (sseg, rank)
+    * order) → new payload or null (dead key), plus the key's
+    * cross-key movement EMISSIONS: one `mvdata` op row per `mvout`
+    * the fold applied, addressed to the destination key at the
+    * paired `mvin`'s (sseg, rank) — the merger's second fold phase
+    * folds them with the destinations' own rows. Dedupes exact
+    * row replays so a crash-window double landing applies every op
+    * (and emits every movement) exactly once.
     */
   private[operators] def foldKeyEmit(key: String,
-      basePayload: String, packed: Seq[String],
-      resets: ResetPoints): (String, Seq[(String, String)]) =
-    foldKeyEmit(key, basePayload,
-      if (packed == null) Iterator.empty else packed.iterator,
-      resets)
+      basePayload: String, rows: Seq[OpRow],
+      resets: ResetPoints): (String, Seq[OpRow]) =
+    foldKeyEmit(key, basePayload, rows.iterator, resets)
 
   /** Iterator form — the merger's sorted-group fold consumes the
-    * shuffle-sorted op stream directly, so a key's packed ops are
-    * never materialized as an array outside the fold (the surviving
+    * shuffle-sorted op stream directly, so a key's rows are never
+    * materialized as an array outside the fold (the surviving
     * post-dedupe ops still buffer per key: the two-shard escape
     * below replays them in both orders).
     */
   private[operators] def foldKeyEmit(key: String,
-      basePayload: String, packed: Iterator[String],
-      resets: ResetPoints): (String, Seq[(String, String)]) = {
+      basePayload: String, rows: Iterator[OpRow],
+      resets: ResetPoints): (String, Seq[OpRow]) = {
     val db = {
       val i = if (key == null) -1 else key.indexOf('\u0000')
       if (i <= 0) -2L
@@ -3058,38 +2990,33 @@ object RedisStateOps {
     def baseAlive(s: St): Boolean =
       s.n.split(DualNodeSep)
         .forall(n => resets.point(n, db).isEmpty)
-    // replay dedupe (exact packed-row equality — a crash-window
-    // double landing duplicates whole rows) + reset scoping, with
-    // each op's provenance kept for the per-shard ordering below
+    // replay dedupe (exact row equality — a crash-window double
+    // landing duplicates whole rows, and the sort on every column
+    // makes them adjacent) + reset scoping, with each op's
+    // provenance kept for the per-shard ordering below
     val surviving: Vector[(String, Long, String, Op)] = {
       val b = Vector.newBuilder[(String, Long, String, Op)]
-      var lastP: String = null
-      packed.foreach { p =>
-        // a delta row with a null rank packs to null: fail on it by
-        // key instead of dropping the op or NPE-ing in unpackOp
-        if (p == null) throw new IllegalStateException(
-          "state-face fold: null packed op for key " +
-            key.replace('\u0000', ':') + " (a delta row with a null " +
-            "rank)")
-        if (p != lastP) {
-          lastP = p
-          val (sseg, rank, op) = unpackOp(p)
-          val node = nodeOf(sseg)
+      var last: OpRow = null
+      rows.foreach { r =>
+        if (r != last) {
+          last = r
+          val node = nodeOf(r.sseg)
           // an op preceding its own node's latest reset is dead
-          if (resets.keepOp(node, db, sseg, rank))
-            b += ((sseg, rank, node, op))
+          if (resets.keepOp(node, db, r.sseg, r.rank))
+            b += ((r.sseg, r.rank, node, Op(r.key, r.op, r.value_type,
+              r.field, r.value, r.expire_ms)))
         }
       }
       b.result()
     }
     def run(ops: Vector[(String, Long, String, Op)],
-        emit: (String, String) => Unit): Option[St] = {
+        emit: OpRow => Unit): Option[St] = {
       var st = Option(basePayload).filter(_.nonEmpty).map(parse)
         .filter(baseAlive)
       // the mvdata ops IMMEDIATELY preceding their mvin in sort
-      // order (same (sseg, rank), "mvdata" < "mvin"
-      // lexicographically) — a buffer because multi-source kinds
-      // (the set-algebra stores) pair several emissions to one mvin
+      // order (same (sseg, rank), and "mvdata" < "mvin") — a buffer
+      // because multi-source kinds (the set-algebra stores) pair
+      // several emissions to one mvin
       var pendSseg: String = null
       var pendRank: Long = 0L
       val pendData = scala.collection.mutable.ArrayBuffer[String]()
@@ -3106,9 +3033,8 @@ object RedisStateOps {
                 op.value.dropWhile(_ != '/').drop(1).toLongOption
                   .getOrElse(1L)
               else 1L
-            emit(op.field,
-              packOpF(sseg, rank + off, "mvdata", "", "",
-                mvoutData(st, op), null))
+            emit(OpRow(sseg, rank + off, op.field, "mvdata", "", "",
+              mvoutData(st, op), None))
             val wasTomb = st.exists(_.t == TombType)
             val prevN = if (wasTomb) st.get.n else null
             st = mvoutApply(st, op)
@@ -3163,11 +3089,11 @@ object RedisStateOps {
       }
       st
     }
-    val emitted = Vector.newBuilder[(String, String)]
+    val emitted = Vector.newBuilder[OpRow]
     val nodes = surviving.map(_._3).distinct
     val st: Option[St] =
       if (nodes.size <= 1)
-        run(surviving, (dk, mop) => { emitted += ((dk, mop)); () })
+        run(surviving, e => { emitted += e; () })
       else if (nodes.size == 2) {
         // ops for ONE key from TWO cluster shards inside one merge
         // window = a slot migration caught mid-flight: segment-name
@@ -3189,7 +3115,7 @@ object RedisStateOps {
         // emissions are SUPPRESSED in a multi-shard window — their
         // content depends on the unknowable cross-shard order, so
         // the destination honestly tombstones (no mvdata arrives)
-        val drop = (_: String, _: String) => ()
+        val drop = (_: OpRow) => ()
         val (a, rest) = surviving.partition(_._3 == nodes.head)
         val r1 = run(a ++ rest, drop)
         val r2 = run(rest ++ a, drop)
@@ -3225,12 +3151,12 @@ object RedisStateOps {
     * and the spec harnesses.
     */
   private[operators] def foldKey(key: String, basePayload: String,
-      packed: Seq[String], resets: ResetPoints): String =
-    foldKeyEmit(key, basePayload, packed, resets)._1
+      rows: Seq[OpRow], resets: ResetPoints): String =
+    foldKeyEmit(key, basePayload, rows, resets)._1
 
   private[operators] def foldKey(key: String, basePayload: String,
-      packed: Iterator[String], resets: ResetPoints): String =
-    foldKeyEmit(key, basePayload, packed, resets)._1
+      rows: Iterator[OpRow], resets: ResetPoints): String =
+    foldKeyEmit(key, basePayload, rows, resets)._1
 
   // ---- the merger ----------------------------------------------------
 
@@ -3265,23 +3191,13 @@ object RedisStateOps {
     * they don't carry. It runs only on the CompactEvery cadence and
     * at finalize; the published flat face stays the cheap read.
     */
-  /** Row shapes for the merger's sorted-group folds (product
-    * encoders bind by NAME): `KP` carries one packed op — or, on a
-    * cogroup's base side, the base payload — per key; `TS` is the
-    * phase-B tagged side (tag 0 = base payload, tag 1 = emission),
-    * whose (tg, s) sort puts the single base row first and the
-    * emissions after it in packed-op order.
-    */
-  private[operators] final case class KP(key: String, p: String)
-  private[operators] final case class TS(key: String, tg: Int,
-      s: String)
-
   object Merger extends graft.sinks.LandedTable.Merger {
     override def deltaSchema: StructType = DeltaSchema
 
     /** Frames the in-flight merge persisted (the movement window's
-      * packed-op frame). Drained by [[release]] — which the LSM
-      * machinery calls after its post-merge write — and ALSO at the
+      * flagged op rows and its source fold). Drained by [[release]]
+      * — which the LSM machinery calls after its post-merge write —
+      * and ALSO at the
       * next merge() entry, so callers that never release (a
       * monitor's lazy read() poll, a fixture query) pin at most one
       * frame on this singleton. Unpersisting under a straggler
@@ -3294,7 +3210,7 @@ object RedisStateOps {
       * it is unpersisted at the caller's post-write release() or at
       * the next merge() entry. For landings/fixtures that persist
       * their (window-bounded) delta frame so the merge's
-      * bookkeeping and packed passes read it once instead of
+      * bookkeeping and fold passes read it once instead of
       * recomputing an expensive upstream subtree per pass. Call
       * AFTER merge() — the merge-entry self-drain would unpersist
       * it before the fold consumed it. SINGLE-THREADED merger use
@@ -3327,22 +3243,32 @@ object RedisStateOps {
     override def flatView: Option[DataFrame => DataFrame] =
       Some(df => df.where(!col("payload").startsWith(TombPrefix)))
 
-    /** One (key, packed op) row per non-reset delta op — the fold's
-    * shuffle payload. The packed string is BOTH the op encoding and
-    * the secondary-sort key: sorting rows by it within each key is
-    * byte-identical to the sort_array order the fold historically
-    * consumed (UTF8String binary order either way).
-    */
-    private def packRows(deltas: DataFrame): DataFrame = {
-      val packU = udf(packOpF)
-      deltas.filter(col("op") =!= "reset")
-        .select(col("key"), packU(col("sseg"), col("rank"),
-          col("op"), col("value_type"), col("field"), col("value"),
-          col("expire_ms")).as("p"))
+    /** The non-reset delta rows as fold input, in [[OpRow]]'s
+      * columns. A null sseg/value_type/field/value reads as "", so a
+      * null and an empty column are one op identity; a null rank
+      * cannot be placed in the key's op order, so it fails the merge
+      * naming its key instead of dropping or misplacing the op.
+      */
+    private def opRows(deltas: DataFrame): DataFrame = {
+      def orEmpty(c: String) = coalesce(col(c), lit("")).as(c)
+      deltas.filter(col("op") =!= "reset").select(orEmpty("sseg"),
+        when(col("rank").isNull, raise_error(concat(
+          lit("state-face fold: null rank on a delta row for key "),
+          translate(col("key"), "\u0000", ":"))))
+          .otherwise(col("rank")).as("rank"),
+        col("key"), col("op"), orEmpty("value_type"),
+        orEmpty("field"), orEmpty("value"), col("expire_ms"))
     }
 
+    /** A key's op order: (sseg, rank) first, then every other column,
+      * so a replayed row sits next to its twin and an `mvdata`
+      * emission sorts right before the `mvin` at its (sseg, rank).
+      */
+    private val opOrder: Seq[Column] = Seq("sseg", "rank", "op",
+      "value_type", "field", "value", "expire_ms").map(col)
+
     /** The per-key fold as a sorted-group STREAM: hash-partition by
-      * key, sort within partitions by (key, packed op), fold each
+      * key, sort within partitions by (key, op order), fold each
       * key's op iterator directly — no per-key collect_list array in
       * an aggregation hash map, no sort_array copy (guide SS2.3/SS5:
       * the sort spills gracefully; group state is one key at a
@@ -3356,54 +3282,24 @@ object RedisStateOps {
         base: Option[DataFrame], rows: DataFrame,
         resets: ResetPoints): DataFrame = {
       import spark.implicits._
-      val ops = rows.groupBy(col("key")).as[String, KP]
+      val ops = rows.groupBy(col("key")).as[String, OpRow]
       val folded: Dataset[(String, String)] = base match {
         case None =>
-          ops.flatMapSortedGroups(col("p")) { (k, it) =>
-            val pay = foldKey(k, null, it.map(_.p), resets)
+          ops.flatMapSortedGroups(opOrder: _*) { (k, it) =>
+            val pay = foldKey(k, null, it, resets)
             if (pay == null) Iterator.empty else Iterator((k, pay))
           }
         case Some(b0) =>
-          val bg = b0.select(col("key"), col("payload").as("p"))
-            .groupBy(col("key")).as[String, KP]
-          bg.cogroupSorted(ops)()(col("p")) { (k, bIt, oIt) =>
-            val bp = if (bIt.hasNext) bIt.next().p else null
-            val pay = foldKey(k, bp, oIt.map(_.p), resets)
+          val bg = b0.select(col("key"), col("payload"))
+            .groupBy(col("key")).as[String, (String, String)]
+          bg.cogroupSorted(ops)()(opOrder: _*) { (k, bIt, oIt) =>
+            val bp = if (bIt.hasNext) bIt.next()._2 else null
+            val pay = foldKey(k, bp, oIt, resets)
             if (pay == null) Iterator.empty else Iterator((k, pay))
           }
       }
       folded.toDF("key", "payload")
     }
-
-    /** Merge two iterators that are each already sorted in Spark's
-      * string order (UTF8String = UTF-8 byte order) into one sorted
-      * stream — the phase-B equivalent of the historical
-      * sort_array(concat(ops, eops)). Cross-iterator comparisons go
-      * through UTF8String: JVM String.compareTo orders supplementary
-      * characters differently, and the merged order must be exactly
-      * what one Spark sort over the union would have produced. Each
-      * head is converted once: its UTF8String is cached until that
-      * side advances.
-      */
-    private def mergeSorted(a: Iterator[String],
-        b: Iterator[String]): Iterator[String] =
-      new scala.collection.AbstractIterator[String] {
-        private val ab = a.buffered
-        private val bb = b.buffered
-        private var au: UTF8String = null
-        private var bu: UTF8String = null
-        private def nextA(): String = { au = null; ab.next() }
-        private def nextB(): String = { bu = null; bb.next() }
-        def hasNext: Boolean = ab.hasNext || bb.hasNext
-        def next(): String =
-          if (!bb.hasNext) nextA()
-          else if (!ab.hasNext) nextB()
-          else {
-            if (au == null) au = UTF8String.fromString(ab.head)
-            if (bu == null) bu = UTF8String.fromString(bb.head)
-            if (au.compareTo(bu) <= 0) nextA() else nextB()
-          }
-      }
 
     override def merge(spark: SparkSession, base: Option[DataFrame],
         deltas: DataFrame, deltaBytes: Long): DataFrame = {
@@ -3442,72 +3338,64 @@ object RedisStateOps {
       // stays the single-phase plan (the probe is free — it rode
       // the bookkeeping pass above)
       if (!meta.exists(_._1 == "mvin"))
-        foldPlain(spark, base, packRows(deltas), resets)
+        foldPlain(spark, base, opRows(deltas), resets)
       else mergeWithMovement(spark, base, deltas, resets)
     }
 
     /** The movement-window shape: phase A folds every key WITHOUT an
       * incoming movement — movement SOURCES through ONE combined
       * fold that keeps both the landed payload and the mvout
-      * emissions — and phase B folds the destination keys with the
-      * emissions merged into their sorted op streams right before
-      * their mvin. Chains (a destination that is itself a later
-      * source) get no third phase: the second hop's mvin finds no
-      * emission and tombstones, honestly.
+      * emissions — and phase B folds the destination keys' own rows
+      * together with the emissions addressed to them, where each
+      * `mvdata` sorts right before its `mvin`. Chains (a destination
+      * that is itself a later source) get no third phase: the second
+      * hop's mvin finds no emission and tombstones, honestly.
       *
       * Plan shape (the 100 TB lens): per-key movement flags ride ONE
-      * window pass over the packed rows (computed from the raw `op`
-      * column — exactly the packed op field), and the flagged frame
-      * is persisted (bounded by the delta range — never O(state)),
-      * so each phase below is a FILTER of that cache that inherits
-      * its hash-partitioning: the branch folds add partition-local
-      * sorts but NO further key exchange. The non-movement phase-A
-      * branch streams (never persisted: with a base it is O(state));
-      * the combined source fold is persisted (bounded by the
-      * window's movement SOURCES) because both the phase-A union and
-      * the phase-B emission injection consume it; emissions join
-      * phase B as a second sorted cogroup side merged into the
-      * destination's op stream (no per-key array, no re-sort of the
-      * destination ops) — so movement cost scales with the window's
-      * movements, not with state size.
+      * window pass over the op rows, and the flagged frame is
+      * persisted (bounded by the delta range — never O(state)), so
+      * each phase-A branch below is a FILTER of that cache that
+      * inherits its hash-partitioning: the branch folds add
+      * partition-local sorts but NO further key exchange. The
+      * non-movement phase-A branch streams (never persisted: with a
+      * base it is O(state)); the combined source fold is persisted
+      * (bounded by the window's movement SOURCES) because both the
+      * phase-A union and phase B consume it. Phase B re-exchanges
+      * only the destinations' rows and the emissions, and joins only
+      * the destinations' base rows — so movement cost scales with
+      * the window's movements, not with state size.
       */
     private def mergeWithMovement(spark: SparkSession,
         base: Option[DataFrame], deltas: DataFrame,
         resets: ResetPoints): DataFrame = {
       import spark.implicits._
-      val packU = udf(packOpF)
-      // per-key movement flags from the RAW op column (identical to
-      // testing the packed op field — packOpF packs `op` verbatim),
-      // computed in one window pass riding the same key exchange the
-      // fold needs anyway. persist + the Merger.release() lifecycle
-      // hook: compactTo/publishFlat call release() post-write, and
-      // the pinned registry self-drains at the NEXT merge, so a
-      // caller that never releases (a monitor's read() poll, a
-      // fixture query) holds at most one window's frames. LAZY on
-      // purpose: the cache fills on first consumption. Unpersist is
-      // correctness-safe against stragglers: every branch recomputes
-      // deterministically. Consumption contract (unchanged from
-      // every lazy LandedTable.read frame): a lazily-held movement
-      // frame must be consumed before the same table's next cadence
-      // merge deletes the delta dirs it reads — in-tree consumers
-      // (compactTo/publishFlat writes, the single-threaded lander
-      // loop) all do.
-      // partitionBy only (no orderBy): an orderBy("p") +
-      // whole-group-frame variant was measured FIRST — it would have
-      // let the cached frame carry the (key, p) ordering the branch
-      // folds need — and lost (q156 min 3.4 → 3.9 s, q158 1.7 → 2.0:
-      // the ordered window's per-row frame machinery costs more than
-      // the three partition-local branch sorts it saves).
+      // per-key movement flags computed in one window pass riding
+      // the same key exchange the fold needs anyway. persist + the
+      // Merger.release() lifecycle hook: compactTo/publishFlat call
+      // release() post-write, and the pinned registry self-drains at
+      // the NEXT merge, so a caller that never releases (a monitor's
+      // read() poll, a fixture query) holds at most one window's
+      // frames. LAZY on purpose: the cache fills on first
+      // consumption. Unpersist is correctness-safe against
+      // stragglers: every branch recomputes deterministically.
+      // Consumption contract (unchanged from every lazy
+      // LandedTable.read frame): a lazily-held movement frame must be
+      // consumed before the same table's next cadence merge deletes
+      // the delta dirs it reads — in-tree consumers (compactTo/
+      // publishFlat writes, the single-threaded lander loop) all do.
+      // partitionBy only (no orderBy): an ordered whole-group-frame
+      // variant was measured FIRST — it would have let the cached
+      // frame carry the per-key op order the branch folds need — and
+      // lost (q156 min 3.4 → 3.9 s, q158 1.7 → 2.0: the ordered
+      // window's per-row frame machinery costs more than the
+      // partition-local branch sorts it saves).
       val w = Window.partitionBy("key")
-      val flagged = deltas.filter(col("op") =!= "reset")
-        .select(col("key"), packU(col("sseg"), col("rank"),
-          col("op"), col("value_type"), col("field"), col("value"),
-          col("expire_ms")).as("p"),
-          (col("op") === "mvin").cast("int").as("mi"),
-          (col("op") === "mvout").cast("int").as("mo"))
-        .select(col("key"), col("p"),
-          (max(col("mi")).over(w) === 1).as("isdef"),
-          (max(col("mo")).over(w) === 1).as("issrc"))
+      def has(op: String) =
+        max((col("op") === op).cast("int")).over(w) === 1
+      val rows = opRows(deltas)
+      val flagged = rows
+        .select(col("*"), has("mvin").as("isdef"),
+          has("mvout").as("issrc"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       pinned.add(flagged)
       // phase A, non-movement keys: base keys with no movement op in
@@ -3519,32 +3407,30 @@ object RedisStateOps {
           flagged.where(col("isdef") || col("issrc")).select("key")
             .distinct(),
           Seq("key"), "left_anti")),
-        flagged.where(!col("isdef") && !col("issrc"))
-          .select("key", "p"),
+        flagged.where(!col("isdef") && !col("issrc")),
         resets)
       // phase A, movement sources (sources that are themselves
       // destinations are phase-B keys whose emissions are dropped by
       // design — the chain rule): ONE combined fold keeps the landed
       // payload AND the mvout emissions; persisted because both the
-      // phase-A union and the emission injection consume it —
-      // bounded by the window's movement sources, never O(state)
+      // phase-A union and phase B consume it — bounded by the
+      // window's movement sources, never O(state)
       val srcRows = flagged.where(col("issrc") && !col("isdef"))
-        .select("key", "p")
-      val srcG = srcRows.groupBy(col("key")).as[String, KP]
-      val srcF: Dataset[(String, String, Seq[(String, String)])] =
+      val srcG = srcRows.groupBy(col("key")).as[String, OpRow]
+      val srcF: Dataset[(String, String, Seq[OpRow])] =
         (base match {
           case None =>
-            srcG.flatMapSortedGroups(col("p")) { (k, it) =>
+            srcG.flatMapSortedGroups(opOrder: _*) { (k, it) =>
               Iterator(kpe(k, null, it, resets))
             }
           case Some(b0) =>
             val bg = b0
               .join(srcRows.select("key").distinct(), Seq("key"),
                 "left_semi")
-              .select(col("key"), col("payload").as("p"))
-              .groupBy(col("key")).as[String, KP]
-            bg.cogroupSorted(srcG)()(col("p")) { (k, bIt, oIt) =>
-              val bp = if (bIt.hasNext) bIt.next().p else null
+              .select(col("key"), col("payload"))
+              .groupBy(col("key")).as[String, (String, String)]
+            bg.cogroupSorted(srcG)()(opOrder: _*) { (k, bIt, oIt) =>
+              val bp = if (bIt.hasNext) bIt.next()._2 else null
               Iterator(kpe(k, bp, oIt, resets))
             }
         }).persist(
@@ -3553,37 +3439,17 @@ object RedisStateOps {
       val aOut = aNonMv.unionByName(
         srcF.select(col("_1").as("key"), col("_2").as("payload"))
           .where(col("payload").isNotNull))
-      // phase B: destination keys fold with the emissions MERGED
-      // into their sorted op stream (both sides arrive sorted in
-      // Spark string order; mergeSorted keeps it) — mvdata rows sort
-      // immediately before their mvin exactly as the historical
-      // sort_array(concat(ops, eops)) placed them. The base payload
-      // rides the emission side as a tag-0 row so one cogroup serves
-      // all three inputs.
+      // phase B: an emission is an op row, so a destination key folds
+      // through foldPlain over (its own rows ∪ the emissions addressed
+      // to it) against its base row
+      val cols = rows.columns.toSeq
       val emits = srcF.select(explode(col("_3")).as("e"))
-        .select(col("e._1").as("key"), lit(1).as("tg"),
-          col("e._2").as("s"))
-      val defRows = flagged.where(col("isdef")).select("key", "p")
-      val defG = defRows.groupBy(col("key")).as[String, KP]
-      val side2 = base match {
-        case None => emits
-        case Some(b0) =>
-          b0.join(defRows.select("key").distinct(), Seq("key"),
-            "left_semi")
-            .select(col("key"), lit(0).as("tg"),
-              col("payload").as("s"))
-            .unionByName(emits)
-      }
-      val s2G = side2.groupBy(col("key")).as[String, TS]
-      val bOut = defG.cogroupSorted(s2G)(col("p"))(col("tg"),
-          col("s")) { (k, dIt, sIt) =>
-        val sb = sIt.buffered
-        val bp = if (sb.hasNext && sb.head.tg == 0) sb.next().s
-          else null
-        val pay = foldKey(k, bp,
-          mergeSorted(dIt.map(_.p), sb.map(_.s)), resets)
-        if (pay == null) Iterator.empty else Iterator((k, pay))
-      }.toDF("key", "payload")
+        .select(cols.map(c => col(s"e.$c")): _*)
+      val defRows = flagged.where(col("isdef")).select(cols.map(col): _*)
+      val bOut = foldPlain(spark,
+        base.map(_.join(defRows.select("key").distinct(), Seq("key"),
+          "left_semi")),
+        defRows.unionByName(emits), resets)
       aOut.unionByName(bOut)
     }
 
@@ -3591,9 +3457,9 @@ object RedisStateOps {
       * key — srcF's group function.
       */
     private def kpe(k: String, basePayload: String,
-        it: Iterator[KP], resets: ResetPoints)
-        : (String, String, Seq[(String, String)]) = {
-      val (pay, em) = foldKeyEmit(k, basePayload, it.map(_.p), resets)
+        it: Iterator[OpRow], resets: ResetPoints)
+        : (String, String, Seq[OpRow]) = {
+      val (pay, em) = foldKeyEmit(k, basePayload, it, resets)
       (k, pay, em)
     }
   }

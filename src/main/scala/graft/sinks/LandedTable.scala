@@ -106,8 +106,8 @@ object LandedTable {
 
     /** Post-write lifecycle hook (round-16 verdict item 1): release
       * whatever the last merge() pinned — cached intermediate frames
-      * a multi-branch plan reuses (the movement fold's packed-op
-      * frame). compactTo/publishFlat call this AFTER their output is
+      * a multi-branch plan reuses (the movement fold's flagged op
+      * rows). compactTo/publishFlat call this AFTER their output is
       * written, so a merger can `persist` (executor memory,
       * deterministically reclaimed here) instead of
       * `localCheckpoint` (a guaranteed local-disk write per cadence;

@@ -5,8 +5,9 @@ import scala.util.Random
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import RedisStateOps.{commandOps, foldKey, packOpF, CommandRankBase,
-  Op, ResetPoints, TombPrefix}
+import RedisStateOps.{commandOps, foldKey, CommandRankBase, Op, OpRow,
+  ResetPoints, TombPrefix}
+import RedisStateOpsSpec.opOrder
 
 /** Property battery for the redis state fold: for ANY random command
   * script, the landed current-state face must equal an INDEPENDENT
@@ -25,9 +26,9 @@ import RedisStateOps.{commandOps, foldKey, packOpF, CommandRankBase,
   *  3. replay dedupe: double-landing window 2 changes nothing.
   *
   * The model is deliberately naive (immutable values in a map, no
-  * sharing with the fold's St/packing/rank machinery): the property
-  * exercises the COMPOSITION — op extraction, rank ordering, packing
-  * round-trip, per-key sequencing, WRONGTYPE no-ops, numeric edges —
+  * sharing with the fold's St/op-row/rank machinery): the property
+  * exercises the COMPOSITION — op extraction, rank ordering, op-row
+  * order, per-key sequencing, WRONGTYPE no-ops, numeric edges —
   * that hand vectors (RedisStateOpsSpec) can only sample.
   */
 class RedisStateFoldPropertySpec extends AnyFunSuite {
@@ -1579,20 +1580,19 @@ class RedisStateFoldPropertySpec extends AnyFunSuite {
 
   private val noResets = new ResetPoints(Map.empty)
 
-  private def packWindow(cmds: Seq[Seq[String]],
-      sseg: String): Map[String, Seq[String]] = {
+  private def opWindow(cmds: Seq[Seq[String]],
+      sseg: String): Map[String, Seq[OpRow]] = {
     var rank = CommandRankBase
-    val byKey = mutable.Map[String, mutable.Buffer[String]]()
+    val byKey = mutable.Map[String, mutable.Buffer[OpRow]]()
     cmds.foreach { argv =>
       val (_, ops) = commandOps(argv, 0L)
       ops.foreach { o =>
         rank += 1
         byKey.getOrElseUpdate(o.key, mutable.Buffer()) +=
-          packOpF(sseg, rank, o.op, o.vtype, o.field, o.value,
-            o.ex.map(Long.box).orNull)
+          OpRow(sseg, rank, o.key, o.op, o.vtype, o.field, o.value, o.ex)
       }
     }
-    byKey.view.mapValues(_.toSeq.sorted).toMap
+    byKey.view.mapValues(_.toSeq.sorted(opOrder)).toMap
   }
 
   /** The merger's two-phase shape, mirrored over plain maps: phase A
@@ -1601,24 +1601,23 @@ class RedisStateFoldPropertySpec extends AnyFunSuite {
     * emissions sorted into their op lists.
     */
   private def foldAll(base: Map[String, String],
-      packed: Map[String, Seq[String]]): Map[String, String] = {
-    val all = base.keySet ++ packed.keySet
+      rows: Map[String, Seq[OpRow]]): Map[String, String] = {
+    val all = base.keySet ++ rows.keySet
     val deferred = all.filter(k =>
-      packed.get(k).exists(_.exists(_.contains("\u0001mvin\u0001"))))
-    val emitted = mutable.Map[String, mutable.Buffer[String]]()
+      rows.get(k).exists(_.exists(_.op == "mvin")))
+    val emitted = mutable.Map[String, mutable.Buffer[OpRow]]()
     val out = mutable.Map[String, String]()
     for (k <- all if !deferred(k)) {
       val (p, emits) = RedisStateOps.foldKeyEmit(k,
-        base.get(k).orNull, packed.get(k).map(_.toSeq).orNull,
-        noResets)
-      emits.foreach { case (dk, mop) =>
-        emitted.getOrElseUpdate(dk, mutable.Buffer()) += mop
+        base.get(k).orNull, rows.getOrElse(k, Seq.empty), noResets)
+      emits.foreach { e =>
+        emitted.getOrElseUpdate(e.key, mutable.Buffer()) += e
       }
       if (p != null) out(k) = p
     }
     for (k <- deferred) {
-      val ops = (packed.getOrElse(k, Seq.empty) ++
-        emitted.getOrElse(k, mutable.Buffer()).toSeq).sorted
+      val ops = (rows.getOrElse(k, Seq.empty) ++
+        emitted.getOrElse(k, mutable.Buffer()).toSeq).sorted(opOrder)
       val p = foldKey(k, base.get(k).orNull, ops, noResets)
       if (p != null) out(k) = p
     }
@@ -1668,7 +1667,7 @@ class RedisStateFoldPropertySpec extends AnyFunSuite {
 
       // single-pass fold over the whole script == a one-window model
       val onePass = foldAll(Map.empty,
-        packWindow(script, "psync.000001.log"))
+        opWindow(script, "psync.000001.log"))
       val oneModel = new Model
       oneModel.applyWindow(script)
       check(onePass, oneModel, "one-pass")
@@ -1680,17 +1679,17 @@ class RedisStateFoldPropertySpec extends AnyFunSuite {
       // applied with the same window boundaries
       val cut = rnd.nextInt(script.size)
       val w1 = foldAll(Map.empty,
-        packWindow(script.take(cut), "psync.000001.log"))
-      val w2packed = packWindow(script.drop(cut), "psync.000002.log")
-      val split = foldAll(w1, w2packed)
+        opWindow(script.take(cut), "psync.000001.log"))
+      val w2rows = opWindow(script.drop(cut), "psync.000002.log")
+      val split = foldAll(w1, w2rows)
       val splitModel = new Model
       splitModel.applyWindow(script.take(cut))
       splitModel.applyWindow(script.drop(cut))
       check(split, splitModel, s"split@$cut")
 
       // replay dedupe: double-landing window 2 changes nothing
-      val doubled = w2packed.view
-        .mapValues(ops => (ops ++ ops).sorted).toMap
+      val doubled = w2rows.view
+        .mapValues(ops => (ops ++ ops).sorted(opOrder)).toMap
       assert(foldAll(w1, doubled) == split,
         s"seed=$seed replayed window 2 diverged")
     }
