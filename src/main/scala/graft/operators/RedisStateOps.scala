@@ -1,5 +1,7 @@
 package graft.operators
 
+import java.nio.charset.StandardCharsets
+
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -2020,31 +2022,40 @@ object RedisStateOps {
       }
       case "setrange" => state match {
         case Some(st) if st.t != "string" => state // WRONGTYPE
-        case _ => op.field.toIntOption match {
-          // Long arithmetic: an Int `off + len` can WRAP negative
-          // and slip past the cap into the zero-padding loop the
+        case _ =>
+          // SETRANGE offsets are BYTES: splice the value's UTF-8
+          // image. Long arithmetic: an Int `off + len` can WRAP
+          // negative and slip past the cap into the zero-padding the
           // cap exists to prevent
-          case Some(off) if off >= 0 &&
-              off.toLong + op.value.length <= MaxSpliceLen =>
-            if (op.value.isEmpty) state // length probe: no write
-            else {
-              val old = state.flatMap(s => Option(s.singleOrNull))
-                .getOrElse("")
-              val sb = new java.lang.StringBuilder(
-                math.max(old.length, off + op.value.length))
-              sb.append(old)
-              while (sb.length < off) sb.append('\u0000')
-              sb.replace(off,
-                math.min(sb.length, off + op.value.length), op.value)
-              state match {
-                case Some(st) => st.setSingle(sb.toString); state
-                case None => strSt(sb.toString, None)
+          val patch = op.value.getBytes(StandardCharsets.UTF_8)
+          op.field.toIntOption match {
+            case Some(off) if off >= 0 &&
+                off.toLong + patch.length <= MaxSpliceLen =>
+              if (patch.isEmpty) state // length probe: no write
+              else {
+                val old = state.flatMap(s => Option(s.singleOrNull))
+                  .getOrElse("").getBytes(StandardCharsets.UTF_8)
+                val end = off + patch.length
+                // a splice edge inside a multi-byte character leaves
+                // bytes that are not UTF-8, which the face cannot hold
+                // (the setbit rule): honest drop
+                def inChar(i: Int) = i < old.length && (old(i) & 0xc0) == 0x80
+                if (inChar(off) || inChar(end)) Some(tomb())
+                else {
+                  val out = java.util.Arrays.copyOf(old,
+                    math.max(old.length, end)) // zero-pads past the end
+                  System.arraycopy(patch, 0, out, off, patch.length)
+                  val v = new String(out, StandardCharsets.UTF_8)
+                  state match {
+                    case Some(st) => st.setSingle(v); state
+                    case None => strSt(v, None)
+                  }
+                }
               }
-            }
-          case Some(off) if off >= 0 =>
-            Some(tomb()) // 512MB-scale splice: honest drop, not OOM
-          case _ => state // negative/garbage offset: server errors
-        }
+            case Some(off) if off >= 0 =>
+              Some(tomb()) // 512MB-scale splice: honest drop, not OOM
+            case _ => state // negative/garbage offset: server errors
+          }
       }
       case "setbit" => state match {
         case Some(st) if st.t != "string" => state // WRONGTYPE

@@ -2,6 +2,7 @@ package graft.sinks
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PlanBridge
 
 /** Analytics-sink write model for StarRocks / Doris / ClickHouse —
   * the reference's stream-load sinkers
@@ -71,20 +72,21 @@ object StreamLoadSink {
   def shipTagged(payload: DataFrame, sinkFor: Int => PayloadSink,
       batchRows: Int, batchBytes: Long): Long = {
     val lines = payload.sparkSession.sparkContext.longAccumulator
-    payload.foreachPartition {
-      it: Iterator[org.apache.spark.sql.Row] =>
-        val open = scala.collection.mutable.TreeMap.empty[Int, Chunks]
-        var n = 0L
-        it.foreach { r =>
-          val d = r.getInt(0)
-          open.getOrElseUpdate(d,
-            new Chunks(sinkFor(d), batchRows, batchBytes))
-            .add(r.getString(1))
-          n += 1
-        }
-        open.valuesIterator.foreach(_.flush())
-        lines.add(n)
-    }
+    // runs the frame's own plan: one planned ahead of the ship (see
+    // CdcTask.prepareBatch) is not planned again
+    PlanBridge.foreachPartition(payload, { it =>
+      val open = scala.collection.mutable.TreeMap.empty[Int, Chunks]
+      var n = 0L
+      it.foreach { r =>
+        val d = r.getInt(0)
+        open.getOrElseUpdate(d,
+          new Chunks(sinkFor(d), batchRows, batchBytes))
+          .add(r.getUTF8String(1).toString)
+        n += 1
+      }
+      open.valuesIterator.foreach(_.flush())
+      lines.add(n)
+    })
     lines.value
   }
 

@@ -1,7 +1,13 @@
 package graft.streaming
 
+import java.util.concurrent.{Callable, ExecutionException, Executors,
+  Future}
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PlanBridge
 import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType,
   StringType, StructField, StructType}
 
@@ -33,6 +39,22 @@ import graft.sources.{DbResumer, PgOutput, PgSlotLifecycle}
   * [[shipBatch]] body runs as the `foreachBatch` of the
   * [[graft.sources.ChangelogSource]] DSv2 stream; this orchestrator is
   * the single-stream task form with explicit position bookkeeping.
+  *
+  * [[run]] prepares batch i+1 while batch i ships, as the reference's
+  * extractor fills a bounded `DtQueue` that the pipeline drains
+  * (base_pipeline.rs:96-191, dt_queue.rs:13-117). One daemon thread
+  * per run, named [[PrepareThreadName]], runs [[prepareBatch]] —
+  * layouts, rows, the batch frame, compaction and the rendered, planned
+  * ship — which has no outside effect and starts no Spark job. At most
+  * one prepared batch waits. Everything with an outside effect stays on
+  * the calling thread, in batch order: the `max_rps`/`max_mbps`
+  * drains, the ship, the monitor counters, the recorded position and
+  * the heartbeat. So batch i's position is written after batch i's
+  * last PUT and before batch i+1's first, as before. A prepare failure
+  * surfaces as its own exception at its batch's turn, after every
+  * earlier batch has shipped and recorded its position; a ship failure
+  * cancels the pending prepare. The thread has ended when [[run]]
+  * returns or throws.
   */
 object CdcTask {
 
@@ -150,6 +172,9 @@ object CdcTask {
       task.router.routeTable(s, tb))
   }
 
+  /** Name of the thread on which [[run]] prepares the next batch. */
+  final val PrepareThreadName = "graft-cdc-prepare"
+
   /** Ship one batch as ONE plan, whatever the number of tables: every
     * event becomes a row of a single frame `(_t, _k, _c0.._cN,
     * row_type, _seq)` — source-table index, key values, positional
@@ -165,7 +190,22 @@ object CdcTask {
       relCols: Map[(String, String), Seq[String]],
       relKeys: Map[(String, String), Seq[String]],
       sinkFor: SinkFactory)
-      : Map[(String, String), Long] = if (events.isEmpty) Map.empty else {
+      : Map[(String, String), Long] =
+    prepareBatch(spark, task, batchId, events, relCols, relKeys,
+      sinkFor)()
+
+  /** Everything of [[shipBatch]] that has no outside effect: resolve the
+    * layouts, build the rows and the frame, compact, render, and plan
+    * the ship. Starts no Spark job. Returns the one remaining action,
+    * which ships the batch and returns rows shipped per routed table.
+    */
+  def prepareBatch(spark: SparkSession, task: TaskConfig.Task,
+      batchId: Long, events: Seq[ChangeEvent],
+      relCols: Map[(String, String), Seq[String]],
+      relKeys: Map[(String, String), Seq[String]],
+      sinkFor: SinkFactory)
+      : () => Map[(String, String), Long] =
+    if (events.isEmpty) () => Map.empty else {
     val byTable = events.groupBy(e => (e.schema, e.tb))
     val tables = byTable.keys.toIndexedSeq.sorted
     val tableIdx = tables.zipWithIndex.toMap
@@ -189,13 +229,13 @@ object CdcTask {
         values ++ Seq.fill(width - values.size)(null) ++
         Seq(e.rowType, i.toLong))
     }
-    // input slices follow [pipeline] parallel_size (bounded by the row
-    // count) and feed the compaction's map side; PUT parallelism is the
+    // a LocalRelation of the driver rows: the optimizer evaluates the
+    // null-key serial leg on the driver, tasks carry encoded rows, and
+    // the compaction's map-side slices follow
+    // spark.sql.leafNodeDefaultParallelism (default: the session's
+    // cores), not [pipeline] parallel_size. PUT parallelism is the
     // number of post-shuffle partitions, each opening its own sinks
-    val slices = math.max(1,
-      math.min(task.parallelism, rows.size / 100 + 1))
-    val df = spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, slices), schema)
+    val df = spark.createDataFrame(rows.asJava, schema)
     val compacted = StreamLoadSink.withSignColumns(
       Compaction.compact(df, Seq("_t", "_k"), Seq("_seq"), col("row_type")),
       col("row_type"), col("_seq"))
@@ -225,15 +265,53 @@ object CdcTask {
     val tagged = compacted.select(
       (destOf(col("_t")) + when(isDelete, 1).otherwise(0)).as("_d"),
       line.as("payload"))
+    PlanBridge.plan(tagged)
     val batchBytes = task.sink.batchMemoryMb
       .map(_.toLong * 1024 * 1024).getOrElse(Long.MaxValue)
-    StreamLoadSink.shipTagged(tagged, { d =>
-      val (s, tb) = dests(d / 2)
-      sinkFor(s, tb, batchId, if (d % 2 == 1) "delete" else "")
-    }, task.batchSize, batchBytes)
-
-    layouts.zip(tables).groupMapReduce(_._1.dest)(
+    val shipped = layouts.zip(tables).groupMapReduce(_._1.dest)(
       lt => byTable(lt._2).size.toLong)(_ + _)
+
+    () => {
+      StreamLoadSink.shipTagged(tagged, { d =>
+        val (s, tb) = dests(d / 2)
+        sinkFor(s, tb, batchId, if (d % 2 == 1) "delete" else "")
+      }, task.batchSize, batchBytes)
+      shipped
+    }
+  }
+
+  /** `ship` over `xs` in order on the calling thread, with `prepare` of
+    * the next element running on one daemon thread meanwhile: a
+    * pipeline of depth one. A prepare failure is rethrown unwrapped at
+    * its element's turn; a ship failure cancels the pending prepare.
+    * The thread has ended when this returns or throws.
+    */
+  private def pipelined[A, P, B](spark: SparkSession, xs: IndexedSeq[A])
+      (prepare: A => P)(ship: (A, P) => B): Seq[B] =
+    if (xs.isEmpty) Nil else {
+    var worker: Thread = null
+    val pool = Executors.newSingleThreadExecutor { r =>
+      worker = new Thread(() => {
+        SparkSession.setActiveSession(spark) // SQLConf.get reads spark
+        r.run()
+      }, PrepareThreadName)
+      worker.setDaemon(true)
+      worker
+    }
+    def submit(i: Int): Future[P] =
+      pool.submit(new Callable[P] { def call(): P = prepare(xs(i)) })
+    var next = submit(0)
+    try xs.indices.map { i =>
+      val p =
+        try next.get()
+        catch { case e: ExecutionException => throw e.getCause }
+      next = if (i + 1 < xs.size) submit(i + 1) else null
+      ship(xs(i), p)
+    } finally {
+      if (next != null) next.cancel(true)
+      pool.shutdownNow()
+      worker.join()
+    }
   }
 
   /** Run the task end-to-end over one captured stream. */
@@ -316,9 +394,13 @@ object CdcTask {
         }
     }).filter(_._2.nonEmpty)
 
-    // 5. txn-aligned batches → compact → ship → record position
-    val batches = toBatches(admittedTxns, task.batchSize)
-    val reports = batches.zipWithIndex.map { case ((lsn, evs), i) =>
+    // 5. txn-aligned batches → compact → ship → record position; batch
+    //    i+1 is prepared on the prepare thread while batch i ships
+    val batches =
+      toBatches(admittedTxns, task.batchSize).zipWithIndex.toIndexedSeq
+    val reports = pipelined(spark, batches) { case ((_, evs), i) =>
+      prepareBatch(spark, task, i.toLong, evs, relCols, relKeys, sinkFor)
+    } { case (((lsn, evs), i), ship) =>
       // rate governor: block until this batch's rows fit the budget
       // (reference base_pipeline awaits the limiter before sinking);
       // a batch larger than one second's quota drains the bucket in
@@ -344,8 +426,7 @@ object CdcTask {
         drain(l, math.max(1L, bytes))
       }
       val t0 = System.nanoTime()
-      val shipped =
-        shipBatch(spark, task, i.toLong, evs, relCols, relKeys, sinkFor)
+      val shipped = ship()
       monitors.sinker
         .addCounter(Monitoring.RtPerQuery,
           (System.nanoTime() - t0) / 1000000L)

@@ -579,6 +579,43 @@ class RedisStateOpsSpec extends graft.SparkSuite {
       .contains("\"10.75\""))
   }
 
+  test("SETRANGE offsets are bytes of the UTF-8 value; a splice edge " +
+      "inside a multi-byte character drops the key") {
+    val k = key(0, "sr")
+    def op(o: Op, rank: Long) = ("psync.000001.log", rank, o)
+    def set(v: String) =
+      fold(k, null, opRows(op(Op(k, "set", "string", "", v, None), 1)))
+    def setrange(base: String, off: Long, v: String) =
+      fold(k, base, opRows(
+        op(Op(k, "setrange", "string", off.toString, v, None), 2)))
+    // "café" is 63 61 66 c3 a9: five bytes, four chars
+    val cafe = set("café")
+    // byte 5 is the end: "!" appends, with no zero padding
+    assert(setrange(cafe, 5, "!") == set("café!"))
+    // bytes 3..4 are é; "ée" (c3 a9 65) rewrites them and appends
+    assert(setrange(cafe, 3, "ée") == set("cafée"))
+    // past the end: zero bytes pad from byte 5, not from char 4
+    assert(setrange(cafe, 7, "x") == set("café\u0000\u0000x"))
+    // a splice that starts at é's second byte, or ends before it,
+    // would leave a lone a9 or c3 byte: the key drops
+    assert(setrange(cafe, 4, "x").startsWith(TombPrefix))
+    assert(setrange(cafe, 3, "e").startsWith(TombPrefix))
+    // U+1F600 is f0 9f 98 80: four bytes, two UTF-16 chars
+    val grin = set("😀x")
+    assert(setrange(grin, 4, "y") == set("😀y"))
+    assert(setrange(grin, 5, "z") == set("😀xz"))
+    assert(setrange(grin, 0, "abé") == set("abéx"))
+    // offset 2 sits inside the emoji: no lone surrogate lands
+    assert(setrange(grin, 2, "ab").startsWith(TombPrefix))
+    assert(setrange(grin, 0, "a").startsWith(TombPrefix))
+    // an absent key: zero bytes, then the value's bytes
+    assert(setrange(null, 1, "😀") == set("\u0000😀"))
+    // the splice cap (2^26) counts bytes: the emoji's two chars end
+    // under it, its four bytes past it
+    assert(setrange(null, (1L << 26) - 3, "😀")
+      .startsWith(TombPrefix))
+  }
+
   test("numeric edges fold server-exactly: inf scores are legal, " +
       "overflow/NaN results leave state unchanged, out-of-Int list " +
       "indices empty the key instead of wrapping") {
@@ -1857,7 +1894,7 @@ class RedisStateOpsSpec extends graft.SparkSuite {
     val vocab = Seq(("set", "string"), ("append", "string"),
       ("put", "hash"), ("delf", "hash"), ("rpush", "list"),
       ("lpush", "list"), ("put", "set"), ("del", ""), ("expire", ""),
-      ("persist", ""))
+      ("persist", ""), ("setrange", "string"))
     val rnd = new scala.util.Random(8)
     var rank = RedisStateOps.CommandRankBase
     def window(sseg: String): Seq[OpRow] = {
@@ -1866,6 +1903,8 @@ class RedisStateOpsSpec extends graft.SparkSuite {
         val (op, vt) = vocab(rnd.nextInt(vocab.size))
         val (field, value) = op match {
           case "expire" => ("", "9000")
+          // byte offsets that land inside and past multi-byte chars
+          case "setrange" => (rnd.nextInt(12).toString, weird(rnd))
           case _ => (weird(rnd, 3), weird(rnd))
         }
         OpRow(sseg, rank, key(0, s"k${rnd.nextInt(40)}"), op, vt, field,
