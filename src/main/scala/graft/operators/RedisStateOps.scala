@@ -2033,14 +2033,22 @@ object RedisStateOps {
                 off.toLong + patch.length <= MaxSpliceLen =>
               if (patch.isEmpty) state // length probe: no write
               else {
-                val old = state.flatMap(s => Option(s.singleOrNull))
-                  .getOrElse("").getBytes(StandardCharsets.UTF_8)
+                val oldS = state.flatMap(s => Option(s.singleOrNull))
+                  .getOrElse("")
+                val old = oldS.getBytes(StandardCharsets.UTF_8)
                 val end = off + patch.length
+                // a U+0080..U+00FF char is one byte if SETBIT/BITFIELD
+                // wrote it (char space) and two if SET text did: when
+                // one starts before the splice end, the server's bytes
+                // there are unknowable — honest drop
+                val amb = oldS.indexWhere(c => c >= '\u0080' && c <= '\u00ff')
+                def ambiguous = amb >= 0 && oldS.substring(0, amb)
+                  .getBytes(StandardCharsets.UTF_8).length < end
                 // a splice edge inside a multi-byte character leaves
                 // bytes that are not UTF-8, which the face cannot hold
                 // (the setbit rule): honest drop
                 def inChar(i: Int) = i < old.length && (old(i) & 0xc0) == 0x80
-                if (inChar(off) || inChar(end)) Some(tomb())
+                if (ambiguous || inChar(off) || inChar(end)) Some(tomb())
                 else {
                   val out = java.util.Arrays.copyOf(old,
                     math.max(old.length, end)) // zero-pads past the end

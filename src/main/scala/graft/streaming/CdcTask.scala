@@ -184,6 +184,10 @@ object CdcTask {
     * JSON with its own table's routed field names (plus the sign and
     * version columns unless `hard_delete`), and goes to the sink of its
     * (routed table, op). Returns rows shipped per routed table.
+    *
+    * The one-call form, `prepareBatch(...)()`: [[run]] calls the two
+    * halves apart to pipeline them, so no caller in the program uses
+    * it; `CdcShipBatchSpec` pins the batch plan through it.
     */
   def shipBatch(spark: SparkSession, task: TaskConfig.Task,
       batchId: Long, events: Seq[ChangeEvent],

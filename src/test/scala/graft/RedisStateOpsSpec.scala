@@ -580,7 +580,8 @@ class RedisStateOpsSpec extends graft.SparkSuite {
   }
 
   test("SETRANGE offsets are bytes of the UTF-8 value; a splice edge " +
-      "inside a multi-byte character drops the key") {
+      "inside a multi-byte character, or past a U+0080..U+00FF char, " +
+      "drops the key") {
     val k = key(0, "sr")
     def op(o: Op, rank: Long) = ("psync.000001.log", rank, o)
     def set(v: String) =
@@ -588,18 +589,20 @@ class RedisStateOpsSpec extends graft.SparkSuite {
     def setrange(base: String, off: Long, v: String) =
       fold(k, base, opRows(
         op(Op(k, "setrange", "string", off.toString, v, None), 2)))
-    // "café" is 63 61 66 c3 a9: five bytes, four chars
-    val cafe = set("café")
+    // "a€b" is 61 e2 82 ac 62: five bytes, three chars
+    val euro = set("a€b")
     // byte 5 is the end: "!" appends, with no zero padding
-    assert(setrange(cafe, 5, "!") == set("café!"))
-    // bytes 3..4 are é; "ée" (c3 a9 65) rewrites them and appends
-    assert(setrange(cafe, 3, "ée") == set("cafée"))
-    // past the end: zero bytes pad from byte 5, not from char 4
-    assert(setrange(cafe, 7, "x") == set("café\u0000\u0000x"))
-    // a splice that starts at é's second byte, or ends before it,
-    // would leave a lone a9 or c3 byte: the key drops
-    assert(setrange(cafe, 4, "x").startsWith(TombPrefix))
-    assert(setrange(cafe, 3, "e").startsWith(TombPrefix))
+    assert(setrange(euro, 5, "!") == set("a€b!"))
+    // bytes 4.. are "b": "cd" rewrites it and appends
+    assert(setrange(euro, 4, "cd") == set("a€cd"))
+    // bytes 1..3 are €; "éz" (c3 a9 7a) rewrites exactly them
+    assert(setrange(euro, 1, "éz") == set("aézb"))
+    // past the end: zero bytes pad from byte 5, not from char 3
+    assert(setrange(euro, 7, "x") == set("a€b\u0000\u0000x"))
+    // a splice that starts at €'s second byte, or ends inside it,
+    // would leave a stray 82/ac or e2 byte: the key drops
+    assert(setrange(euro, 2, "x").startsWith(TombPrefix))
+    assert(setrange(euro, 0, "xy").startsWith(TombPrefix))
     // U+1F600 is f0 9f 98 80: four bytes, two UTF-16 chars
     val grin = set("😀x")
     assert(setrange(grin, 4, "y") == set("😀y"))
@@ -614,6 +617,32 @@ class RedisStateOpsSpec extends graft.SparkSuite {
     // under it, its four bytes past it
     assert(setrange(null, (1L << 26) - 3, "😀")
       .startsWith(TombPrefix))
+    // U+00E9 is c3 a9 when SET wrote it, but a char the bit commands
+    // wrote (one char = one byte) looks the same: a splice that ends
+    // at or before its first byte is exact either way
+    val cafe = set("café")
+    assert(setrange(cafe, 1, "ob") == set("cobé"))
+    // past it, the server holds 63 61 66 c3 a9 21 for SET's "café"
+    // and 63 61 66 e9 00 21 for the same chars made by SETBIT: drop
+    assert(setrange(cafe, 5, "!").startsWith(TombPrefix))
+    assert(setrange(cafe, 3, "ée").startsWith(TombPrefix))
+    def bits(ops: Seq[Op]) = fold(k, null, opRows(ops.zipWithIndex
+      .map { case (o, i) => op(o, i + 1L) }: _*))
+    def setbit(off: Int) = Op(k, "setbit", "string", off.toString, "1",
+      None)
+    def setrangeOp(off: Int, v: String) =
+      Op(k, "setrange", "string", off.toString, v, None)
+    // SETBIT k 0 1 leaves the one byte 80; SETRANGE k 2 x makes the
+    // server's 80 00 78, which the face cannot tell from SET text:
+    // the key drops rather than landing "\u0080x" (80 78)
+    assert(bits(Seq(setbit(0))) == set("\u0080"))
+    assert(bits(Seq(setbit(0), setrangeOp(2, "x")))
+      .startsWith(TombPrefix))
+    // ff ff then SETRANGE k 2 ab: the server's ff ff 61 62 keeps both
+    // bytes; the fold drops rather than landing "\u00ffab"
+    val ffff = (0 until 16).map(setbit)
+    assert(bits(ffff) == set("\u00ff\u00ff"))
+    assert(bits(ffff :+ setrangeOp(2, "ab")).startsWith(TombPrefix))
   }
 
   test("numeric edges fold server-exactly: inf scores are legal, " +
