@@ -119,7 +119,7 @@ object TaskConfig {
     * given as `k1=v1,k2=v2`.
     */
   final case class MetricsConfig(httpHost: String, httpPort: Int,
-      labels: Map[String, String], workers: Int = 2)
+      labels: Map[String, String])
 
   final case class Task(
       extractType: ExtractType,
@@ -131,7 +131,6 @@ object TaskConfig {
       parallelism: Int,
       sampleRate: Option[Int] = None,
       keysByTable: Map[String, Seq[String]],
-      orderColsByTable: Map[String, Seq[String]],
       // the reference's `json:`-format filter configs (config.md
       // [filter] table): per-table column drops and source-side WHERE
       ignoreColsByTable: Map[(String, String), Seq[String]] = Map.empty,
@@ -189,11 +188,10 @@ object TaskConfig {
       httpPort: Int = 0,
       serveTimeoutSecs: Int = 60,
       // [pipeline] flow-control knobs (config.md:294-298): admission
-      // cap, rate governor, flush cadence, counter window (defaulting
-      // to the flush cadence, as documented)
+      // cap, rate governor, counter window (defaulting to the
+      // checkpoint_interval_secs flush cadence, as documented)
       bufferSize: Int = 16000,
       maxRps: Option[Long] = None,
-      checkpointIntervalSecs: Int = 10,
       counterTimeWindowSecs: Int = 10,
       // [sinker] conflict_policy (task_config.rs:863-864, default
       // interrupt) — struct-sink DDL failure handling
@@ -231,16 +229,15 @@ object TaskConfig {
 
   /** `[extractor]` source-side tuning (task_config.rs:440-530 and the
     * per-engine ExtractorConfig variants). Defaults mirror the
-    * reference exactly. The connection knobs (max_connections,
-    * keepalives, is_direct_connection, app_name) type-check reference
-    * configs verbatim and park at the dial boundary; the position
-    * knobs (binlog file/pos, gtid set, start/end time) and heartbeats
-    * are wired into the replay/compose paths.
+    * reference exactly. The connection and heartbeat knobs
+    * (keepalives, app_name, heartbeat_interval_secs/heartbeat_tb)
+    * type-check reference configs verbatim and park at the dial
+    * boundary; the position knobs (binlog file/pos, gtid set) are
+    * wired into the replay/compose paths.
     */
   final case class SourceTuning(
       heartbeatIntervalSecs: Int = 10,
       heartbeatTb: Option[String] = None,
-      heartbeatKey: Option[String] = None,
       keepaliveIdleSecs: Int = 60,
       keepaliveIntervalSecs: Int = 10,
       binlogHeartbeatIntervalSecs: Int = 10,
@@ -250,13 +247,9 @@ object TaskConfig {
       serverId: Option[Long] = None,
       gtidEnabled: Boolean = false,
       gtidSet: Option[String] = None,
-      startTimeUtc: Option[String] = None,
-      endTimeUtc: Option[String] = None,
       /** mongo `source=change_stream|op_log` (task_config.rs:669). */
       mongoSource: String = "change_stream",
       appName: String = "ape_dts",
-      maxConnections: Int = 10,
-      isDirectConnection: Boolean = false,
       maxMbps: Option[Long] = None,
       /** struct extractors fetch catalog meta `db_batch_size` schemas
         * per query (task_config.rs DEFAULT_DB_BATCH_SIZE).
@@ -337,7 +330,6 @@ object TaskConfig {
         */
       batchMemoryMb: Option[Int] = None,
       appName: String = "ape_dts",
-      maxConnections: Int = 10,
       maxMbps: Option[Long] = None,
       /** redis statistic sinker gates (redis_statistic_sinker.rs:
         * 42,55): entries below the thresholds are dropped from the
@@ -373,37 +365,30 @@ object TaskConfig {
   final case class RuntimeOptions(
       logLevel: String = "info",
       logDir: String = "./logs",
-      log4rsFile: String = "./log4rs.yaml",
       checkResultStdoutOnly: Boolean = false)
 
-  /** `[checker]` inline-check options (checker_config.rs defaults;
-    * the section requires an explicit `enable` when present —
-    * task_config.rs:788-798).
-    */
   /** S3 artifact destination (s3_config.rs) — parsed and typed so
     * reference configs load; uploads themselves are deployment-side.
     */
-  final case class S3Cfg(bucket: String, accessKey: String = "",
-      secretKey: String = "", region: String = "", endpoint: String = "",
-      rootDir: String = "", rootUrl: String = "", keyPrefix: String = "")
+  final case class S3Cfg(bucket: String, region: String = "")
 
+  /** `[checker]` options (checker_config.rs defaults; the section
+    * requires an explicit `enable` when present —
+    * task_config.rs:788-798). A check-shaped snapshot reads them; a
+    * `cdc` task refuses `enable=true`, as there is no inline CDC check.
+    */
   final case class CheckerOptions(
       enable: Boolean = false,
       dbType: String = "",
       url: String = "",
       batchSize: Int = 200,
       queueSize: Int = 200,
-      maxConnections: Int = 8,
       sampleRate: Option[Int] = None,
       outputFullRow: Boolean = false,
       outputReviseSql: Boolean = false,
-      reviseMatchFullRow: Boolean = false,
-      retryIntervalSecs: Int = 0,
-      maxRetries: Int = 0,
       checkLogDir: String = "",
       checkLogFileSize: String = "100mb",
       checkLogMaxRows: Int = 1000,
-      cdcCheckLogIntervalSecs: Int = 30,
       checkLogS3: Boolean = false,
       s3: Option[S3Cfg] = None)
 
@@ -416,8 +401,7 @@ object TaskConfig {
     */
   sealed trait ResumerCfg
   case object DummyResumer extends ResumerCfg
-  final case class ResumeFromLog(logDir: String,
-      configFile: String = "") extends ResumerCfg
+  final case class ResumeFromLog(logDir: String) extends ResumerCfg
   final case class ResumeFromDb(url: String, dbType: String,
       tableFullName: String, maxConnections: Int = 8,
       fromTarget: Boolean = false) extends ResumerCfg
@@ -571,8 +555,7 @@ object TaskConfig {
       MetricsConfig(
         httpHost = m.get("http_host", "127.0.0.1"),
         httpPort = m.get("http_port", "9090").toInt,
-        labels = labels,
-        workers = m.get("workers", "2").toInt)
+        labels = labels)
     }
 
     // PG CDC slot lifecycle config (pg_cdc_client.rs fields), present
@@ -608,7 +591,6 @@ object TaskConfig {
       // percent 1..99 — estimated snapshot sampling (ExplainEstimate)
       sampleRate = ex.get("sample_rate", "").toIntOption,
       keysByTable = colSpec(ex, "id_cols"),
-      orderColsByTable = colSpec(ex, "order_cols"),
       ignoreColsByTable = ignoreCols,
       whereByTable = whereConds,
       parallelType = p.section("parallelizer")
@@ -646,8 +628,6 @@ object TaskConfig {
       serveTimeoutSecs = pl.get("serve_timeout_secs", "60").toInt,
       bufferSize = pl.get("buffer_size", "16000").toInt,
       maxRps = pl.get("max_rps", "").toLongOption,
-      checkpointIntervalSecs =
-        pl.get("checkpoint_interval_secs", "10").toInt,
       // absent OR an explicit 0 falls back to checkpoint_interval_secs
       // (task_config.rs:1170-1171) — a zero-width monitor window would
       // evict every counter entry immediately
@@ -662,7 +642,6 @@ object TaskConfig {
         heartbeatIntervalSecs =
           ex.get("heartbeat_interval_secs", "10").toInt,
         heartbeatTb = ex("heartbeat_tb").filter(_.nonEmpty),
-        heartbeatKey = ex("heartbeat_key").filter(_.nonEmpty),
         keepaliveIdleSecs = ex.get("keepalive_idle_secs", "60").toInt,
         keepaliveIntervalSecs =
           ex.get("keepalive_interval_secs", "10").toInt,
@@ -675,13 +654,8 @@ object TaskConfig {
         serverId = ex("server_id").filter(_.nonEmpty).map(_.toLong),
         gtidEnabled = ex.get("gtid_enabled", "false").toBoolean,
         gtidSet = ex("gtid_set").filter(_.nonEmpty),
-        startTimeUtc = ex("start_time_utc").filter(_.nonEmpty),
-        endTimeUtc = ex("end_time_utc").filter(_.nonEmpty),
         mongoSource = ex.get("source", "change_stream"),
         appName = ex.get("app_name", "ape_dts"),
-        maxConnections = ex.get("max_connections", "10").toInt,
-        isDirectConnection =
-          ex.get("is_direct_connection", "false").toBoolean,
         maxMbps = ex.get("max_mbps", "").toLongOption,
         dbBatchSize = ex.get("db_batch_size", "100").toInt,
         ddlMetaTb = ex("ddl_meta_tb").filter(_.nonEmpty),
@@ -725,7 +699,6 @@ object TaskConfig {
         batchMemoryMb =
           sk.get("batch_memory_mb", "").toIntOption,
         appName = sk.get("app_name", "ape_dts"),
-        maxConnections = sk.get("max_connections", "10").toInt,
         maxMbps = sk.get("max_mbps", "").toLongOption,
         dataSizeThreshold =
           sk.get("data_size_threshold", "0").toLong,
@@ -749,7 +722,6 @@ object TaskConfig {
         RuntimeOptions(
           logLevel = rz.get("log_level", "info"),
           logDir = rz.get("log_dir", "./logs"),
-          log4rsFile = rz.get("log4rs_file", "./log4rs.yaml"),
           checkResultStdoutOnly =
             rz.get("check_result_stdout_only", "false").toBoolean)
       },
@@ -771,31 +743,16 @@ object TaskConfig {
             url = ck.get("url", ""),
             batchSize = ck.get("batch_size", "200").toInt,
             queueSize = ck.get("queue_size", "200").toInt,
-            maxConnections = ck.get("max_connections", "8").toInt,
             sampleRate = rate,
             outputFullRow = ck.get("output_full_row", "false").toBoolean,
             outputReviseSql =
               ck.get("output_revise_sql", "false").toBoolean,
-            reviseMatchFullRow =
-              ck.get("revise_match_full_row", "false").toBoolean,
-            retryIntervalSecs =
-              ck.get("retry_interval_secs", "0").toInt,
-            maxRetries = ck.get("max_retries", "0").toInt,
             checkLogDir = ck.get("check_log_dir", ""),
             checkLogFileSize = ck.get("check_log_file_size", "100mb"),
             checkLogMaxRows = ck.get("check_log_max_rows", "1000").toInt,
-            cdcCheckLogIntervalSecs =
-              ck.get("cdc_check_log_interval_secs", "30").toInt,
             checkLogS3 = ck.get("check_log_s3", "false").toBoolean,
             s3 = ck("s3_bucket").filter(_.nonEmpty).map(b =>
-              S3Cfg(b,
-                accessKey = ck.get("s3_access_key_id", ""),
-                secretKey = ck.get("s3_secret_access_key", ""),
-                region = ck.get("s3_region", ""),
-                endpoint = ck.get("s3_endpoint", ""),
-                rootDir = ck.get("s3_root_dir", ""),
-                rootUrl = ck.get("s3_root_url", ""),
-                keyPrefix = ck.get("s3_key_prefix", "")))))
+              S3Cfg(b, region = ck.get("s3_region", "")))))
         }
       },
       resumer = {
@@ -808,8 +765,7 @@ object TaskConfig {
             "log_dir, and config_file")
         rz.get("resume_type", "dummy") match {
           case "dummy" => DummyResumer
-          case "from_log" => ResumeFromLog(
-            rz.get("log_dir", "./logs"), rz.get("config_file", ""))
+          case "from_log" => ResumeFromLog(rz.get("log_dir", "./logs"))
           case "from_target" => ResumeFromDb(
             sk.get("url", ""), sk.get("db_type", "file"),
             rz.get("table_full_name", ""),

@@ -767,6 +767,13 @@ object TaskRunner {
     def sinked(n: Long): Unit =
       monitors.sinker.addBatchCounter(Monitoring.SinkedRecordTotal, n,
         1L): Unit
+    // an enabled [checker] on a cdc task asks for the reference's
+    // inline CDC check, which no lane runs: refuse before any capture
+    // is read rather than ship unchecked and end `finished`
+    require(!(task +: cdcTask.toSeq).exists(t =>
+        t.extractType == CdcExtract && t.checker.exists(_.enable)),
+      "inline CDC check ([checker] enable=true on a cdc task) is not " +
+        "supported")
     val checks = precheckLogged(spark, task, log)
     require(checks.filter(_.item == "source_readable").forall(_.ok),
       "precheck failed: source not readable")
@@ -1067,7 +1074,7 @@ object TaskRunner {
       : graft.sources.DbResumer.Dual = {
     import graft.sources.DbResumer
     val posPath = task.positionStore.getOrElse(task.resumer match {
-      case TaskConfig.ResumeFromLog(logDir, _) if logDir.nonEmpty =>
+      case TaskConfig.ResumeFromLog(logDir) if logDir.nonEmpty =>
         s"${logDir.stripSuffix("/")}/" +
           s"${graft.infra.Fs.fileName(caller.id)}.positions.log"
       case _ => caller.positionsFor(task.walCapture.get)

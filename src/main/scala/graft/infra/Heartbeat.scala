@@ -1,7 +1,5 @@
 package graft.infra
 
-import org.apache.spark.sql.streaming.StreamingQueryListener
-
 import graft.sinks.Applier
 
 /** Heartbeat position writer — the reference's lag observability
@@ -13,9 +11,10 @@ import graft.sinks.Applier
   * (the reference adds it to ignore_tbs) or it would echo forever.
   *
   * Position model: the engine's changelog offsets (segment name + seq —
-  * the binlog_filename/next_event_position analog). Spark wiring: a
-  * StreamingQueryListener turns each progress event into a beat; the
-  * interval gate and the statement shape are pure and spec-driven.
+  * the binlog_filename/next_event_position analog). Given an
+  * emitter, `CdcTask.run` offers a beat after each recorded batch
+  * position; the interval gate and the statement shape are pure and
+  * spec-driven.
   */
 object Heartbeat {
 
@@ -75,29 +74,4 @@ object Heartbeat {
       }
     }
   }
-
-  /** Attachable listener: each query-progress event reports the
-    * source's latest available offset (received) and the batch's end
-    * offset (flushed through this batch) to the emitter.
-    */
-  def listener(emitter: Emitter): StreamingQueryListener =
-    new StreamingQueryListener {
-      override def onQueryStarted(
-          e: StreamingQueryListener.QueryStartedEvent): Unit = ()
-      override def onQueryTerminated(
-          e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-      override def onQueryProgress(
-          e: StreamingQueryListener.QueryProgressEvent): Unit = {
-        val ts = e.progress.timestamp
-        e.progress.sources.headOption.foreach { s =>
-          emitter.maybeBeat(Positions(
-            receivedSegment = Option(s.latestOffset).getOrElse(""),
-            receivedSeq = e.progress.batchId,
-            receivedTs = ts,
-            flushedSegment = Option(s.endOffset).getOrElse(""),
-            flushedSeq = e.progress.batchId,
-            flushedTs = ts)): Unit
-        }
-      }
-    }
 }

@@ -2,21 +2,16 @@ package graft.infra
 
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
-import java.util.concurrent.atomic.AtomicReference
 
 import scala.collection.mutable
-
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /** Pipeline observability — the reference's monitor module
   * (/root/reference/dt-common/src/monitor/): a typed counter taxonomy
   * (counter_type.rs), sliding-time-window counters with by-second
   * statistics (time_window_counter.rs:26-160), per-task metric
   * derivation (task_monitor.rs:312-648), Prometheus text exposition
-  * with an HTTP endpoint (prometheus_metrics.rs:29-326), and a
-  * StreamingQueryListener bridging Structured Streaming progress into
-  * the same counters.
+  * with an HTTP endpoint (prometheus_metrics.rs:29-326), and the
+  * role-tagged monitor bundle a running task counts into.
   *
   * Scale rationale: all state here is DRIVER-side and O(window ×
   * maxSubCount) bounded — executors never see these objects. At 100 TB
@@ -254,9 +249,6 @@ object Monitoring {
 
     def gaugeValue(ct: CounterType): Option[Long] =
       synchronized(gauges.get(ct)).map(_.value)
-
-    def hasLiveWindowData: Boolean =
-      synchronized(windowed.values.toSeq).exists(_.hasLiveData)
 
     /** Render the reference's flush log lines (monitor.rs:98-147). */
     def flushLines(): Seq[String] = {
@@ -539,7 +531,7 @@ object Monitoring {
     def stop(): Unit = server.stop(0)
   }
 
-  // ------------------------------------------------- streaming bridge
+  // ---------------------------------------------------- task monitors
   /** Role-tagged monitor bundle for one running task. */
   final case class PipelineMonitors(extractor: Monitor, pipeline: Monitor,
       sinker: Monitor, checker: Monitor) {
@@ -558,46 +550,5 @@ object Monitoring {
         new Monitor(taskId, "pipeline", windowSecs, maxSubCount, clock),
         new Monitor(taskId, "sinker", windowSecs, maxSubCount, clock),
         new Monitor(taskId, "checker", windowSecs, maxSubCount, clock))
-  }
-
-  /** Bridge streaming progress into the monitors: per micro-batch the
-    * extractor sees the input rows (ExtractedRecords + pushed
-    * RecordCount), the sinker sees one rt_per_query observation (batch
-    * duration ms, like the reference's per-batch sink rt), and the
-    * pipeline timestamp gauge tracks event time.
-    */
-  final class ProgressListener(monitors: PipelineMonitors)
-      extends StreamingQueryListener {
-    private val lastProgress = new AtomicReference[String]("")
-
-    override def onQueryStarted(
-        event: StreamingQueryListener.QueryStartedEvent): Unit = ()
-
-    override def onQueryProgress(
-        event: StreamingQueryListener.QueryProgressEvent): Unit = {
-      val p = event.progress
-      monitors.extractor.addBatchCounter(ExtractedRecords,
-        p.numInputRows, 1L)
-      monitors.extractor.addBatchCounter(RecordCount, p.numInputRows, 1L)
-      monitors.sinker.addCounter(RtPerQuery, p.batchDuration)
-      monitors.sinker.addBatchCounter(RecordCount, p.numInputRows, 1L)
-      monitors.pipeline.setCounter(TimestampCounter, p.timestamp match {
-        case null => 0L
-        case ts => java.time.Instant.parse(ts).toEpochMilli
-      })
-      lastProgress.set(p.json)
-    }
-
-    override def onQueryTerminated(
-        event: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-
-    def lastProgressJson: String = lastProgress.get()
-  }
-
-  def attach(spark: SparkSession, monitors: PipelineMonitors)
-      : ProgressListener = {
-    val l = new ProgressListener(monitors)
-    spark.streams.addListener(l)
-    l
   }
 }

@@ -352,10 +352,6 @@ object MongoOps {
     * (`mongo_snapshot_extractor.rs:144-160,219-227`): sorted `_id` scan,
     * strictly-greater resume key, page-sized limit.
     */
-  def findStatement(resumeKey: String, batchSize: Int): String =
-    s"""{"find":{"_id":{"$$gt":"$resumeKey"}},"sort":{"_id":1},""" +
-      s""""limit":$batchSize}"""
-
   private def findStatementCol(resumeKey: Column, batchSize: Int): Column =
     concat(lit("""{"find":{"_id":{"$gt":""""), resumeKey,
       lit(s""""}},"sort":{"_id":1},"limit":$batchSize}"""))

@@ -4,11 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.streaming.CdcPipeline
-
 /** Streaming-shaped operators exposed as batch queries for the oracle
-  * gate (the streaming execution itself is covered by StreamingSpec with
-  * a memory sink — same plans, micro-batched).
+  * gate.
   */
 object StreamQueries {
 
@@ -46,12 +43,21 @@ object StreamQueries {
       |    ELSE ((user_id * 2654435761) % 1000000007) % 8 END AS lane
       |FROM c""".stripMargin
 
-  /** q61 — tumbling-window aggregation (the streaming analytics plan run
-    * on the bounded table; StreamingSpec runs the identical plan through
-    * readStream and asserts equality).
+  /** q61 — watermarked tumbling-window aggregation over the change
+    * stream, run on the bounded table: counts and sums per 6-hour
+    * window × event type.
     */
   def windowedStats(spark: SparkSession, dir: String): DataFrame =
-    CdcPipeline.windowedStats(Cdc.changes(spark, dir))
+    Cdc.changes(spark, dir)
+      .withWatermark("ts", "1 hour")
+      .groupBy(window(col("ts"), "6 hours"), col("event_type"))
+      .agg(count(lit(1)).as("n"),
+        // noisy double: floor-quantized micro-units (decimal casts of
+        // such values round differently per engine — Relational.fsum)
+        (sum(floor(col("value") * lit(1000000.0))).cast(DoubleType) /
+          lit(1000000.0)).as("sum_value"))
+      .select(unix_timestamp(col("window.start")).as("win_start"),
+        col("event_type"), col("n"), col("sum_value"))
 
   val windowedStatsSql: String =
     """SELECT (CAST(floor(epoch(ts)) AS BIGINT) // 21600) * 21600

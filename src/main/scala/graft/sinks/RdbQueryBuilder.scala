@@ -70,16 +70,6 @@ object RdbQueryBuilder {
       s"(${valuesTuples(keys.size, rows)})"
   }
 
-  /** Batch SELECT by keys — the checker's target lookup
-    * (rdb_query_builder.rs:603).
-    */
-  def batchSelect(d: Dialect, table: String, cols: Seq[String],
-      keys: Seq[String], rows: Int): String = {
-    val keyTuple = keys.map(d.quote).mkString("(", ",", ")")
-    s"SELECT ${cols.map(d.quote).mkString(", ")} FROM $table " +
-      s"WHERE $keyTuple IN (${valuesTuples(keys.size, rows)})"
-  }
-
   /** Single-row UPDATE (updates apply serially in the reference —
     * mysql_sinker.rs:267-363).
     */

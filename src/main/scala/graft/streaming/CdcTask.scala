@@ -35,10 +35,10 @@ import graft.sources.{DbResumer, PgOutput, PgSlotLifecycle}
   * Batches break only at transaction boundaries (the reference drains
   * whole txns into a batch before sinking — base_pipeline.rs:96-191), so
   * a recorded position is always a commit end and a restart never
-  * replays half a transaction. At cluster scale the same
-  * [[shipBatch]] body runs as the `foreachBatch` of the
-  * [[graft.sources.ChangelogSource]] DSv2 stream; this orchestrator is
-  * the single-stream task form with explicit position bookkeeping.
+  * replays half a transaction. This orchestrator is the captured-stream
+  * task form with explicit position bookkeeping; the live lanes land
+  * their [[graft.sources.ChangelogSource]] micro-batches through
+  * `LiveCdc.landBatch` instead.
   *
   * [[run]] prepares batch i+1 while batch i ships, as the reference's
   * extractor fills a bounded `DtQueue` that the pipeline drains
@@ -175,33 +175,20 @@ object CdcTask {
   /** Name of the thread on which [[run]] prepares the next batch. */
   final val PrepareThreadName = "graft-cdc-prepare"
 
-  /** Ship one batch as ONE plan, whatever the number of tables: every
-    * event becomes a row of a single frame `(_t, _k, _c0.._cN,
-    * row_type, _seq)` — source-table index, key values, positional
-    * column values — compacted in one shuffle on `(_t, _k)` and shipped
-    * by one job. `_k` is null when any key value is, so a table's
-    * null-keyed rows take compaction's serial lane. Each row renders as
-    * JSON with its own table's routed field names (plus the sign and
-    * version columns unless `hard_delete`), and goes to the sink of its
-    * (routed table, op). Returns rows shipped per routed table.
+  /** Prepare one batch to ship as ONE plan, whatever the number of
+    * tables: every event becomes a row of a single frame `(_t, _k,
+    * _c0.._cN, row_type, _seq)` — source-table index, key values,
+    * positional column values — compacted in one shuffle on `(_t, _k)`
+    * and shipped by one job. `_k` is null when any key value is, so a
+    * table's null-keyed rows take compaction's serial lane. Each row
+    * renders as JSON with its own table's routed field names (plus the
+    * sign and version columns unless `hard_delete`), and goes to the
+    * sink of its (routed table, op).
     *
-    * The one-call form, `prepareBatch(...)()`: [[run]] calls the two
-    * halves apart to pipeline them, so no caller in the program uses
-    * it; `CdcShipBatchSpec` pins the batch plan through it.
-    */
-  def shipBatch(spark: SparkSession, task: TaskConfig.Task,
-      batchId: Long, events: Seq[ChangeEvent],
-      relCols: Map[(String, String), Seq[String]],
-      relKeys: Map[(String, String), Seq[String]],
-      sinkFor: SinkFactory)
-      : Map[(String, String), Long] =
-    prepareBatch(spark, task, batchId, events, relCols, relKeys,
-      sinkFor)()
-
-  /** Everything of [[shipBatch]] that has no outside effect: resolve the
-    * layouts, build the rows and the frame, compact, render, and plan
-    * the ship. Starts no Spark job. Returns the one remaining action,
-    * which ships the batch and returns rows shipped per routed table.
+    * Everything here has no outside effect: resolve the layouts, build
+    * the rows and the frame, compact, render, and plan the ship. Starts
+    * no Spark job. Returns the one remaining action, which ships the
+    * batch and returns rows shipped per routed table.
     */
   def prepareBatch(spark: SparkSession, task: TaskConfig.Task,
       batchId: Long, events: Seq[ChangeEvent],

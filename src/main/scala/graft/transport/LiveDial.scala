@@ -205,9 +205,4 @@ object LiveDial {
     new MysqlReplicationPump(mysqlConfig(url, src),
       new FsSegmentStore(captureDir),
       dialer(url, readTimeoutMs = src.binlogTimeoutSecs * 1000))
-
-  def pgPump(url: String, slot: graft.sources.PgSlotLifecycle.SlotConfig,
-      captureDir: String): PgReplicationPump =
-    new PgReplicationPump(pgConfig(url, slot),
-      new FsSegmentStore(captureDir), dialer(url))
 }

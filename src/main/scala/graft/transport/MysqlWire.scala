@@ -248,8 +248,6 @@ object MysqlWire {
   def comQuery(sql: String): Array[Byte] =
     Array(0x03.toByte) ++ sql.getBytes("UTF-8")
 
-  def comQuit: Array[Byte] = Array(0x01.toByte)
-
   /** COM_BINLOG_DUMP (0x12): stream from (filename, pos). */
   def comBinlogDump(serverId: Long, file: String, pos: Long)
       : Array[Byte] = {

@@ -17,11 +17,11 @@ import graft.model.ChangeEvent
 import graft.sinks.StreamLoadSink
 import graft.streaming.CdcTask
 
-/** `CdcTask.shipBatch` ships a whole multi-table batch as one plan: the
-  * lines it ships must equal a naive per-table last-write-wins replay,
-  * its job count must not grow with the number of tables, and a batch
-  * of ~100 tables (one wide per-table JSON selection) must still ship
-  * the right lines.
+/** `CdcTask.prepareBatch(...)()` ships a whole multi-table batch as one
+  * plan: the lines it ships must equal a naive per-table last-write-wins
+  * replay, its job count must not grow with the number of tables, and a
+  * batch of ~100 tables (one wide per-table JSON selection) must still
+  * ship the right lines.
   */
 class CdcShipBatchSpec extends SparkSuite {
   import CdcShipBatchSpec._
@@ -111,14 +111,14 @@ class CdcShipBatchSpec extends SparkSuite {
     }
   }
 
-  /** Ship through `shipBatch` into the collecting sinks. */
+  /** Prepare and ship through `prepareBatch` into the collecting sinks. */
   private def ship(t: TaskConfig.Task, events: Seq[ChangeEvent],
       rc: Map[(String, String), Seq[String]] = relCols,
       rk: Map[(String, String), Seq[String]] = relKeys)
       : (Seq[Shipped], Map[(String, String), Long]) = {
     shipped.clear(); chunkSizes.clear()
-    val counts = CdcTask.shipBatch(spark, t, 7L, events, rc, rk,
-      (db, tb, batchId, op) => new CollectingSink(db, tb, batchId, op))
+    val counts = CdcTask.prepareBatch(spark, t, 7L, events, rc, rk,
+      (db, tb, batchId, op) => new CollectingSink(db, tb, batchId, op))()
     (shipped.asScala.toSeq, counts)
   }
 
@@ -222,7 +222,7 @@ class CdcShipBatchSpec extends SparkSuite {
     def jobsFor(events: Seq[ChangeEvent],
         rc: Map[(String, String), Seq[String]]): Int = {
       jobs.set(0)
-      spark.sparkContext.setJobGroup(group, "shipBatch")
+      spark.sparkContext.setJobGroup(group, "prepareBatch")
       try ship(t, events, rc, Map.empty)
       finally spark.sparkContext.clearJobGroup()
       // listener delivery is async: wait for the count to go stable

@@ -89,7 +89,6 @@ class FsDisciplineSpec extends AnyFunSuite {
     val taskPathModules = Seq(
       "sources/ChangelogSource.scala", // executor-side segment reads
       "infra/CheckLogs.scala",         // check_log_dir artifacts
-      "streaming/InlineCdcCheck.scala",// checkLogDir snapshots
       "infra/Precheck.scala",          // source dir probes
       "sinks/LakeSink.scala",          // lake root staging
       "sources/LakeSource.scala",      // lake read-back

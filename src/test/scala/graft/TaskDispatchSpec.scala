@@ -142,6 +142,36 @@ class TaskDispatchSpec extends SparkSuite {
       meta.error)
   }
 
+  test("a cdc task with [checker] enable=true fails before reading its " +
+      "capture instead of shipping unchecked") {
+    val state = tmp("dispatch-cdc-chk")
+    val wal = capture()
+    withWarehouse { (port, puts) =>
+      TaskManager.create(state, "cdcchk",
+        s"""[extractor]
+           |extract_type=cdc
+           |slot_name=chk_slot
+           |batch_size=10
+           |id_cols=t_cdc:id
+           |wal_capture=$wal
+           |
+           |[filter]
+           |do_dbs=public
+           |
+           |[sinker]
+           |url=http://127.0.0.1:$port
+           |
+           |[checker]
+           |enable=true
+           |""".stripMargin)
+      val meta = TaskManager.start(spark, state, "cdcchk")
+      assert(meta.status == "failed", meta.error)
+      assert(meta.error.exists(_.contains("inline CDC check")), meta.error)
+      assert(puts.isEmpty)
+      assert(!Files.exists(Paths.get(state, "cdcchk", "positions.log")))
+    }
+  }
+
   test("sink_type=sql logs the capture as runnable statements") {
     val state = tmp("dispatch-sql-state")
     val sink = tmp("dispatch-sql-sink")
