@@ -7,11 +7,13 @@ import graft.infra.Monitoring
 import graft.transport.{FsSegmentStore, LiveDial, MysqlReplicationPump,
   PumpPositions, Wire}
 
-/** The live mysql:// CDC task lane — what runs when `[extractor] url`
-  * names a real server instead of a fixture: dial, pump the binlog
-  * stream into capture segments under the task dir, stream them
-  * through the EXISTING ChangelogSource → compaction machinery, and
-  * land per-table compacted end states under the sink. The same
+/** The live CDC task lanes (mysql://, postgres://, redis://,
+  * mongodb://) — what runs when `[extractor] url` names a real server
+  * instead of a fixture: dial, pump the replication stream into
+  * capture segments under the task dir, land them through the
+  * EXISTING decode → compaction machinery (ChangelogSource for
+  * mysql/pg, the [[LiveLanders]] for redis/mongo), and leave
+  * per-table compacted end states under the sink. The same
   * produce→consume topology the reference runs in one process
   * (extractor → pipeline → sinker), here split at the segment seam so
   * the pump is a single lightweight thread and everything after it is
@@ -34,13 +36,26 @@ object LiveCdc {
       url.startsWith("rediss://") || url.startsWith("mongodb://") ||
       url.startsWith("mongodb+srv://")
 
-  /** Drain-once semantics (the task-manager unit): one pump session
-    * (until the server ends the dump or the wire drops), publish all
-    * segments, stream-compact-land, report. A resident deployment
-    * loops this under the supervisor with `pump.run`.
+  /** The one entry point of every live lane. Each source kind (mysql,
+    * pg, redis, mongo) has one body: its pump runs on a [[LanePump]]
+    * thread and its landing goes through the shared landing loop.
+    * `stop` selects the pump mode:
+    *
+    *  - `None` is a DRAIN (the task-manager unit): one pump session
+    *    under [[drainSession]]'s rule, the tail published and its
+    *    position persisted, then everything captured lands in one
+    *    pass. The landing starts only after the pump ended: landing
+    *    while pumping split each drain into several micro-batches and
+    *    paid the per-batch cost several times over.
+    *  - `Some(flag)` is RESIDENT (`[extractor] resident=true`): the
+    *    pump runs supervised (`pump.run(until = flag)`) while the
+    *    landing loop consumes whatever publishes on the `triggerMs`
+    *    cadence; the flag (the task manager's stop flag) winds both
+    *    down. Returns once both halves have wound down and the landed
+    *    tables are finalized.
     *
     * `onProgress` is the liveness-beacon hook: TaskManager passes its
-    * `touchAlive` so a long-running live drain never looks like a
+    * `touchAlive` so a long-running live lane never looks like a
     * crashed runner to a concurrent `watch` pass (which would demote
     * it and start a SECOND pump on the same capture dir/checkpoint).
     */
@@ -48,21 +63,28 @@ object LiveCdc {
       taskDir: String, dialOverride: Option[() => Wire] = None,
       onProgress: () => Unit = () => (),
       dialNodeOverride: Option[String => Wire] = None,
-      monitor: Monitoring.Monitor = Monitoring.landedFace())
-      : Report =
-    if (task.sourceDir.startsWith("mysql://"))
-      runMysql(spark, task, taskDir, dialOverride, onProgress)
-    else if (task.sourceDir.startsWith("redis://") ||
-        task.sourceDir.startsWith("rediss://")) {
+      monitor: Monitoring.Monitor = Monitoring.landedFace(),
+      stop: Option[() => Boolean] = None,
+      triggerMs: Long = 500L): Report = {
+    val lane = new Lane(spark, task, taskDir, stop, triggerMs, onProgress)
+    val url = task.sourceDir
+    if (url.startsWith("mysql://")) mysql(lane, dialOverride)
+    else if (url.startsWith("redis://") || url.startsWith("rediss://")) {
       if (task.source.isCluster)
-        runRedisCluster(spark, task, taskDir, dialOverride,
-          dialNodeOverride, onProgress, monitor)
-      else runRedis(spark, task, taskDir, dialOverride, onProgress,
-        monitor)
-    } else if (task.sourceDir.startsWith("mongodb://") ||
-        task.sourceDir.startsWith("mongodb+srv://"))
-      runMongo(spark, task, taskDir, dialOverride, onProgress)
-    else runPg(spark, task, taskDir, dialOverride, onProgress)
+        redisCluster(lane, dialOverride, dialNodeOverride, monitor)
+      else redis(lane, dialOverride, monitor)
+    } else if (url.startsWith("mongodb://") ||
+        url.startsWith("mongodb+srv://"))
+      mongo(lane, dialOverride)
+    else pg(lane, dialOverride)
+  }
+
+  /** A mysql drain: [[run]] with no stop flag, for callers that pin
+    * the mysql lane.
+    */
+  def runMysql(spark: SparkSession, task: TaskConfig.Task,
+      taskDir: String, dialOverride: Option[() => Wire] = None): Report =
+    mysql(new Lane(spark, task, taskDir), dialOverride)
 
   /** Wire-drop tolerance for a drain-once session: a live tail never
     * ends on its own, so a read timeout / peer close mid-stream is the
@@ -106,23 +128,111 @@ object LiveCdc {
       inner.bytesOf(name)
   }
 
-  def runMysql(spark: SparkSession, task: TaskConfig.Task,
-      taskDir: String, dialOverride: Option[() => Wire] = None,
-      onProgress: () => Unit = () => ()): Report = {
+  /** What every lane body shares: the task and its dirs, the pump
+    * mode (`stop`, see [[run]]), the trigger cadence and the beacon.
+    */
+  private final class Lane(val spark: SparkSession,
+      val task: TaskConfig.Task, val taskDir: String,
+      val stop: Option[() => Boolean] = None, val triggerMs: Long = 500L,
+      val onProgress: () => Unit = () => ()) {
     val captureDir = s"$taskDir/capture"
+
+    def beacon(store: graft.transport.SegmentStore)
+        : graft.transport.SegmentStore = new BeaconStore(store, onProgress)
+
+    /** A single-server pump on its own thread in this lane's mode. A
+      * drain publishes its tail only after a session that ended by the
+      * drain rule; a failed drain publishes nothing (its position is
+      * never persisted, so the next start re-pumps that range). A
+      * resident pump publishes its tail however it ended.
+      */
+    def pumpThread(p: graft.transport.PumpSupervision,
+        store: FsSegmentStore,
+        progress: () => Long, afterPublish: () => Unit,
+        name: String): LanePump = {
+      val publish = () => { store.publishAll(); afterPublish() }
+      stop match {
+        case None => new LanePump(name,
+          () => { drainSession(p, progress); publish() }, () => ())
+        case Some(flag) => new LanePump(name,
+          () => p.run(until = flag), publish)
+      }
+    }
+
+    /** The landing loop's stop flag. A drain waits here for its pump,
+      * rethrows the pump's error before any landing starts, and
+      * persists the published position BEFORE it lands: a landing
+      * failure then never re-pumps what was already captured. A drain's
+      * landing loop never loops — its pump has ended, so it lands
+      * everything in one pass.
+      */
+    def landingStop(rp: LanePump, persist: () => Unit): () => Boolean =
+      stop.getOrElse {
+        rp.await()
+        persist()
+        onProgress()
+        () => true
+      }
+  }
+
+  /** A lane's pump half on its own daemon thread: `body` pumps (one
+    * drain session, or a supervised residency), `tail` publishes what
+    * it captured, on a failure too, and the error surfaces on
+    * [[rethrow]].
+    */
+  private final class LanePump(name: String, body: () => Unit,
+      tail: () => Unit) {
+    private val error =
+      new java.util.concurrent.atomic.AtomicReference[Throwable](null)
+    private val thread = new Thread(() => {
+      try {
+        body()
+        tail()
+      } catch {
+        case t: Throwable =>
+          // error FIRST: the landing loop keys on it, and the tail
+          // publish below can itself throw (a full disk fails the pump
+          // AND the publish) — publishing first lost the pump's death
+          // and the loop spun forever looking healthy
+          error.set(t)
+          try tail() catch { case p: Throwable => t.addSuppressed(p) }
+      }
+    }, name)
+    thread.setDaemon(true)
+    thread.start()
+
+    def running: Boolean = error.get() == null && thread.isAlive
+
+    /** Wait for wind-down: the pump observes stop() between packets —
+      * a blocked read clears at the socket timeout, so wait past it
+      * (leaving early would strand the final publishAll unread).
+      */
+    def join(graceMs: Long): Unit = {
+      val deadline = System.currentTimeMillis() + graceMs
+      while (thread.isAlive && System.currentTimeMillis() < deadline)
+        thread.join(500)
+    }
+
+    /** A drain's wait: the whole session and its tail, then its error. */
+    def await(): Unit = { thread.join(); rethrow() }
+
+    def rethrow(): Unit = Option(error.get()).foreach(t => throw t)
+  }
+
+  private def mysql(lane: Lane, dialOverride: Option[() => Wire])
+      : Report = {
+    import lane._
     val store = new FsSegmentStore(captureDir)
     val pump = new MysqlReplicationPump(
-      mysqlResumeConfig(task, taskDir),
-      new BeaconStore(store, onProgress),
+      mysqlResumeConfig(task, taskDir), beacon(store),
       dialOverride.getOrElse(LiveDial.dialer(task.sourceDir,
         readTimeoutMs = task.source.binlogTimeoutSecs * 1000)))
-    val events = drainSession(pump, () => pump.eventsAppended)
-    store.publishAll()
-    pump.markAllPublished()
-    persistMysql(taskDir, pump.publishedPosition)
-    onProgress()
-    consume(spark, task, taskDir, captureDir, "binlog",
-      store.names.size, events, pump.position, onProgress)
+    val rp = pumpThread(pump, store, () => pump.eventsAppended,
+      () => pump.markAllPublished(), "graft-mysql-pump")
+    val persist = () => persistMysql(taskDir, pump.publishedPosition)
+    landStream(lane, "binlog", rp, persist)
+    finalizedReport(spark, task, store.publishedCount,
+      pump.eventsAppended, pump.position)
   }
 
   /** The pump config for this start: the persisted position (what the
@@ -144,8 +254,8 @@ object LiveCdc {
       gtidSet = p.getOrElse("gtids", base.gtidSet))
   }
 
-  /** Persist a DURABLE position only — callers pass `pump.position`
-    * after a publishAll, or `pump.publishedPosition` mid-stream.
+  /** Persist a DURABLE position only: `pump.publishedPosition`,
+    * never the live position ahead of an unpublished spool.
     */
   private def persistMysql(taskDir: String,
       position: (String, Long, String)): Unit = {
@@ -154,45 +264,47 @@ object LiveCdc {
       "file" -> file, "pos" -> pos.toString, "gtids" -> gtids))
   }
 
-  /** The PG twin: slot lifecycle + COPY-both through the PG pump,
+  /** The PG lane: slot lifecycle + COPY-both through the PG pump,
     * capture in the bare-frame pgoutput segment format, same
     * downstream machinery with `format=pgoutput`.
     */
-  def runPg(spark: SparkSession, task: TaskConfig.Task,
-      taskDir: String, dialOverride: Option[() => Wire] = None,
-      onProgress: () => Unit = () => ()): Report = {
-    val captureDir = s"$taskDir/capture"
+  private def pg(lane: Lane, dialOverride: Option[() => Wire]): Report = {
+    import lane._
     val store = new FsSegmentStore(captureDir)
     val slot = task.slot.getOrElse(
       graft.sources.PgSlotLifecycle.SlotConfig("graft_slot"))
-    // no PumpPositions here: PG's durable resume position is the
-    // slot's confirmed_flush_lsn, which the pump re-reads per connect
     val pump = new graft.transport.PgReplicationPump(
       LiveDial.pgConfig(task.sourceDir, slot)
         .copy(maxSegmentSecs = task.source.maxSegmentSecs),
-      new BeaconStore(store, onProgress),
+      beacon(store),
+      // the SAME timeout knob the wind-down grace is sized from
+      // (landStream waits binlogTimeoutSecs×2 + 5s for the pump to
+      // clear a blocked read): leaving the dialer at its 60 s default
+      // while the grace followed the knob meant any
+      // binlog_timeout_secs < 30 truncated the PG wind-down — the
+      // final spool published after join() and was never consumed
       dialOverride.getOrElse(LiveDial.dialer(task.sourceDir,
         readTimeoutMs = task.source.binlogTimeoutSecs * 1000)))
-    val frames = drainSession(pump, () => pump.framesAppended)
-    store.publishAll()
-    onProgress()
-    consume(spark, task, taskDir, captureDir, "pgoutput",
-      store.names.size, frames,
-      ("", 0L, pump.position), onProgress)
+    val rp = pumpThread(pump, store, () => pump.framesAppended,
+      () => (), "graft-pg-pump")
+    // nothing to persist: PG's durable resume position is the
+    // server-side slot, advanced only past published segments by the
+    // ack protocol and re-read by the pump per connect
+    landStream(lane, "pgoutput", rp, persist = () => ())
+    finalizedReport(spark, task, store.publishedCount,
+      pump.framesAppended, ("", 0L, pump.position))
   }
 
-  /** The Redis lane: one PSYNC session into a capture segment, then
-    * the EXISTING decode (RDB snapshot + command tail) lands two
-    * tables under the sink — `redis.snapshot` (the RDB entries) and
+  /** The Redis lane: PSYNC sessions into capture segments, then the
+    * EXISTING decode (RDB snapshot + command tail) lands two tables
+    * under the sink — `redis.snapshot` (the RDB entries) and
     * `redis.commands` (the decoded tail with replication offsets) —
-    * the same landing shapes the snapshot_file/check tasks use.
+    * the same landing shapes the snapshot_file/check tasks use — and
+    * folds the state ops into `redis.state`.
     */
-  def runRedis(spark: SparkSession, task: TaskConfig.Task,
-      taskDir: String, dialOverride: Option[() => Wire] = None,
-      onProgress: () => Unit = () => (),
-      monitor: Monitoring.Monitor = Monitoring.landedFace())
-      : Report = {
-    val captureDir = s"$taskDir/capture"
+  private def redis(lane: Lane, dialOverride: Option[() => Wire],
+      monitor: Monitoring.Monitor): Report = {
+    import lane._
     val store = new FsSegmentStore(captureDir)
     val ep = LiveDial.parseUrl(task.sourceDir)
     val persisted = PumpPositions.read(taskDir)
@@ -209,34 +321,18 @@ object LiveCdc {
         startDb = persisted.get("select_db").flatMap(_.toLongOption)
           .getOrElse(0L),
         maxSegmentSecs = task.source.maxSegmentSecs),
-      new BeaconStore(store, onProgress),
+      beacon(store),
       dialOverride.getOrElse(LiveDial.dialer(task.sourceDir)))
-    // a live tail never ends on its own: one session, EOF/drop ends
-    // it — but only AFTER progress (a server that closes during the
-    // handshake is a config error the supervisor must see)
-    drainSession(pump, () => pump.bytesCaptured)
-    store.publishAll()
-    pump.markAllPublished()
-    PumpPositions.write(taskDir, Map(
-      "repl_id" -> pump.position._1,
-      "repl_offset" -> pump.position._2.toString,
+    val rp = pumpThread(pump, store, () => pump.bytesCaptured,
+      () => pump.markAllPublished(), "graft-redis-pump")
+    val persist = () => PumpPositions.write(taskDir, Map(
+      "repl_id" -> pump.publishedPosition._1,
+      "repl_offset" -> pump.publishedPosition._2.toString,
       "select_db" -> pump.publishedDb.toString))
-    onProgress()
-    // single-pass landing: ONE decode+write job over every new
-    // segment (decode runs on EXECUTORS — the capture can exceed
-    // driver memory), raw faces adopted as deterministic seg=<name>
-    // dirs (crash replay overwrites, never duplicates), state ops as
-    // one LandedTable delta; the consumed ledger skips prior starts'
-    // segments
     val lander = new LiveLanders.RedisLander(spark, task, taskDir,
       captureDir, onProgress, monitor)
-    lander.finish(store.names)
-    sweepConsumedCapture(task, captureDir, lander.ledger)
-    Report(lander.landedSegments.toInt, pump.bytesCaptured,
-      Seq("redis.snapshot" -> lander.snapshotRows,
-        "redis.commands" -> lander.commandRows,
-        "redis.state" -> lander.stateCount(),
-        "redis.state.tombstoned" -> lander.tombstonedKeys),
+    landLoop(lane, rp, persist, () => store.publishedNames, lander)
+    redisReport(lander, pump.bytesCaptured,
       (pump.position._1, pump.position._2, ""))
   }
 
@@ -264,71 +360,21 @@ object LiveCdc {
         s"repl_id.$id" -> replId, s"repl_offset.$id" -> off.toString)
     })
 
-  /** The Redis CLUSTER drain-once lane (`[extractor] is_cluster=true`):
-    * discover masters over the seed url, one PSYNC session per master
-    * into node-prefixed segments, land every published segment, and
-    * persist per-node resume positions.
+  /** The Redis CLUSTER lane (`[extractor] is_cluster=true`): discover
+    * masters over the seed url and pump each into node-prefixed
+    * segments, landed by the same redis landing loop. A drain runs
+    * [[graft.transport.RedisClusterPump.drainAll]] (one session per
+    * master, serially); a residency runs the per-master supervised
+    * fan-out ([[graft.transport.RedisClusterPump.runResident]]), each
+    * pump thread with its OWN store instance via `newStore` (no
+    * cross-thread store-internal state).
     */
-  def runRedisCluster(spark: SparkSession, task: TaskConfig.Task,
-      taskDir: String, dialOverride: Option[() => Wire] = None,
-      dialNodeOverride: Option[String => Wire] = None,
-      onProgress: () => Unit = () => (),
-      monitor: Monitoring.Monitor = Monitoring.landedFace())
-      : Report = {
-    val captureDir = s"$taskDir/capture"
-    val store = new FsSegmentStore(captureDir)
-    val ep = LiveDial.parseUrl(task.sourceDir)
-    val pump = new graft.transport.RedisClusterPump(
-      graft.transport.RedisClusterPump.Config(
-        user = ep.user, password = ep.password,
-        resume = readNodePositions(taskDir),
-        maxSegmentSecs = task.source.maxSegmentSecs),
-      new BeaconStore(store, onProgress),
-      dialOverride.getOrElse(LiveDial.dialer(task.sourceDir)),
-      dialNodeOverride.getOrElse(addr =>
-        LiveDial.nodeDialer(task.sourceDir, addr)()))
-    // persist PER NODE as each shard's drain publishes: one
-    // unreachable master late in the walk must not discard the
-    // already-drained shards' advanced offsets (a stale re-PSYNC
-    // would re-capture their command ranges into new segment names
-    // and double-apply non-idempotent ops in the state fold)
-    val nodePositions = scala.collection.mutable.Map[String,
-      (String, Long)](readNodePositions(taskDir).toSeq: _*)
-    val results = pump.drainAll(onNode = (n, p) => {
-      nodePositions(n.id) = p
-      writeNodePositions(taskDir, nodePositions.toMap)
-    })
-    onProgress()
-    val lander = new LiveLanders.RedisLander(spark, task, taskDir,
-      captureDir, onProgress, monitor)
-    lander.finish(store.names)
-    sweepConsumedCapture(task, captureDir, lander.ledger)
-    Report(lander.landedSegments.toInt,
-      lander.snapshotRows + lander.commandRows,
-      Seq("redis.snapshot" -> lander.snapshotRows,
-        "redis.commands" -> lander.commandRows,
-        "redis.state" -> lander.stateCount(),
-        "redis.state.tombstoned" -> lander.tombstonedKeys),
-      ("cluster", results.size.toLong, ""))
-  }
-
-  /** The Redis CLUSTER resident lane: the per-master supervised pump
-    * fan-out ([[graft.transport.RedisClusterPump.runResident]]) on its
-    * own thread while the landing loop consumes whatever any shard
-    * publishes; per-node positions persist on the trigger cadence.
-    */
-  def runRedisClusterResident(spark: SparkSession,
-      task: TaskConfig.Task, taskDir: String, stop: () => Boolean,
-      dialOverride: Option[() => Wire] = None,
-      dialNodeOverride: Option[String => Wire] = None,
-      triggerMs: Long = 500L,
-      onProgress: () => Unit = () => (),
-      monitor: Monitoring.Monitor = Monitoring.landedFace())
-      : Report = {
-    val captureDir = s"$taskDir/capture"
-    // listing-only view of the shared capture dir: each pump thread
-    // gets its OWN store instance via newStore (no cross-thread
-    // store-internal state)
+  private def redisCluster(lane: Lane, dialOverride: Option[() => Wire],
+      dialNodeOverride: Option[String => Wire],
+      monitor: Monitoring.Monitor): Report = {
+    import lane._
+    // listing-only view of the shared capture dir (and the drain's
+    // store)
     val listStore = new FsSegmentStore(captureDir)
     val ep = LiveDial.parseUrl(task.sourceDir)
     val positions =
@@ -337,46 +383,44 @@ object LiveCdc {
     val cluster = new graft.transport.RedisClusterPump(
       graft.transport.RedisClusterPump.Config(
         user = ep.user, password = ep.password,
+        resume = positions.toMap,
         maxSegmentSecs = task.source.maxSegmentSecs),
-      listStore,
+      beacon(listStore),
       dialOverride.getOrElse(LiveDial.dialer(task.sourceDir)),
       dialNodeOverride.getOrElse(addr =>
         LiveDial.nodeDialer(task.sourceDir, addr)()))
-    val error = new java.util.concurrent.atomic.AtomicReference[
-      Throwable](null)
-    val supervisor = new Thread(() => {
-      try cluster.runResident(stop, positions,
-        newStore = () =>
-          new BeaconStore(new FsSegmentStore(captureDir), onProgress),
-        pollMs = triggerMs)
-      catch { case t: Throwable => error.set(t) }
-    }, "graft-redis-cluster-supervisor")
-    supervisor.setDaemon(true)
-    supervisor.start()
+    val persist = () => writeNodePositions(taskDir, positions.toMap)
+    val rp = stop match {
+      // persist PER NODE as each shard's drain publishes: one
+      // unreachable master late in the walk must not discard the
+      // already-drained shards' advanced offsets (a stale re-PSYNC
+      // would re-capture their command ranges into new segment names
+      // and double-apply non-idempotent ops in the state fold)
+      case None => new LanePump("graft-redis-cluster-drain",
+        () => cluster.drainAll(onNode = (n, p) => {
+          positions(n.id) = p
+          persist()
+        }): Unit, () => ())
+      case Some(flag) => new LanePump("graft-redis-cluster-supervisor",
+        () => cluster.runResident(flag, positions,
+          newStore = () => beacon(new FsSegmentStore(captureDir)),
+          pollMs = triggerMs), () => ())
+    }
     val lander = new LiveLanders.RedisLander(spark, task, taskDir,
       captureDir, onProgress, monitor)
-    def persistTick(): Unit =
-      writeNodePositions(taskDir, positions.toMap)
-    while (!stop() && error.get() == null && supervisor.isAlive) {
-      Thread.sleep(triggerMs)
-      onProgress()
-      lander.pass(listStore.publishedNames)
-      persistTick()
-      sweepConsumedCapture(task, captureDir, lander.ledger)
-    }
-    supervisor.join(70000L)
-    lander.finish(listStore.publishedNames) // wound-down tails
-    persistTick()
-    sweepConsumedCapture(task, captureDir, lander.ledger)
-    Option(error.get()).foreach(t => throw t)
-    Report(lander.landedSegments.toInt,
-      lander.snapshotRows + lander.commandRows,
+    landLoop(lane, rp, persist, () => listStore.publishedNames, lander)
+    redisReport(lander, lander.snapshotRows + lander.commandRows,
+      ("cluster", positions.size.toLong, ""))
+  }
+
+  private def redisReport(lander: LiveLanders.RedisLander, events: Long,
+      position: (String, Long, String)): Report =
+    Report(lander.landedSegments.toInt, events,
       Seq("redis.snapshot" -> lander.snapshotRows,
         "redis.commands" -> lander.commandRows,
         "redis.state" -> lander.stateCount(),
         "redis.state.tombstoned" -> lander.tombstonedKeys),
-      ("cluster", positions.size.toLong, ""))
-  }
+      position)
 
   /** `capture_retention` sweep for the mysql/pg lanes — delete
     * capture segments ≤ the streaming checkpoint's committed offset
@@ -410,14 +454,13 @@ object LiveCdc {
       gone.foreach(ledger.sweepMarker)
     }
 
-  /** The Mongo lane: one change-stream session into JSON-line
-    * segments, landed as a `mongo.changes` table via spark.read.json
-    * — the doc shape the MongoOps change-event machinery consumes.
+  /** The Mongo lane: change-stream sessions into JSON-line segments,
+    * landed as a `mongo.changes` table via spark.read.json — the doc
+    * shape the MongoOps change-event machinery consumes.
     */
-  def runMongo(spark: SparkSession, task: TaskConfig.Task,
-      taskDir: String, dialOverride: Option[() => Wire] = None,
-      onProgress: () => Unit = () => ()): Report = {
-    val captureDir = s"$taskDir/capture"
+  private def mongo(lane: Lane, dialOverride: Option[() => Wire])
+      : Report = {
+    import lane._
     val store = new FsSegmentStore(captureDir)
     val ep = LiveDial.parseUrl(task.sourceDir)
     val persisted = PumpPositions.read(taskDir)
@@ -427,20 +470,17 @@ object LiveCdc {
         // restarts re-watch with resumeAfter at the persisted token
         resumeAfterData = persisted.get("resume_token"),
         maxSegmentSecs = task.source.maxSegmentSecs),
-      new BeaconStore(store, onProgress),
+      beacon(store),
       dialOverride.getOrElse(LiveDial.dialer(task.sourceDir)))
-    val docs = drainSession(pump, () => pump.docsCaptured)
-    store.publishAll()
-    pump.position.foreach(tok => PumpPositions.write(taskDir,
-      Map("resume_token" -> tok)))
-    onProgress()
+    val rp = pumpThread(pump, store, () => pump.docsCaptured,
+      () => pump.markAllPublished(), "graft-mongo-pump")
+    val persist = () => pump.publishedToken.foreach(tok =>
+      PumpPositions.write(taskDir, Map("resume_token" -> tok)))
     val lander = new LiveLanders.MongoLander(spark, task, taskDir,
       captureDir, onProgress)
-    lander.finish(store.names)
-    sweepConsumedCapture(task, captureDir, lander.ledger)
-    Report(lander.landedSegments.toInt, docs,
-      lander.landedCounts(),
-      (pump.position.getOrElse(""), 0L, ""))
+    landLoop(lane, rp, persist, () => store.publishedNames, lander)
+    Report(lander.landedSegments.toInt, pump.docsCaptured,
+      lander.landedCounts(), (pump.position.getOrElse(""), 0L, ""))
   }
 
   /** How many micro-batches of deltas accumulate before a table's
@@ -559,92 +599,15 @@ object LiveCdc {
         task.dataMarker.map(_.srcNode).getOrElse(""))
       .load()
 
-  /** A replication pump running supervised on its own daemon thread
-    * (capped-backoff reconnect via PumpSupervision.run), publishing
-    * its tail and surfacing its error on exit — the producer half
-    * every RESIDENT lane shares.
+  /** The mysql/pg landing loop: a ProcessingTime stream over the
+    * capture dir; `persist` runs on the trigger cadence with a DURABLE
+    * position only. A drain starts the stream once its pump has ended,
+    * so the stream lands everything published in one pass and stops.
     */
-  private final class ResidentPump(pump: graft.transport.PumpSupervision,
-      store: FsSegmentStore, stop: () => Boolean,
-      afterPublish: () => Unit, name: String) {
-    val error = new java.util.concurrent.atomic.AtomicReference[
-      Throwable](null)
-    private val thread = new Thread(() => {
-      try {
-        pump.run(until = stop)
-        store.publishAll()
-        afterPublish()
-      } catch {
-        case t: Throwable =>
-          // error FIRST: the resident loop keys on it, and the
-          // tail-publish below can itself throw (a full disk fails
-          // the pump AND the publish) — the old order lost the
-          // pump's death and the loop spun forever looking healthy
-          error.set(t)
-          try {
-            store.publishAll()
-            afterPublish()
-          } catch { case p: Throwable => t.addSuppressed(p) }
-      }
-    }, name)
-    thread.setDaemon(true)
-    thread.start()
-
-    /** Wait for wind-down: the pump observes stop() between packets —
-      * a blocked read clears at the socket timeout, so wait past it
-      * (leaving early would strand the final publishAll unread).
-      */
-    def join(graceMs: Long): Unit = {
-      val deadline = System.currentTimeMillis() + graceMs
-      while (thread.isAlive && System.currentTimeMillis() < deadline)
-        thread.join(500)
-    }
-
-    def rethrow(): Unit = Option(error.get()).foreach(t => throw t)
-  }
-
-  /** RESIDENT mode — the deployment topology (`[extractor]
-    * resident=true`): the pump runs supervised on its own thread while
-    * the landing half continuously consumes whatever segments publish;
-    * `stop` ends both cooperatively (the task manager's stop flag).
-    * Returns when both halves have wound down and the landed tables
-    * are finalized.
-    */
-  def runResident(spark: SparkSession, task: TaskConfig.Task,
-      taskDir: String, stop: () => Boolean,
-      dialOverride: Option[() => Wire] = None,
-      triggerMs: Long = 500L,
-      onProgress: () => Unit = () => (),
-      dialNodeOverride: Option[String => Wire] = None,
-      monitor: Monitoring.Monitor = Monitoring.landedFace())
-      : Report =
-    if (task.sourceDir.startsWith("mysql://"))
-      runMysqlResident(spark, task, taskDir, stop, dialOverride,
-        triggerMs, onProgress)
-    else if (task.sourceDir.startsWith("redis://") ||
-        task.sourceDir.startsWith("rediss://")) {
-      if (task.source.isCluster)
-        runRedisClusterResident(spark, task, taskDir, stop,
-          dialOverride, dialNodeOverride, triggerMs, onProgress,
-          monitor)
-      else runRedisResident(spark, task, taskDir, stop, dialOverride,
-        triggerMs, onProgress, monitor)
-    } else if (task.sourceDir.startsWith("mongodb://") ||
-        task.sourceDir.startsWith("mongodb+srv://"))
-      runMongoResident(spark, task, taskDir, stop, dialOverride,
-        triggerMs, onProgress)
-    else runPgResident(spark, task, taskDir, stop, dialOverride,
-      triggerMs, onProgress)
-
-  /** The mysql/pg resident shape: ResidentPump + a ProcessingTime
-    * stream over the capture dir; `persistTick` runs on the trigger
-    * cadence with a DURABLE position only.
-    */
-  private def residentStream(spark: SparkSession,
-      task: TaskConfig.Task, taskDir: String, captureDir: String,
-      format: String, stop: () => Boolean, triggerMs: Long,
-      onProgress: () => Unit, rp: ResidentPump,
-      persistTick: () => Unit): Unit = {
+  private def landStream(lane: Lane, format: String, rp: LanePump,
+      persist: () => Unit): Unit = {
+    import lane._
+    val landing = landingStop(rp, persist)
     // seed from disk: tables whose deltas landed before a restart
     // must still merge on the next cadence, not wait for finalize
     val touched = scala.collection.mutable.Set[String](
@@ -665,20 +628,20 @@ object LiveCdc {
         .ProcessingTime(triggerMs))
       .start()
     try {
-      while (!stop() && rp.error.get() == null) {
+      while (!landing() && rp.running) {
         Thread.sleep(triggerMs)
         // resident beacon + durable resume position, refreshed on the
         // trigger cadence: a `watch` pass must never demote a healthy
         // resident runner, and a crash resumes from what was captured
         onProgress()
-        persistTick()
+        persist()
         sweepCapture(task, taskDir, captureDir)
       }
       rp.join(task.source.binlogTimeoutSecs * 2000L + 5000L)
-      // drain what the pump published before stopping the stream
+      // land what the pump published before stopping the stream
       q.processAllAvailable()
       // wind-down: everything is published, full position durable
-      persistTick()
+      persist()
       sweepCapture(task, taskDir, captureDir)
     } finally q.stop()
     rp.rethrow()
@@ -695,189 +658,31 @@ object LiveCdc {
     Report(segments, events, landed, position)
   }
 
-  def runMysqlResident(spark: SparkSession, task: TaskConfig.Task,
-      taskDir: String, stop: () => Boolean,
-      dialOverride: Option[() => Wire] = None,
-      triggerMs: Long = 500L,
-      onProgress: () => Unit = () => ()): Report = {
-    val captureDir = s"$taskDir/capture"
-    val store = new FsSegmentStore(captureDir)
-    val pump = new MysqlReplicationPump(
-      mysqlResumeConfig(task, taskDir),
-      new BeaconStore(store, onProgress),
-      dialOverride.getOrElse(LiveDial.dialer(task.sourceDir,
-        readTimeoutMs = task.source.binlogTimeoutSecs * 1000)))
-    val rp = new ResidentPump(pump, store, stop,
-      () => pump.markAllPublished(), "graft-mysql-pump")
-    residentStream(spark, task, taskDir, captureDir, "binlog", stop,
-      triggerMs, onProgress, rp,
-      () => persistMysql(taskDir, pump.publishedPosition))
-    finalizedReport(spark, task, store.names.size,
-      pump.eventsAppended, pump.position)
-  }
-
-  def runPgResident(spark: SparkSession, task: TaskConfig.Task,
-      taskDir: String, stop: () => Boolean,
-      dialOverride: Option[() => Wire] = None,
-      triggerMs: Long = 500L,
-      onProgress: () => Unit = () => ()): Report = {
-    val captureDir = s"$taskDir/capture"
-    val store = new FsSegmentStore(captureDir)
-    val slot = task.slot.getOrElse(
-      graft.sources.PgSlotLifecycle.SlotConfig("graft_slot"))
-    val pump = new graft.transport.PgReplicationPump(
-      LiveDial.pgConfig(task.sourceDir, slot)
-        .copy(maxSegmentSecs = task.source.maxSegmentSecs),
-      new BeaconStore(store, onProgress),
-      // the SAME timeout knob the wind-down grace is sized from
-      // (residentStream waits binlogTimeoutSecs×2 + 5s for the pump
-      // to clear a blocked read): leaving the dialer at its 60 s
-      // default while the grace followed the knob meant any
-      // binlog_timeout_secs < 30 truncated the PG wind-down — the
-      // final spool published after join() and was never consumed
-      dialOverride.getOrElse(LiveDial.dialer(task.sourceDir,
-        readTimeoutMs = task.source.binlogTimeoutSecs * 1000)))
-    // no persistTick: PG's durable position is the server-side slot,
-    // advanced only past published segments by the ack protocol
-    val rp = new ResidentPump(pump, store, stop, () => (),
-      "graft-pg-pump")
-    residentStream(spark, task, taskDir, captureDir, "pgoutput",
-      stop, triggerMs, onProgress, rp, () => ())
-    finalizedReport(spark, task, store.names.size,
-      pump.framesAppended, ("", 0L, pump.position))
-  }
-
-  /** The shared redis/mongo resident LANDING loop: consume PUBLISHED
-    * segments on the trigger cadence while the pump thread lives,
-    * then wind down — land the tail, persist the position, sweep
-    * consumed capture, rethrow the pump's death. Factored once: the
-    * per-lane copies were drifting fix by fix.
+  /** The redis/mongo landing loop: consume PUBLISHED segments on the
+    * trigger cadence while the pump runs (an open spool is still being
+    * appended — landing it would drop its tail), then wind down: land
+    * the tail, persist the position, sweep consumed capture, rethrow
+    * the pump's death. A drain starts once its pump has ended, so it
+    * lands everything in the one `finish`.
     */
-  private def residentLandingLoop(stop: () => Boolean,
-      triggerMs: Long, onProgress: () => Unit, rp: ResidentPump,
-      graceMs: Long, publishedNames: () => Seq[String],
-      pass: Seq[String] => Unit, finish: Seq[String] => Unit,
-      persistTick: () => Unit, sweep: () => Unit): Unit = {
-    while (!stop() && rp.error.get() == null) {
+  private def landLoop(lane: Lane, rp: LanePump, persist: () => Unit,
+      publishedNames: () => Seq[String],
+      lander: LiveLanders.Lander): Unit = {
+    import lane._
+    val landing = landingStop(rp, persist)
+    val sweep = () => sweepConsumedCapture(task, captureDir, lander.ledger)
+    while (!landing() && rp.running) {
       Thread.sleep(triggerMs)
       onProgress()
-      pass(publishedNames())
-      persistTick()
+      lander.pass(publishedNames())
+      persist()
       sweep()
     }
-    rp.join(graceMs)
-    finish(publishedNames()) // the wound-down tail
-    persistTick()
+    // past the cluster fan-out's own 65 s per-pump wind-down join
+    rp.join(70000L)
+    lander.finish(publishedNames()) // the wound-down tail
+    persist()
     sweep()
     rp.rethrow()
-  }
-
-  /** The redis/mongo resident shape: ResidentPump + a landing loop
-    * that consumes PUBLISHED segments on the trigger cadence (an open
-    * spool is still being appended — landing it would drop its tail).
-    */
-  def runRedisResident(spark: SparkSession, task: TaskConfig.Task,
-      taskDir: String, stop: () => Boolean,
-      dialOverride: Option[() => Wire] = None,
-      triggerMs: Long = 500L,
-      onProgress: () => Unit = () => (),
-      monitor: Monitoring.Monitor = Monitoring.landedFace())
-      : Report = {
-    val captureDir = s"$taskDir/capture"
-    val store = new FsSegmentStore(captureDir)
-    val ep = LiveDial.parseUrl(task.sourceDir)
-    val persisted = PumpPositions.read(taskDir)
-    val pump = new graft.transport.RedisReplicationPump(
-      graft.transport.RedisReplicationPump.Config(
-        user = ep.user, password = ep.password,
-        replId = persisted.getOrElse("repl_id", ""),
-        replOffset = persisted.get("repl_offset").flatMap(_.toLongOption)
-          .getOrElse(0L),
-        startDb = persisted.get("select_db").flatMap(_.toLongOption)
-          .getOrElse(0L),
-        maxSegmentSecs = task.source.maxSegmentSecs),
-      new BeaconStore(store, onProgress),
-      dialOverride.getOrElse(LiveDial.dialer(task.sourceDir)))
-    val rp = new ResidentPump(pump, store, stop,
-      () => pump.markAllPublished(), "graft-redis-pump")
-    def persistTick(): Unit = PumpPositions.write(taskDir, Map(
-      "repl_id" -> pump.publishedPosition._1,
-      "repl_offset" -> pump.publishedPosition._2.toString,
-      "select_db" -> pump.publishedDb.toString))
-    val lander = new LiveLanders.RedisLander(spark, task, taskDir,
-      captureDir, onProgress, monitor)
-    residentLandingLoop(stop, triggerMs, onProgress, rp,
-      graceMs = 65000L, publishedNames = () => store.publishedNames,
-      pass = lander.pass, finish = lander.finish,
-      persistTick = () => persistTick(),
-      sweep = () =>
-        sweepConsumedCapture(task, captureDir, lander.ledger))
-    Report(lander.landedSegments.toInt, pump.bytesCaptured,
-      Seq("redis.snapshot" -> lander.snapshotRows,
-        "redis.commands" -> lander.commandRows,
-        "redis.state" -> lander.stateCount(),
-        "redis.state.tombstoned" -> lander.tombstonedKeys),
-      (pump.position._1, pump.position._2, ""))
-  }
-
-  def runMongoResident(spark: SparkSession, task: TaskConfig.Task,
-      taskDir: String, stop: () => Boolean,
-      dialOverride: Option[() => Wire] = None,
-      triggerMs: Long = 500L,
-      onProgress: () => Unit = () => ()): Report = {
-    val captureDir = s"$taskDir/capture"
-    val store = new FsSegmentStore(captureDir)
-    val ep = LiveDial.parseUrl(task.sourceDir)
-    val persisted = PumpPositions.read(taskDir)
-    val pump = new graft.transport.MongoChangeStreamPump(
-      graft.transport.MongoChangeStreamPump.Config(
-        user = ep.user, password = ep.password,
-        resumeAfterData = persisted.get("resume_token"),
-        maxSegmentSecs = task.source.maxSegmentSecs),
-      new BeaconStore(store, onProgress),
-      dialOverride.getOrElse(LiveDial.dialer(task.sourceDir)))
-    val rp = new ResidentPump(pump, store, stop,
-      () => pump.markAllPublished(), "graft-mongo-pump")
-    def persistTick(): Unit = pump.publishedToken.foreach(tok =>
-      PumpPositions.write(taskDir, Map("resume_token" -> tok)))
-    val lander = new LiveLanders.MongoLander(spark, task, taskDir,
-      captureDir, onProgress)
-    residentLandingLoop(stop, triggerMs, onProgress, rp,
-      graceMs = 65000L, publishedNames = () => store.publishedNames,
-      pass = lander.pass, finish = lander.finish,
-      persistTick = () => persistTick(),
-      sweep = () =>
-        sweepConsumedCapture(task, captureDir, lander.ledger))
-    Report(lander.landedSegments.toInt, pump.docsCaptured,
-      lander.landedCounts(),
-      (pump.position.getOrElse(""), 0L, ""))
-  }
-
-  private def consume(spark: SparkSession, task: TaskConfig.Task,
-      taskDir: String, captureDir: String, format: String,
-      nSegments: Int, events: Long,
-      position: (String, Long, String),
-      onProgress: () => Unit = () => ()): Report = {
-    // the capture dir through the existing micro-batch transport:
-    // decode on executors, per-table key compaction, parquet landing
-    val outDir = task.sinkDir
-    val drainTouched = scala.collection.mutable.Set[String]()
-    val q = changeStream(spark, task, captureDir, format)
-      .writeStream
-      .option("checkpointLocation", s"$taskDir/checkpoint")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        landBatch(task, outDir, drainTouched)(batch, batchId)
-        onProgress()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    sweepCapture(task, taskDir, captureDir)
-
-    // drain epilogue: fold outstanding deltas and refresh the flat
-    // published snapshot — the plain-parquet face external readers
-    // see (the SAME epilogue the resident lanes run: one
-    // implementation, not a drifting copy)
-    finalizedReport(spark, task, nSegments, events, position)
   }
 }

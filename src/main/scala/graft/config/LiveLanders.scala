@@ -56,12 +56,23 @@ private[config] object LiveLanders {
       LandedTable.deltaIds(table).maxOption.getOrElse(0L),
       LandedTable.committedBase(table).map(_._1).getOrElse(0L)) + 1L
 
+  /** What the shared landing loop drives: one pass per trigger over
+    * the published segments, then the wind-down `finish`.
+    */
+  sealed trait Lander {
+    def ledger: ConsumedLedger
+    def landedSegments: Long
+    def pass(names: Seq[String]): Unit
+    def finish(names: Seq[String]): Unit
+  }
+
   // ---- redis ---------------------------------------------------------
 
   final class RedisLander(spark: SparkSession,
       task: TaskConfig.Task, taskDir: String, captureDir: String,
       onProgress: () => Unit,
-      monitor: Monitoring.Monitor = Monitoring.landedFace()) {
+      monitor: Monitoring.Monitor = Monitoring.landedFace())
+      extends Lander {
     val ledger = new ConsumedLedger(taskDir)
     private val sink = task.sinkDir
     private val stateTable = s"$sink/redis.state"
@@ -173,7 +184,7 @@ private[config] object LiveLanders {
 
   final class MongoLander(spark: SparkSession,
       task: TaskConfig.Task, taskDir: String, captureDir: String,
-      onProgress: () => Unit) {
+      onProgress: () => Unit) extends Lander {
     val ledger = new ConsumedLedger(taskDir)
     private val sink = task.sinkDir
     private val touched = scala.collection.mutable.Set[String]()

@@ -1002,15 +1002,10 @@ object TaskRunner {
     if (gate.detail.nonEmpty) caller.log(s"precheck ${gate.detail}")
     // the landers publish their face-completeness gauges here
     val liveMon = Monitoring.landedFace()
-    val r =
-      if (task.source.resident)
-        LiveCdc.runResident(spark, task, caller.stateDir,
-          stop = caller.stop, dialOverride = caller.liveDial,
-          onProgress = caller.alive,
-          dialNodeOverride = caller.liveNodeDial, monitor = liveMon)
-      else LiveCdc.run(spark, task, caller.stateDir, caller.liveDial,
-        onProgress = caller.alive,
-        dialNodeOverride = caller.liveNodeDial, monitor = liveMon)
+    val r = LiveCdc.run(spark, task, caller.stateDir, caller.liveDial,
+      onProgress = caller.alive, dialNodeOverride = caller.liveNodeDial,
+      monitor = liveMon,
+      stop = Option.when(task.source.resident)(caller.stop))
     caller.log(s"live_cdc segments=${r.segments} events=${r.events} " +
       s"position=${r.position._1}:${r.position._2} " +
       r.tables.map { case (t, n) => s"$t=$n" }.mkString(" "))

@@ -12,7 +12,7 @@ import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader,
   PartitionReaderFactory, Scan, ScanBuilder}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream,
-  Offset, ReadLimit, SupportsTriggerAvailableNow}
+  Offset}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -222,19 +222,13 @@ class ChangelogTable(path: String, format: String = "tab",
   * parallel source. Retention may delete segments ≤ the checkpointed
   * name at any time: name comparison skips nothing and reprocesses
   * nothing (count-based offsets would remap onto the shifted listing).
-  *
-  * `Trigger.AvailableNow` is native: the query's start snapshots the
-  * newest segment and every batch caps at it, so a drain that
-  * restarts over an uncommitted batch replays that batch AND goes on
-  * to the segments published since (the single-batch fallback
-  * stopped after the replay and left them for the next drain).
   */
 class ChangelogStream(path: String, format: String = "tab",
     keyCols: Seq[String] = Nil, startTimestamp: Long = 0L,
     binlogStart: ChangelogSource.BinlogStart =
       ChangelogSource.BinlogStart(),
     marker: ChangelogSource.MarkerCfg = ChangelogSource.MarkerCfg())
-    extends MicroBatchStream with SupportsTriggerAvailableNow {
+    extends MicroBatchStream {
   /** Monotonicity guard: if every segment were purged, a fresh listing
     * would be empty and a naive latestOffset would regress below the
     * checkpoint, planning a bogus negative range. Track the high-water
@@ -254,19 +248,6 @@ class ChangelogStream(path: String, format: String = "tab",
     val names = ChangelogSource.segments(path)
     if (names.nonEmpty && names.last > maxSeen) maxSeen = names.last
     ChangelogOffset(maxSeen)
-  }
-
-  /** The AvailableNow end: the newest segment when the query started. */
-  @volatile private var availableNowEnd: Option[String] = None
-
-  override def prepareForTriggerAvailableNow(): Unit =
-    availableNowEnd = Some(
-      latestOffset().asInstanceOf[ChangelogOffset].segment)
-
-  override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
-    val latest = latestOffset().asInstanceOf[ChangelogOffset]
-    availableNowEnd.filter(_ < latest.segment).map(ChangelogOffset(_))
-      .getOrElse(latest)
   }
 
   override def deserializeOffset(json: String): Offset = {

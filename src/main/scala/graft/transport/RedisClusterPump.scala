@@ -199,7 +199,7 @@ final class RedisClusterPump(cfg: RedisClusterPump.Config,
       // wind-down: every dead pump thread already exhausted its OWN
       // maxReconnects ladder, so re-fanning zero-progress deaths past
       // a second full ladder per shard is proof nothing can connect —
-      // throw lastError (ResidentPump.rethrow's moral equivalent;
+      // throw lastError (the single-node lane's rethrow;
       // transient seed blips clear the counter on first progress)
       if (drainedBytes.get() +
             pumps.values.map(_._2.bytesCaptured).sum > 0L)

@@ -77,16 +77,34 @@ final class MemorySegmentStore extends SegmentStore {
 final class FsSegmentStore(dir: String) extends SegmentStore {
   import graft.infra.Fs
   Fs.mkdirs(dir)
-  private val spoolDir =
-    java.nio.file.Files.createTempDirectory("graft-segspool")
+  /** The local spool dir, present only while a spool is open: created
+    * on the first append after none was, removed once the last open
+    * spool publishes or is discarded, so no store leaves an empty temp
+    * dir behind.
+    */
+  private var spoolDir: java.nio.file.Path = _
   private val open =
     scala.collection.mutable.LinkedHashMap[String,
       java.io.OutputStream]()
+  @volatile private var published = 0
 
   override def append(name: String, bytes: Array[Byte]): Unit =
-    open.getOrElseUpdate(name,
-      java.nio.file.Files.newOutputStream(spoolDir.resolve(name)))
-      .write(bytes)
+    open.getOrElseUpdate(name, {
+      if (spoolDir == null)
+        spoolDir = java.nio.file.Files.createTempDirectory("graft-segspool")
+      java.nio.file.Files.newOutputStream(spoolDir.resolve(name))
+    }).write(bytes)
+
+  /** Delete `name`'s closed spool, and the spool dir once no spool is
+    * open.
+    */
+  private def dropSpool(name: String): Unit = {
+    java.nio.file.Files.deleteIfExists(spoolDir.resolve(name))
+    if (open.isEmpty) {
+      java.nio.file.Files.deleteIfExists(spoolDir)
+      spoolDir = null
+    }
+  }
 
   /** Publish a finished segment (rotate boundary / shutdown).
     * Stage-then-rename: a resident landing pass lists the capture dir
@@ -99,16 +117,19 @@ final class FsSegmentStore(dir: String) extends SegmentStore {
   override def publish(name: String): Unit =
     open.remove(name).foreach { out =>
       out.close()
-      val spooled = spoolDir.resolve(name)
       Fs.write(s"$dir/$name.tmp",
-        java.nio.file.Files.readAllBytes(spooled))
+        java.nio.file.Files.readAllBytes(spoolDir.resolve(name)))
       if (!Fs.rename(s"$dir/$name.tmp", s"$dir/$name"))
         throw new java.io.IOException(
           s"segment publish rename failed: $dir/$name")
-      java.nio.file.Files.deleteIfExists(spooled): Unit
+      published += 1
+      dropSpool(name)
     }
 
   override def publishAll(): Unit = open.keys.toSeq.foreach(publish)
+
+  /** Segments this store published: the segments of one lane start. */
+  def publishedCount: Int = published
 
   override def names: Seq[String] =
     (Fs.listNames(dir).filterNot(_.endsWith(".tmp")) ++ open.keys)
@@ -130,6 +151,6 @@ final class FsSegmentStore(dir: String) extends SegmentStore {
   override def discard(name: String): Unit =
     open.remove(name).foreach { out =>
       out.close()
-      java.nio.file.Files.deleteIfExists(spoolDir.resolve(name)): Unit
+      dropSpool(name)
     }
 }

@@ -48,6 +48,70 @@ class LiveCdcSpec extends SparkSuite {
     out.result()
   }
 
+  /** A pgoutput protocol message. */
+  private def msg(tag: Char, body: Array[Byte]): Array[Byte] =
+    graft.transport.PgWire.message(tag, body)
+
+  /** A simple-query reply: row description, data rows, completion. */
+  private def queryReply(cols: Seq[String],
+      rows: Seq[Seq[String]]): Array[Byte] = {
+    val out = new java.io.ByteArrayOutputStream()
+    if (cols.nonEmpty) {
+      val t = new java.io.ByteArrayOutputStream()
+      t.write((cols.size >> 8) & 0xff); t.write(cols.size & 0xff)
+      cols.foreach { c =>
+        t.write(c.getBytes("UTF-8")); t.write(0)
+        t.write(new Array[Byte](18))
+      }
+      out.write(msg('T', t.toByteArray))
+    }
+    rows.foreach { r =>
+      val d = new java.io.ByteArrayOutputStream()
+      d.write((r.size >> 8) & 0xff); d.write(r.size & 0xff)
+      r.foreach { v =>
+        val b = v.getBytes("UTF-8")
+        d.write((b.length >> 24) & 0xff); d.write((b.length >> 16) & 0xff)
+        d.write((b.length >> 8) & 0xff); d.write(b.length & 0xff)
+        d.write(b)
+      }
+      out.write(msg('D', d.toByteArray))
+    }
+    out.write(msg('C', "SELECT".getBytes("UTF-8") :+ 0.toByte))
+    out.write(msg('Z', Array[Byte]('I'.toByte)))
+    out.toByteArray
+  }
+
+  /** One `app.t` insert transaction as binlog events. */
+  private def rowsSession(rows: Seq[Array[String]],
+      txn: Long): Seq[Array[Byte]] = {
+    val w = new MysqlBinlogWriter(serverId = 1L)
+    w.fde()
+    w.begin("app")
+    w.tableMap(11L, "app", "t", Seq(8, 15), Seq(0, 40),
+      nullable = Seq(false, true), colNames = Seq("id", "v"))
+    w.writeRows(11L, rows)
+    w.xid(txn)
+    eventsOf(w.bytes())
+  }
+
+  /** A scripted binlog dump: handshake, session setup, `events`, then
+    * the dump's EOF packet (`eof`) or a dropped wire.
+    */
+  private def dumpWire(events: Seq[Array[Byte]],
+      eof: Boolean = true): FakeWire = {
+    val wire = new FakeWire
+    wire.serve(packet(0, handshakePayload))
+    wire.serve(packet(2, Array[Byte](0x00, 0, 0, 2, 0, 0, 0)))
+    wire.serve(packet(1, Array[Byte](0x00, 0, 0, 2, 0, 0, 0)))
+    wire.serve(packet(1, Array[Byte](0x00, 0, 0, 2, 0, 0, 0)))
+    events.zipWithIndex.foreach { case (e, i) =>
+      wire.serve(packet(i + 1, Array[Byte](0x00) ++ e))
+    }
+    if (eof) wire.serve(packet(events.size + 1,
+      Array[Byte](0xfe.toByte, 0, 0, 2, 0)))
+    wire
+  }
+
   test("a mysql:// cdc task pumps the dump into capture segments and " +
       "lands routed compacted end states under the sink") {
     // the scripted server: inserts, an update, a delete, one ignored
@@ -129,35 +193,6 @@ class LiveCdcSpec extends SparkSuite {
   test("a postgres:// cdc task runs the slot lifecycle, captures " +
       "pgoutput frames, and lands compacted end states") {
     import graft.transport.PgWire._
-    def msg(tag: Char, body: Array[Byte]): Array[Byte] =
-      graft.transport.PgWire.message(tag, body)
-    def queryReply(cols: Seq[String],
-        rows: Seq[Seq[String]]): Array[Byte] = {
-      val out = new java.io.ByteArrayOutputStream()
-      if (cols.nonEmpty) {
-        val t = new java.io.ByteArrayOutputStream()
-        t.write((cols.size >> 8) & 0xff); t.write(cols.size & 0xff)
-        cols.foreach { c =>
-          t.write(c.getBytes("UTF-8")); t.write(0)
-          t.write(new Array[Byte](18))
-        }
-        out.write(msg('T', t.toByteArray))
-      }
-      rows.foreach { r =>
-        val d = new java.io.ByteArrayOutputStream()
-        d.write((r.size >> 8) & 0xff); d.write(r.size & 0xff)
-        r.foreach { v =>
-          val b = v.getBytes("UTF-8")
-          d.write((b.length >> 24) & 0xff); d.write((b.length >> 16) & 0xff)
-          d.write((b.length >> 8) & 0xff); d.write(b.length & 0xff)
-          d.write(b)
-        }
-        out.write(msg('D', d.toByteArray))
-      }
-      out.write(msg('C', "SELECT".getBytes("UTF-8") :+ 0.toByte))
-      out.write(msg('Z', Array[Byte]('I'.toByte)))
-      out.toByteArray
-    }
 
     val w = new graft.sources.PgOutputWriter()
     w.begin(0x16000100L, 0L, 1L)
@@ -299,8 +334,8 @@ class LiveCdcSpec extends SparkSuite {
     }, "resident-stopper")
     stopper.start()
 
-    val report = LiveCdc.runMysqlResident(spark, task, taskDir,
-      stop = () => stopFlag.get(),
+    val report = LiveCdc.run(spark, task, taskDir,
+      stop = Some(() => stopFlag.get()),
       dialOverride = Some(() => nextWire()), triggerMs = 100L)
     stopper.join()
 
@@ -383,8 +418,8 @@ class LiveCdcSpec extends SparkSuite {
       stopFlag.set(true)
     }, "retention-stopper")
     stopper.start()
-    LiveCdc.runMysqlResident(spark, task, taskDir,
-      stop = () => stopFlag.get(),
+    LiveCdc.run(spark, task, taskDir,
+      stop = Some(() => stopFlag.get()),
       dialOverride = Some(() => nextWire()), triggerMs = 100L)
     stopper.join()
 
@@ -583,8 +618,8 @@ class LiveCdcSpec extends SparkSuite {
       stopFlag.set(true)
     }, "cluster-lane-stopper")
     stopper.start()
-    val report = LiveCdc.runResident(spark, task, taskDir,
-      stop = () => stopFlag.get(),
+    val report = LiveCdc.run(spark, task, taskDir,
+      stop = Some(() => stopFlag.get()),
       dialOverride = Some(() => seedWire()), triggerMs = 100L,
       dialNodeOverride = Some(dialNode))
     stopper.join()
@@ -787,7 +822,7 @@ class LiveCdcSpec extends SparkSuite {
       .createTempDirectory("ret-redis-sink1").toString
     val task1Dir = java.nio.file.Files
       .createTempDirectory("ret-redis-task1").toString
-    LiveCdc.runRedis(spark, taskFor(sink1), task1Dir,
+    LiveCdc.run(spark, taskFor(sink1), task1Dir,
       dialOverride = Some(() => fullWire()))
     assert(graft.infra.Fs.listNames(s"$task1Dir/consumed") ==
       Seq("psync.000001.log"))
@@ -803,7 +838,7 @@ class LiveCdcSpec extends SparkSuite {
       .createTempDirectory("ret-redis-task2").toString
     graft.infra.Fs.writeString(s"$task2Dir/consumed.log",
       "psync.000001.log\n")
-    val report = LiveCdc.runRedis(spark, taskFor(sink2), task2Dir,
+    val report = LiveCdc.run(spark, taskFor(sink2), task2Dir,
       dialOverride = Some(() => fullWire()))
     assert(report.tables.toMap ==
       Map("redis.snapshot" -> 0L, "redis.commands" -> 0L,
@@ -892,29 +927,6 @@ class LiveCdcSpec extends SparkSuite {
 
   test("a restarted mysql:// cdc task resumes from the persisted " +
       "position and lands only the tail — no re-dump, no duplicates") {
-    def session(rows: Seq[Array[String]], txn: Long): Seq[Array[Byte]] = {
-      val w = new MysqlBinlogWriter(serverId = 1L)
-      w.fde()
-      w.begin("app")
-      w.tableMap(11L, "app", "t", Seq(8, 15), Seq(0, 40),
-        nullable = Seq(false, true), colNames = Seq("id", "v"))
-      w.writeRows(11L, rows)
-      w.xid(txn)
-      eventsOf(w.bytes())
-    }
-    def wireFor(events: Seq[Array[Byte]]): FakeWire = {
-      val wire = new FakeWire
-      wire.serve(packet(0, handshakePayload))
-      wire.serve(packet(2, Array[Byte](0x00, 0, 0, 2, 0, 0, 0)))
-      wire.serve(packet(1, Array[Byte](0x00, 0, 0, 2, 0, 0, 0)))
-      wire.serve(packet(1, Array[Byte](0x00, 0, 0, 2, 0, 0, 0)))
-      events.zipWithIndex.foreach { case (e, i) =>
-        wire.serve(packet(i + 1, Array[Byte](0x00) ++ e))
-      }
-      wire.serve(packet(events.size + 1,
-        Array[Byte](0xfe.toByte, 0, 0, 2, 0)))
-      wire
-    }
     val state = java.nio.file.Files
       .createTempDirectory("live-restart-state").toString
     val sink = java.nio.file.Files
@@ -931,8 +943,8 @@ class LiveCdcSpec extends SparkSuite {
          |url=$sink
          |""".stripMargin)
     val m1 = TaskManager.start(spark, state, "liverestart",
-      liveDial = Some(() => wireFor(
-        session(Seq(Array("1", "a"), Array("2", "b")), 1L))))
+      liveDial = Some(() => dumpWire(
+        rowsSession(Seq(Array("1", "a"), Array("2", "b")), 1L))))
     assert(m1.status == "finished")
     // the durable position advanced past the consumed events
     val pos1 = graft.transport.PumpPositions.read(s"$state/liverestart")
@@ -943,9 +955,15 @@ class LiveCdcSpec extends SparkSuite {
     // the new pump must resume at the persisted position and the
     // landing must not duplicate the already-landed keys
     val m2 = TaskManager.start(spark, state, "liverestart",
-      liveDial = Some(() => wireFor(
-        session(Seq(Array("3", "c")), 2L))))
+      liveDial = Some(() => dumpWire(
+        rowsSession(Seq(Array("3", "c")), 2L))))
     assert(m2.status == "finished")
+    // each start reports the segments it captured, not the capture
+    // dir's running total
+    val reported = TaskManager.logs(state, "liverestart")
+      .flatMap(l => "live_cdc segments=(\\d+)".r.findFirstMatchIn(l))
+      .map(_.group(1).toInt)
+    assert(reported == Seq(1, 1), reported)
     val landed = spark.read.parquet(s"$sink/app.t")
       .collect().map(_.getString(0)).toSeq.sorted
     assert(landed == Seq("1", "2", "3")) // each exactly once
@@ -954,6 +972,162 @@ class LiveCdcSpec extends SparkSuite {
       .segments(s"$state/liverestart/capture")
     assert(segs == segs.sorted && segs.distinct == segs)
     assert(segs.size >= 2)
+  }
+
+  /** Keys landed in `app.t` under `sink`. */
+  private def landedKeys(sink: String): Set[String] =
+    spark.read.parquet(s"$sink/app.t").collect().map(_.getString(0)).toSet
+
+  test("the mysql drain contract through LiveCdc.run: a dial dropped " +
+      "before progress throws, leaving no query and no position; a " +
+      "retry lands every row; a landing that fails after the pump " +
+      "tail published leaves the position persisted, so its retry " +
+      "re-pumps nothing") {
+    import graft.config.{LiveCdc, TaskConfig}
+    import graft.transport.PumpPositions
+    def task(sink: String) = TaskConfig.fromIni(
+      s"""[extractor]
+         |db_type=mysql
+         |extract_type=cdc
+         |url=mysql://repl:pw@127.0.0.1:3306
+         |binlog_filename=binlog.000001
+         |id_cols=t:id
+         |
+         |[sinker]
+         |url=$sink
+         |""".stripMargin)
+    val sink = java.nio.file.Files
+      .createTempDirectory("drain-contract-sink").toString
+    val taskDir = java.nio.file.Files
+      .createTempDirectory("drain-contract-task").toString
+    val capture = s"$taskDir/capture"
+
+    // the dial drops before any progress: a config error, not a drain
+    intercept[java.io.IOException](LiveCdc.run(spark, task(sink),
+      taskDir, dialOverride = Some(() => new FakeWire)))
+    assert(spark.streams.active.isEmpty)
+    assert(!new java.io.File(PumpPositions.path(taskDir)).exists())
+
+    // the server's position after a session: its last event's
+    // next-position header field
+    def endPos(events: Seq[Array[Byte]]): Long =
+      (0 until 4).map(i => (events.last(13 + i) & 0xffL) << (8 * i)).sum
+
+    // the retry's wire drops after progress: the normal end of a drain
+    val s2 = rowsSession(Seq(Array("1", "a"), Array("2", "b")), 1L)
+    val r2 = LiveCdc.run(spark, task(sink), taskDir,
+      dialOverride = Some(() => dumpWire(s2, eof = false)))
+    assert(r2.tables == Seq("app.t" -> 2L))
+    assert(landedKeys(sink) == Set("1", "2"))
+    assert(PumpPositions.read(taskDir)("pos").toLong == endPos(s2))
+
+    // the next start pumps one more row, then its landing fails (the
+    // sink is a plain file) after the pump's tail published
+    val blocked = java.nio.file.Files
+      .createTempFile("drain-contract-blocked", "").toString
+    val s3 = rowsSession(Seq(Array("3", "c")), 2L)
+    intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+      LiveCdc.run(spark, task(blocked), taskDir,
+        dialOverride = Some(() => dumpWire(s3, eof = false))))
+    assert(spark.streams.active.isEmpty)
+    val pos3 = PumpPositions.read(taskDir)("pos").toLong
+    assert(pos3 == endPos(s3), "the position was not persisted before " +
+      "the landing ran")
+    val segs = graft.sources.ChangelogSource.segments(capture)
+
+    // its retry dumps from the persisted position, pumps nothing, and
+    // lands the published row
+    val retry = dumpWire(Nil)
+    val r4 = LiveCdc.run(spark, task(sink), taskDir,
+      dialOverride = Some(() => retry))
+    val le = (0 until 4).map(i => ((pos3 >> (8 * i)) & 0xff).toByte)
+    assert(retry.sentBytes.toSeq.containsSlice(0x12.toByte +: le))
+    assert(r4.events == 0L && r4.segments == 0)
+    assert(graft.sources.ChangelogSource.segments(capture) == segs)
+    assert(PumpPositions.read(taskDir)("pos").toLong == pos3)
+    assert(r4.tables == Seq("app.t" -> 3L))
+    assert(landedKeys(sink) == Set("1", "2", "3"))
+  }
+
+  test("the pg drain contract through LiveCdc.run: a dial dropped " +
+      "before progress throws, leaving no query and no position; a " +
+      "retry lands every row; a landing that fails after the pump " +
+      "tail published lands on a retry that re-pumps nothing") {
+    import graft.config.{LiveCdc, TaskConfig}
+    import graft.sources.PgOutput.RelColumn
+    def txn(lsn: Long, rows: Seq[Array[String]]): Array[Byte] = {
+      val w = new graft.sources.PgOutputWriter()
+      w.begin(lsn, 0L, lsn >> 8)
+      w.relation(16385L, "app", "t", 'd', Seq(
+        RelColumn("id", keyPart = true, 20, -1),
+        RelColumn("v", false, 25, -1)))
+      rows.foreach(r => w.insert(16385L, r))
+      w.commit(lsn, lsn + 0x100L, 0L)
+      w.bytes()
+    }
+    // slot lifecycle, CopyBoth, `frames`, then CopyDone or a drop
+    def pgWire(frames: Array[Byte], copyDone: Boolean): FakeWire = {
+      val wire = new FakeWire
+      wire.serve(msg('R', Array[Byte](0, 0, 0, 0)))
+      wire.serve(msg('Z', Array[Byte]('I'.toByte)))
+      wire.serve(queryReply(Seq("pubname"), Seq(Seq("p"))))
+      wire.serve(queryReply(Seq("slot_name", "confirmed_flush_lsn"),
+        Seq(Seq("live_slot", "0/16000000"))))
+      wire.serve(queryReply(Nil, Nil)) // SET float digits
+      wire.serve(queryReply(Nil, Nil)) // SET time zone
+      wire.serve(msg('W', Array[Byte](0, 0, 0)))
+      if (frames.nonEmpty) wire.serve(frames)
+      if (copyDone) wire.serve(msg('c', Array.emptyByteArray))
+      wire
+    }
+    def task(sink: String) = TaskConfig.fromIni(
+      s"""[extractor]
+         |db_type=pg
+         |extract_type=cdc
+         |url=postgres://app:pw@127.0.0.1:5432/orders
+         |slot_name=live_slot
+         |id_cols=t:id
+         |
+         |[sinker]
+         |url=$sink
+         |""".stripMargin)
+    val sink = java.nio.file.Files
+      .createTempDirectory("pg-contract-sink").toString
+    val taskDir = java.nio.file.Files
+      .createTempDirectory("pg-contract-task").toString
+    val capture = s"$taskDir/capture"
+
+    intercept[java.io.IOException](LiveCdc.run(spark, task(sink),
+      taskDir, dialOverride = Some(() => new FakeWire)))
+    assert(spark.streams.active.isEmpty)
+    assert(!new java.io.File(
+      graft.transport.PumpPositions.path(taskDir)).exists())
+
+    val r2 = LiveCdc.run(spark, task(sink), taskDir,
+      dialOverride = Some(() => pgWire(txn(0x16000100L,
+        Seq(Array("1", "a"), Array("2", "b"))), copyDone = false)))
+    assert(r2.tables == Seq("app.t" -> 2L))
+    assert(landedKeys(sink) == Set("1", "2"))
+
+    // pg's durable position is the server-side slot, so nothing is
+    // persisted locally; the failed landing's segment stays published
+    val blocked = java.nio.file.Files
+      .createTempFile("pg-contract-blocked", "").toString
+    intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+      LiveCdc.run(spark, task(blocked), taskDir,
+        dialOverride = Some(() => pgWire(txn(0x16000300L,
+          Seq(Array("3", "c"))), copyDone = false))))
+    assert(spark.streams.active.isEmpty)
+    val segs = graft.sources.ChangelogSource.segments(capture)
+    assert(segs.size == 2)
+
+    val r4 = LiveCdc.run(spark, task(sink), taskDir,
+      dialOverride = Some(() => pgWire(Array.emptyByteArray,
+        copyDone = true)))
+    assert(r4.events == 0L && r4.segments == 0)
+    assert(graft.sources.ChangelogSource.segments(capture) == segs)
+    assert(r4.tables == Seq("app.t" -> 3L))
+    assert(landedKeys(sink) == Set("1", "2", "3"))
   }
 
   test("redis resident mode: the supervised pump partial-resyncs " +
@@ -1025,8 +1199,8 @@ class LiveCdcSpec extends SparkSuite {
       stopFlag.set(true)
     }, "redis-resident-stopper")
     stopper.start()
-    val report = LiveCdc.runRedisResident(spark, task, taskDir,
-      stop = () => stopFlag.get(),
+    val report = LiveCdc.run(spark, task, taskDir,
+      stop = Some(() => stopFlag.get()),
       dialOverride = Some(() => nextWire()), triggerMs = 100L)
     stopper.join()
 
@@ -1044,35 +1218,6 @@ class LiveCdcSpec extends SparkSuite {
 
   test("pg two-way: the pgoutput decode runs the same marker state " +
       "machine — A-origin txns drop, marker rows never land") {
-    def msg(tag: Char, body: Array[Byte]): Array[Byte] =
-      graft.transport.PgWire.message(tag, body)
-    def queryReply(cols: Seq[String],
-        rows: Seq[Seq[String]]): Array[Byte] = {
-      val out = new java.io.ByteArrayOutputStream()
-      if (cols.nonEmpty) {
-        val t = new java.io.ByteArrayOutputStream()
-        t.write((cols.size >> 8) & 0xff); t.write(cols.size & 0xff)
-        cols.foreach { c =>
-          t.write(c.getBytes("UTF-8")); t.write(0)
-          t.write(new Array[Byte](18))
-        }
-        out.write(msg('T', t.toByteArray))
-      }
-      rows.foreach { r =>
-        val d = new java.io.ByteArrayOutputStream()
-        d.write((r.size >> 8) & 0xff); d.write(r.size & 0xff)
-        r.foreach { v =>
-          val b = v.getBytes("UTF-8")
-          d.write((b.length >> 24) & 0xff); d.write((b.length >> 16) & 0xff)
-          d.write((b.length >> 8) & 0xff); d.write(b.length & 0xff)
-          d.write(b)
-        }
-        out.write(msg('D', d.toByteArray))
-      }
-      out.write(msg('C', "SELECT".getBytes("UTF-8") :+ 0.toByte))
-      out.write(msg('Z', Array[Byte]('I'.toByte)))
-      out.toByteArray
-    }
     val w = new graft.sources.PgOutputWriter()
     val colsT = Seq(
       graft.sources.PgOutput.RelColumn("id", keyPart = true, 20, -1),

@@ -767,4 +767,34 @@ class MysqlTransportSpec extends AnyFunSuite {
     assert(MysqlBinlog.decodeFile(inner.bytesOf("binlog.000001.log"),
       "binlog.000007").nonEmpty)
   }
+
+  test("FsSegmentStore holds a local spool dir only while a spool is " +
+      "open: none after construction, none after publishAll or discard") {
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def spools(): Set[String] = Option(tmp.list()).toSeq.flatten
+      .filter(_.startsWith("graft-segspool")).toSet
+    val before = spools()
+    def made: Set[String] = spools() -- before
+    val dir = java.nio.file.Files
+      .createTempDirectory("segstore-spool").toString
+    val store = new FsSegmentStore(dir)
+    assert(made.isEmpty, "construction created a spool dir")
+    store.append("binlog.000001.log", Array[Byte](1, 2))
+    store.append("binlog.000002.log", Array[Byte](3))
+    assert(made.size == 1)
+    store.publish("binlog.000001.log")
+    assert(made.size == 1, "an open spool lost its dir")
+    store.publishAll()
+    assert(made.isEmpty, s"publishAll left $made")
+    assert(store.publishedNames ==
+      Seq("binlog.000001.log", "binlog.000002.log"))
+    assert(store.bytesOf("binlog.000001.log").toSeq == Seq[Byte](1, 2))
+    assert(store.publishedCount == 2)
+    // the next append opens a fresh spool dir; a discard removes it
+    store.append("binlog.000003.log", Array[Byte](4))
+    assert(made.size == 1)
+    store.discard("binlog.000003.log")
+    assert(made.isEmpty, s"discard left $made")
+    assert(store.publishedNames.size == 2)
+  }
 }

@@ -10,7 +10,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * fresh `Configuration` parses its XML resources on first lookup, so
   * src/main builds exactly one (`Fs`'s per-JVM default), and no footer
   * read goes through the single-argument `ParquetFileReader.open`,
-  * which builds its options from a fresh one per file.
+  * which builds its options from a fresh one per file. The live lanes
+  * land mysql/pg through one streaming query over ChangelogSource,
+  * with no AvailableNow drain beside it, so a second landing copy
+  * fails CI too.
   */
 class SessionDisciplineSpec extends AnyFunSuite {
 
@@ -75,5 +78,22 @@ class SessionDisciplineSpec extends AnyFunSuite {
         .filter(m => arity(code, m.end - 1) == 1).map(_ => rel)
     }
     assert(offenders.isEmpty, offenders.mkString(", "))
+  }
+
+  test("src/main starts one streaming query over ChangelogSource, the " +
+      "mysql/pg landing loop, and never uses AvailableNow") {
+    val readers = mainCode.flatMap { case (rel, code) =>
+      Seq.fill("""format\s*\(\s*"graft\.sources\.ChangelogSource""""
+        .r.findAllIn(code).size)(rel)
+    }
+    assert(readers == Seq("graft/config/LiveCdc.scala"),
+      readers.mkString(", "))
+    val liveCdc = mainCode.toMap.apply("graft/config/LiveCdc.scala")
+    assert("""\.writeStream\b""".r.findAllIn(liveCdc).size == 1,
+      "LiveCdc.scala starts more than one streaming query")
+    val availableNow = mainCode.collect {
+      case (rel, code) if code.contains("AvailableNow") => rel
+    }
+    assert(availableNow.isEmpty, availableNow.mkString(", "))
   }
 }

@@ -149,7 +149,10 @@ class LiveCdcHardeningSpec extends graft.SparkSuite {
     val capture = s"$taskDir/capture"
     // drain 1 pumps and publishes segment A, then dies inside its one
     // micro-batch AFTER landing the delta: the checkpoint holds the
-    // planned batch 0 with no commit, and nothing was finalized
+    // planned batch 0 with no commit, and nothing was finalized. The
+    // crash runs under the trigger the shipped drain uses
+    // (ProcessingTime); the title's AvailableNow names the trigger the
+    // drain ran when this test was written
     val store = new FsSegmentStore(capture)
     val pump = new MysqlReplicationPump(
       LiveCdc.mysqlResumeConfig(task, taskDir), store,
@@ -172,7 +175,8 @@ class LiveCdcHardeningSpec extends graft.SparkSuite {
           scala.collection.mutable.Set[String]())(b, id)
         throw new IllegalStateException("crash before commit")
       }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .trigger(org.apache.spark.sql.streaming.Trigger
+        .ProcessingTime(500L))
       .start()
     intercept[org.apache.spark.sql.streaming.StreamingQueryException](
       q.awaitTermination())

@@ -135,8 +135,8 @@ class LiveLandersSpec extends graft.SparkSuite {
       stopFlag.set(true)
     }, "landers-stopper")
     stopper.start()
-    val report = LiveCdc.runRedisResident(spark, task, taskDir,
-      stop = () => stopFlag.get(),
+    val report = LiveCdc.run(spark, task, taskDir,
+      stop = Some(() => stopFlag.get()),
       dialOverride = Some(() => nextWire()), triggerMs = 100L)
     stopper.join()
 
@@ -251,7 +251,7 @@ class LiveLandersSpec extends graft.SparkSuite {
          |[sinker]
          |url=$sink
          |""".stripMargin)
-    LiveCdc.runMongo(spark, task, taskDir,
+    LiveCdc.run(spark, task, taskDir,
       dialOverride = Some(() => wireFor(Seq(
         change("tokA1", "1", "insert", "x"),
         change("tokA2", "2", "insert", "y")))))
@@ -264,7 +264,7 @@ class LiveLandersSpec extends graft.SparkSuite {
     val wire2 = wireFor(Seq(
       change("tokB1", "1", "update", "x2"),
       change("tokB2", "2", "delete", "")))
-    LiveCdc.runMongo(spark, task, taskDir,
+    LiveCdc.run(spark, task, taskDir,
       dialOverride = Some(() => wire2))
     val sent2 = new String(wire2.sentBytes,
       java.nio.charset.StandardCharsets.ISO_8859_1)
