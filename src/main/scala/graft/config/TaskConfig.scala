@@ -129,16 +129,11 @@ object TaskConfig {
       router: Router,
       batchSize: Int,
       parallelism: Int,
-      sampleRate: Option[Int] = None,
       keysByTable: Map[String, Seq[String]],
       // the reference's `json:`-format filter configs (config.md
       // [filter] table): per-table column drops and source-side WHERE
       ignoreColsByTable: Map[(String, String), Seq[String]] = Map.empty,
       whereByTable: Map[(String, String), String] = Map.empty,
-      // [parallelizer] parallel_type (parallelizer_config.rs):
-      // rdb_merge (compaction lanes) | table (per-table ordered
-      // fan-out) | serial — selects the apply topology
-      parallelType: String = "rdb_merge",
       // [processor] lua_code_file (docs/en/etl/lua.md): a verbatim
       // user Lua script run per row under the five-global contract —
       // the embedded interpreter executes it; the DSL stays the
@@ -187,10 +182,9 @@ object TaskConfig {
       httpHost: String = "127.0.0.1",
       httpPort: Int = 0,
       serveTimeoutSecs: Int = 60,
-      // [pipeline] flow-control knobs (config.md:294-298): admission
-      // cap, rate governor, counter window (defaulting to the
+      // [pipeline] flow-control knobs (config.md:294-298): rate
+      // governor, counter window (defaulting to the
       // checkpoint_interval_secs flush cadence, as documented)
-      bufferSize: Int = 16000,
       maxRps: Option[Long] = None,
       counterTimeWindowSecs: Int = 10,
       // [sinker] conflict_policy (task_config.rs:863-864, default
@@ -205,7 +199,6 @@ object TaskConfig {
       sink: SinkTuning = SinkTuning(),
       checker: Option[CheckerOptions] = None,
       dataMarker: Option[DataMarkerCfg] = None,
-      runtime: RuntimeOptions = RuntimeOptions(),
       resumer: ResumerCfg = DummyResumer,
       // [sinker] sink_type (config_enums.rs SinkType; write is the
       // data lane, struct/sql/statistic/push/dummy specialize it)
@@ -213,10 +206,7 @@ object TaskConfig {
       // [extractor] partition_cols (config.md:20): the per-table
       // column snapshot chunking splits on
       partitionColsByTable: Map[(String, String), String] = Map.empty,
-      // [pipeline] remaining knobs: byte-capped admission, flush
-      // cadence for the sink lane, counter sub-entry bound
-      bufferMemoryMb: Option[Int] = None,
-      batchSinkIntervalSecs: Option[Int] = None,
+      // [pipeline] counter sub-entry bound
       counterMaxSubCount: Int = 1000)
 
   /** `MetaCenterConfig::MySqlDbEngine` — the external meta store a
@@ -228,18 +218,14 @@ object TaskConfig {
       ddlConflictPolicy: graft.struct.StructApplier.ConflictPolicy)
 
   /** `[extractor]` source-side tuning (task_config.rs:440-530 and the
-    * per-engine ExtractorConfig variants). Defaults mirror the
-    * reference exactly. The connection and heartbeat knobs
-    * (keepalives, app_name, heartbeat_interval_secs/heartbeat_tb)
-    * type-check reference configs verbatim and park at the dial
-    * boundary; the position knobs (binlog file/pos, gtid set) are
-    * wired into the replay/compose paths.
+    * per-engine ExtractorConfig variants), reference defaults. Only
+    * keys a lane reads are parsed: the binlog dial and position knobs
+    * (binlog file/pos, server id, gtid set), the throughput cap and
+    * the live-lane posture. Other reference keys (keepalives,
+    * app_name, heartbeat_tb, kafka/psync/mongo resume coordinates)
+    * are ignored.
     */
   final case class SourceTuning(
-      heartbeatIntervalSecs: Int = 10,
-      heartbeatTb: Option[String] = None,
-      keepaliveIdleSecs: Int = 60,
-      keepaliveIntervalSecs: Int = 10,
       binlogHeartbeatIntervalSecs: Int = 10,
       binlogTimeoutSecs: Int = 60,
       binlogFilename: Option[String] = None,
@@ -247,35 +233,7 @@ object TaskConfig {
       serverId: Option[Long] = None,
       gtidEnabled: Boolean = false,
       gtidSet: Option[String] = None,
-      /** mongo `source=change_stream|op_log` (task_config.rs:669). */
-      mongoSource: String = "change_stream",
-      appName: String = "ape_dts",
       maxMbps: Option[Long] = None,
-      /** struct extractors fetch catalog meta `db_batch_size` schemas
-        * per query (task_config.rs DEFAULT_DB_BATCH_SIZE).
-        */
-      dbBatchSize: Int = 100,
-      /** mysql DDL-meta capture table (`[extractor] ddl_meta_tb`). */
-      ddlMetaTb: Option[String] = None,
-      /** redis CDC resume: the db id the stream was in. */
-      nowDbId: Option[Long] = None,
-      /** kafka extractor ack cadence. */
-      ackIntervalSecs: Option[Int] = None,
-      /** kafka source coordinates ([extractor] group/topic/partition/
-        * offset, task_config.rs:771-775).
-        */
-      kafkaGroup: String = "",
-      kafkaTopic: String = "",
-      kafkaPartition: Option[Int] = None,
-      kafkaOffset: Option[Long] = None,
-      /** redis psync resume (repl_id/repl_offset) + the local port
-        * the replica listener binds (repl_port, default 10008).
-        */
-      replId: Option[String] = None,
-      replOffset: Option[Long] = None,
-      replPort: Int = 10008,
-      /** mongo cdc start (epoch secs). */
-      startTimestamp: Option[Long] = None,
       /** live CDC posture: `resident=true` keeps the pump + landing
         * running until a stop request (the deployment mode); false =
         * drain-once per start (the supervised-unit mode).
@@ -302,34 +260,22 @@ object TaskConfig {
       captureRetention: Boolean = false)
 
   /** `[sinker]` sink-side tuning (task_config.rs:838-1060 per-engine
-    * SinkerConfig variants), reference defaults.
+    * SinkerConfig variants), reference defaults. Only keys a lane reads
+    * are parsed; the rdb session knobs (replace,
+    * disable_foreign_key_checks, transaction_isolation), kafka acks,
+    * with_field_defs, redis method/is_cluster, stream_load_url and
+    * app_name are ignored.
     */
   final case class SinkTuning(
-      /** mysql/pg `replace` — false degrades REPLACE/upsert to plain
-        * INSERT (sinker_config.rs REPLACE, default true).
-        */
-      replace: Boolean = true,
-      disableForeignKeyChecks: Boolean = true,
-      transactionIsolation: Option[String] = None,
-      /** mongo sinks add the shard key to update filters by default. */
-      requireShardKeyFilter: Boolean = true,
-      ackTimeoutSecs: Int = 5,
-      requiredAcks: String = "one",
-      /** kafka/http envelopes carry the field-def list unless off. */
-      withFieldDefs: Boolean = true,
-      redisMethod: Option[String] = None,
-      isCluster: Boolean = false,
       /** starrocks hard delete: deletes ship as `__op='delete'`
         * stream-load batches instead of the soft-delete sign column.
         */
       hardDelete: Boolean = false,
-      streamLoadUrl: Option[String] = None,
       /** byte cap per sink batch (foxlake/starrocks batch_memory_mb)
         * — at scale a row-count cap alone lets wide rows blow the
         * sink request size.
         */
       batchMemoryMb: Option[Int] = None,
-      appName: String = "ape_dts",
       maxMbps: Option[Long] = None,
       /** redis statistic sinker gates (redis_statistic_sinker.rs:
         * 42,55): entries below the thresholds are dropped from the
@@ -349,7 +295,6 @@ object TaskConfig {
     */
   final case class DataMarkerCfg(
       topoName: String = "",
-      topoNodes: Seq[String] = Nil,
       srcNode: String = "",
       dstNode: String = "",
       doNodes: Seq[String] = Nil,
@@ -359,19 +304,6 @@ object TaskConfig {
       graft.operators.DataMarker.Marker(topoName, srcNode, dstNode)
   }
 
-  /** `[runtime]` (runtime_config.rs) — logging layout + the checker's
-    * stdout-only switch, reference defaults.
-    */
-  final case class RuntimeOptions(
-      logLevel: String = "info",
-      logDir: String = "./logs",
-      checkResultStdoutOnly: Boolean = false)
-
-  /** S3 artifact destination (s3_config.rs) — parsed and typed so
-    * reference configs load; uploads themselves are deployment-side.
-    */
-  final case class S3Cfg(bucket: String, region: String = "")
-
   /** `[checker]` options (checker_config.rs defaults; the section
     * requires an explicit `enable` when present —
     * task_config.rs:788-798). A check-shaped snapshot reads them; a
@@ -379,32 +311,27 @@ object TaskConfig {
     */
   final case class CheckerOptions(
       enable: Boolean = false,
-      dbType: String = "",
-      url: String = "",
-      batchSize: Int = 200,
-      queueSize: Int = 200,
       sampleRate: Option[Int] = None,
       outputFullRow: Boolean = false,
       outputReviseSql: Boolean = false,
       checkLogDir: String = "",
       checkLogFileSize: String = "100mb",
-      checkLogMaxRows: Int = 1000,
-      checkLogS3: Boolean = false,
-      s3: Option[S3Cfg] = None)
+      checkLogMaxRows: Int = 1000)
 
   /** `[resumer]` (resumer_config.rs): where recorded positions live.
     * `from_log` = file store under log_dir; `from_target`/`from_db` =
     * the database-table recorder ([[graft.sources.DbResumer]]) at
-    * table_full_name; `dummy` = the task's own default. Legacy keys
-    * (resume_from_log/resume_log_dir/resume_config_file) are a config
-    * error, exactly as in the reference (task_config.rs:1343-1352).
+    * table_full_name, the same for both (the recorder writes beside
+    * the task's position store, so the reference's url/db_type/
+    * max_connections are not read); `dummy` = the task's own default.
+    * Legacy keys (resume_from_log/resume_log_dir/resume_config_file)
+    * are a config error, exactly as in the reference
+    * (task_config.rs:1343-1352).
     */
   sealed trait ResumerCfg
   case object DummyResumer extends ResumerCfg
   final case class ResumeFromLog(logDir: String) extends ResumerCfg
-  final case class ResumeFromDb(url: String, dbType: String,
-      tableFullName: String, maxConnections: Int = 8,
-      fromTarget: Boolean = false) extends ResumerCfg
+  final case class ResumeFromDb(tableFullName: String) extends ResumerCfg
 
   /** `node@from-to[,node@from-to...]` → slot ranges. */
   def parseSlots(spec: String): Seq[graft.sinks.RedisReshard.SlotRange] =
@@ -588,13 +515,9 @@ object TaskConfig {
       parallelism = ex("parallel_size")
         .orElse(p.section("runtime")("tb_parallel_size"))
         .getOrElse(pl.get("parallel_size", "4")).toInt,
-      // percent 1..99 — estimated snapshot sampling (ExplainEstimate)
-      sampleRate = ex.get("sample_rate", "").toIntOption,
       keysByTable = colSpec(ex, "id_cols"),
       ignoreColsByTable = ignoreCols,
       whereByTable = whereConds,
-      parallelType = p.section("parallelizer")
-        .get("parallel_type", "rdb_merge"),
       luaCodeFile = p.section("processor")("lua_code_file")
         .filter(_.nonEmpty)
         .map { f =>
@@ -626,7 +549,6 @@ object TaskConfig {
       httpHost = pl.get("http_host", "127.0.0.1"),
       httpPort = pl.get("http_port", "0").toInt,
       serveTimeoutSecs = pl.get("serve_timeout_secs", "60").toInt,
-      bufferSize = pl.get("buffer_size", "16000").toInt,
       maxRps = pl.get("max_rps", "").toLongOption,
       // absent OR an explicit 0 falls back to checkpoint_interval_secs
       // (task_config.rs:1170-1171) — a zero-width monitor window would
@@ -639,12 +561,6 @@ object TaskConfig {
         sk.get("conflict_policy", "interrupt")),
       metaCenter = metaCenter(p, ex, sk),
       source = SourceTuning(
-        heartbeatIntervalSecs =
-          ex.get("heartbeat_interval_secs", "10").toInt,
-        heartbeatTb = ex("heartbeat_tb").filter(_.nonEmpty),
-        keepaliveIdleSecs = ex.get("keepalive_idle_secs", "60").toInt,
-        keepaliveIntervalSecs =
-          ex.get("keepalive_interval_secs", "10").toInt,
         binlogHeartbeatIntervalSecs =
           ex.get("binlog_heartbeat_interval_secs", "10").toInt,
         binlogTimeoutSecs = ex.get("binlog_timeout_secs", "60").toInt,
@@ -654,21 +570,7 @@ object TaskConfig {
         serverId = ex("server_id").filter(_.nonEmpty).map(_.toLong),
         gtidEnabled = ex.get("gtid_enabled", "false").toBoolean,
         gtidSet = ex("gtid_set").filter(_.nonEmpty),
-        mongoSource = ex.get("source", "change_stream"),
-        appName = ex.get("app_name", "ape_dts"),
         maxMbps = ex.get("max_mbps", "").toLongOption,
-        dbBatchSize = ex.get("db_batch_size", "100").toInt,
-        ddlMetaTb = ex("ddl_meta_tb").filter(_.nonEmpty),
-        nowDbId = ex.get("now_db_id", "").toLongOption,
-        ackIntervalSecs = ex.get("ack_interval_secs", "").toIntOption,
-        kafkaGroup = ex.get("group", ""),
-        kafkaTopic = ex.get("topic", ""),
-        kafkaPartition = ex.get("partition", "").toIntOption,
-        kafkaOffset = ex.get("offset", "").toLongOption,
-        replId = ex("repl_id").filter(_.nonEmpty),
-        replOffset = ex.get("repl_offset", "").toLongOption,
-        replPort = ex.get("repl_port", "10008").toInt,
-        startTimestamp = ex.get("start_timestamp", "").toLongOption,
         resident = ex.get("resident", "false").toBoolean,
         maxSegmentSecs = ex.get("max_segment_secs", "0").toLong,
         isCluster = ex.get("is_cluster", "false").toBoolean,
@@ -681,24 +583,9 @@ object TaskConfig {
         captureRetention = ex.get("capture_retention",
           ex.get("resident", "false")).toBoolean),
       sink = SinkTuning(
-        replace = sk.get("replace", "true").toBoolean,
-        disableForeignKeyChecks =
-          sk.get("disable_foreign_key_checks", "true").toBoolean,
-        transactionIsolation =
-          sk("transaction_isolation").filter(_.nonEmpty),
-        requireShardKeyFilter =
-          sk.get("mongo_require_shard_key_filter", "true").toBoolean,
-        ackTimeoutSecs = sk.get("ack_timeout_secs", "5").toInt,
-        requiredAcks = sk.get("required_acks", "one"),
-        withFieldDefs = sk.get("with_field_defs",
-          pl.get("with_field_defs", "true")).toBoolean,
-        redisMethod = sk("method").filter(_.nonEmpty),
-        isCluster = sk.get("is_cluster", "false").toBoolean,
         hardDelete = sk.get("hard_delete", "false").toBoolean,
-        streamLoadUrl = sk("stream_load_url").filter(_.nonEmpty),
         batchMemoryMb =
           sk.get("batch_memory_mb", "").toIntOption,
-        appName = sk.get("app_name", "ape_dts"),
         maxMbps = sk.get("max_mbps", "").toLongOption,
         dataSizeThreshold =
           sk.get("data_size_threshold", "0").toLong,
@@ -710,20 +597,11 @@ object TaskConfig {
         if (dm.entries.isEmpty) None
         else Some(DataMarkerCfg(
           topoName = dm.get("topo_name", ""),
-          topoNodes = dm.list("topo_nodes"),
           srcNode = dm.get("src_node", ""),
           dstNode = dm.get("dst_node", ""),
           doNodes = dm.list("do_nodes"),
           ignoreNodes = dm.list("ignore_nodes"),
           marker = dm.get("marker", "")))
-      },
-      runtime = {
-        val rz = p.section("runtime")
-        RuntimeOptions(
-          logLevel = rz.get("log_level", "info"),
-          logDir = rz.get("log_dir", "./logs"),
-          checkResultStdoutOnly =
-            rz.get("check_result_stdout_only", "false").toBoolean)
       },
       checker = {
         val ck = p.section("checker")
@@ -739,20 +617,13 @@ object TaskConfig {
             s"[checker].sample_rate must be between 1 and 100, got $r"))
           Some(CheckerOptions(
             enable = ck.get("enable", "false").toBoolean,
-            dbType = ck.get("db_type", ""),
-            url = ck.get("url", ""),
-            batchSize = ck.get("batch_size", "200").toInt,
-            queueSize = ck.get("queue_size", "200").toInt,
             sampleRate = rate,
             outputFullRow = ck.get("output_full_row", "false").toBoolean,
             outputReviseSql =
               ck.get("output_revise_sql", "false").toBoolean,
             checkLogDir = ck.get("check_log_dir", ""),
             checkLogFileSize = ck.get("check_log_file_size", "100mb"),
-            checkLogMaxRows = ck.get("check_log_max_rows", "1000").toInt,
-            checkLogS3 = ck.get("check_log_s3", "false").toBoolean,
-            s3 = ck("s3_bucket").filter(_.nonEmpty).map(b =>
-              S3Cfg(b, region = ck.get("s3_region", "")))))
+            checkLogMaxRows = ck.get("check_log_max_rows", "1000").toInt))
         }
       },
       resumer = {
@@ -766,14 +637,8 @@ object TaskConfig {
         rz.get("resume_type", "dummy") match {
           case "dummy" => DummyResumer
           case "from_log" => ResumeFromLog(rz.get("log_dir", "./logs"))
-          case "from_target" => ResumeFromDb(
-            sk.get("url", ""), sk.get("db_type", "file"),
-            rz.get("table_full_name", ""),
-            rz.get("max_connections", "8").toInt, fromTarget = true)
-          case "from_db" => ResumeFromDb(
-            rz.get("url", ""), rz.get("db_type", ""),
-            rz.get("table_full_name", ""),
-            rz.get("max_connections", "8").toInt)
+          case "from_target" | "from_db" =>
+            ResumeFromDb(rz.get("table_full_name", ""))
           case other => sys.error(s"unknown resume_type: $other")
         }
       },
@@ -783,9 +648,6 @@ object TaskConfig {
           (n.get("db").asText(), n.get("tb").asText()) ->
             n.get("partition_col").asText()
         }.toMap,
-      bufferMemoryMb = pl.get("buffer_memory_mb", "").toIntOption,
-      batchSinkIntervalSecs =
-        pl.get("batch_sink_interval_secs", "").toIntOption,
       counterMaxSubCount =
         pl.get("counter_max_sub_count", "1000").toInt)
   }

@@ -25,9 +25,6 @@ import org.apache.spark.sql.SparkSession
   */
 object TaskManager {
 
-  final val Statuses = Seq("created", "running", "finished", "failed",
-    "stopped")
-
   final case class TaskMeta(name: String, status: String,
       createdMs: Long, startedMs: Option[Long], endedMs: Option[Long],
       error: Option[String], restarts: Int = 0)

@@ -23,12 +23,6 @@ object MongoDdl {
   val shardTypes: Set[String] = Set("mongo_shard_collection",
     "mongo_reshard_collection", "mongo_refine_collection_shard_key")
 
-  /** All ten change-stream DDL event types (ddl_type.rs:35-55). */
-  val allTypes: Set[String] = shardTypes ++ Set(
-    "mongo_create_collection", "mongo_drop_collection",
-    "mongo_rename_collection", "mongo_drop_database",
-    "mongo_create_index", "mongo_drop_index", "mongo_coll_mod")
-
   private def obj(fields: (String, JsonNode)*): ObjectNode = {
     val o = mapper.createObjectNode()
     fields.foreach { case (k, v) => o.set[JsonNode](k, v): Unit }

@@ -21,14 +21,6 @@ import graft.Tables
   */
 object Multimodal {
 
-  /** media envelope: payload + typed metadata (FIXTURES.md §5 pattern). */
-  val mediaSchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType),
-    StructField("media", BinaryType),
-    StructField("meta", StructType(Seq(
-      StructField("mime", StringType),
-      StructField("source", StringType))))))
-
   /** Decode/feature-extraction contract — the stub boundary. */
   trait MediaDecoder extends Serializable {
     /** Returns (width, height, nFrames) for a payload. */

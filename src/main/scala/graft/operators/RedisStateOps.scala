@@ -2774,7 +2774,6 @@ object RedisStateOps {
     // an empty STORE result: the server deletes the destination — a
     // full-knowledge write, so it clears a tombstone too
     if (data == "D") return None
-    val isTomb = state.exists(_.t == TombType)
     op.vtype match {
       case "ren" | "cpyr" | "zrs" | "geo" | "srt"
           if data.startsWith("P") =>

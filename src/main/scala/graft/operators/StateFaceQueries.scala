@@ -272,7 +272,6 @@ object StateFaceQueries {
       floor(col("o_totalprice")).cast("long").as("price"))
     val zsaKey = concat(lit("zsa:"), col("ckey"))
     val zsbKey = concat(lit("zsb:"), col("ckey"))
-    val zuKey = concat(lit("zu:"), col("ckey"))
     val r02 = base + col("okey") * 16
     val zsa = o2.select(row(r02 + 9, zsaKey, "put", "zset",
       col("okey"), col("price")): _*)

@@ -4,11 +4,12 @@ package graft.sources
   * `estimate_sample_limit` flow (`/root/reference/dt-connector/src/
   * extractor/mysql/mysql_snapshot_extractor.rs:1200-1292`,
   * `pg/pg_snapshot_extractor.rs:1179-1250`, formula
-  * `extractor/mod.rs:17-28`): when a task sets `sample_rate` (percent,
-  * 1..99), the extractor caps each table's scan at an estimated row
-  * budget instead of reading everything — catalog statistics for
-  * unfiltered tables, the engine's own EXPLAIN JSON row estimate when
-  * a `where_condition` filters the scan.
+  * `extractor/mod.rs:17-28`): when a reference task sets `sample_rate`
+  * (percent, 1..99), the extractor caps each table's scan at an
+  * estimated row budget instead of reading everything — catalog
+  * statistics for unfiltered tables, the engine's own EXPLAIN JSON row
+  * estimate when a `where_condition` filters the scan. No task lane
+  * samples a snapshot yet, so `[extractor] sample_rate` is not parsed.
   *
   * Here the statements and the estimate math are synthesized and
   * parsed as pure functions (the JDBC round-trip stays external, the

@@ -63,15 +63,4 @@ class ExplainEstimateSpec extends AnyFunSuite {
     assert(ExplainEstimate.mysqlCountSql.contains("TABLE_ROWS"))
     assert(ExplainEstimate.pgCountSql.contains("reltuples"))
   }
-
-  test("task config surfaces sample_rate") {
-    val task = graft.config.TaskConfig.fromIni(
-      """[extractor]
-        |extract_type=snapshot
-        |sample_rate=10
-        |""".stripMargin)
-    assert(task.sampleRate == Some(10))
-    assert(graft.config.TaskConfig.fromIni("[extractor]\n")
-      .sampleRate == None)
-  }
 }

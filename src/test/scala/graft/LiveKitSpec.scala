@@ -65,7 +65,6 @@ class LiveKitSpec extends AnyFunSuite {
 
     val redis = TaskConfig.fromIni(embeddedIni("smoke_redis.sh"))
     assert(redis.sourceDir.startsWith("redis://"))
-    assert(redis.source.replPort == 10008)
     assert(!redis.source.isCluster)
 
     val mongo = TaskConfig.fromIni(embeddedIni("smoke_mongo.sh"))

@@ -38,42 +38,24 @@ class TaskSurfaceSpec extends SparkSuite {
     assert(d.sink == TaskConfig.SinkTuning())
     assert(d.checker.isEmpty)
     assert(d.counterMaxSubCount == 1000)
-    assert(d.bufferMemoryMb.isEmpty && d.batchSinkIntervalSecs.isEmpty)
 
     val t = TaskConfig.fromIni(
       """[extractor]
         |extract_type=cdc
         |url=/tmp/x
-        |heartbeat_interval_secs=7
-        |heartbeat_tb=meta.hb
-        |keepalive_idle_secs=120
         |binlog_filename=binlog.000042
         |binlog_position=1234
         |server_id=9
         |gtid_enabled=true
         |gtid_set=3e11fa47-71ca-11e1-9e33-c80aa9429562:1-5
-        |source=op_log
-        |app_name=my_app
         |max_mbps=12
         |
         |[sinker]
         |url=/tmp/y
-        |replace=false
-        |disable_foreign_key_checks=false
-        |transaction_isolation=repeatable_read
-        |mongo_require_shard_key_filter=false
-        |ack_timeout_secs=9
-        |required_acks=all
-        |with_field_defs=false
-        |method=rewrite
-        |is_cluster=true
         |hard_delete=true
-        |stream_load_url=http://fe:8030
         |batch_memory_mb=64
         |
         |[pipeline]
-        |buffer_memory_mb=256
-        |batch_sink_interval_secs=3
         |counter_max_sub_count=50
         |
         |[checker]
@@ -84,27 +66,13 @@ class TaskSurfaceSpec extends SparkSuite {
         |check_log_max_rows=2
         |check_log_file_size=1kb
         |""".stripMargin)
-    assert(t.source.heartbeatIntervalSecs == 7 &&
-      t.source.heartbeatTb.contains("meta.hb") &&
-      t.source.keepaliveIdleSecs == 120 &&
-      t.source.binlogFilename.contains("binlog.000042") &&
+    assert(t.source.binlogFilename.contains("binlog.000042") &&
       t.source.binlogPosition.contains(1234L) &&
       t.source.serverId.contains(9L) && t.source.gtidEnabled &&
       t.source.gtidSet.exists(_.endsWith(":1-5")) &&
-      t.source.mongoSource == "op_log" &&
-      t.source.appName == "my_app" &&
       t.source.maxMbps.contains(12L))
-    assert(!t.sink.replace && !t.sink.disableForeignKeyChecks &&
-      t.sink.transactionIsolation.contains("repeatable_read") &&
-      !t.sink.requireShardKeyFilter && t.sink.ackTimeoutSecs == 9 &&
-      t.sink.requiredAcks == "all" && !t.sink.withFieldDefs &&
-      t.sink.redisMethod.contains("rewrite") && t.sink.isCluster &&
-      t.sink.hardDelete &&
-      t.sink.streamLoadUrl.contains("http://fe:8030") &&
-      t.sink.batchMemoryMb.contains(64))
-    assert(t.bufferMemoryMb.contains(256) &&
-      t.batchSinkIntervalSecs.contains(3) &&
-      t.counterMaxSubCount == 50)
+    assert(t.sink.hardDelete && t.sink.batchMemoryMb.contains(64))
+    assert(t.counterMaxSubCount == 50)
     val ck = t.checker.get
     assert(ck.enable && ck.sampleRate.contains(25) &&
       ck.outputFullRow && ck.outputReviseSql &&
@@ -112,15 +80,11 @@ class TaskSurfaceSpec extends SparkSuite {
     assert(graft.infra.CheckLogs.parseSize("1kb") == 1024L &&
       graft.infra.CheckLogs.parseSize("100mb") == 100L * 1024 * 1024)
 
-    // [data_marker] / [runtime] / the remaining extractor knobs
+    // [data_marker] / the statistic sinker knobs
     val t2 = TaskConfig.fromIni(
       """[extractor]
         |extract_type=cdc
         |url=/tmp/x
-        |db_batch_size=25
-        |ddl_meta_tb=meta.ddl_log
-        |now_db_id=3
-        |ack_interval_secs=2
         |
         |[sinker]
         |url=/tmp/y
@@ -130,53 +94,32 @@ class TaskSurfaceSpec extends SparkSuite {
         |
         |[data_marker]
         |topo_name=topo1
-        |topo_nodes=node1,node2
         |src_node=node1
         |dst_node=node2
         |do_nodes=node1
         |ignore_nodes=node2
         |marker=ape_trans_mysql.topo1
-        |
-        |[runtime]
-        |log_level=debug
-        |check_result_stdout_only=true
         |""".stripMargin)
-    assert(t2.source.dbBatchSize == 25 &&
-      t2.source.ddlMetaTb.contains("meta.ddl_log") &&
-      t2.source.nowDbId.contains(3L) &&
-      t2.source.ackIntervalSecs.contains(2))
     assert(t2.sink.dataSizeThreshold == 1024L &&
       t2.sink.freqThreshold == 5L &&
       t2.sink.statisticLogDir.contains("/tmp/stats"))
     val dm = t2.dataMarker.get
     assert(dm.topoName == "topo1" &&
-      dm.topoNodes == Seq("node1", "node2") &&
       dm.srcNode == "node1" && dm.dstNode == "node2" &&
       dm.doNodes == Seq("node1") && dm.ignoreNodes == Seq("node2") &&
       dm.marker == "ape_trans_mysql.topo1")
     assert(dm.toMarker ==
       graft.operators.DataMarker.Marker("topo1", "node1", "node2"))
-    assert(t2.runtime.logLevel == "debug" &&
-      t2.runtime.checkResultStdoutOnly)
-    assert(d.runtime == TaskConfig.RuntimeOptions())
     assert(d.dataMarker.isEmpty)
     assert(d.resumer == TaskConfig.DummyResumer)
     assert(d.sinkType == "write" && d.partitionColsByTable.isEmpty)
 
-    // [resumer] / sink_type / partition_cols / kafka + psync resume
+    // [resumer] / sink_type / partition_cols
     val t3 = TaskConfig.fromIni(
       """[extractor]
         |extract_type=snapshot
         |url=/tmp/x
         |partition_cols=json:[{"db":"d1","tb":"t1","partition_col":"id"}]
-        |group=g1
-        |topic=events
-        |partition=3
-        |offset=42
-        |repl_id=abc123
-        |repl_offset=777
-        |repl_port=10009
-        |start_timestamp=1700000000
         |
         |[sinker]
         |url=mysql://dst
@@ -186,33 +129,10 @@ class TaskSurfaceSpec extends SparkSuite {
         |[resumer]
         |resume_type=from_target
         |table_full_name=meta.positions
-        |
-        |[checker]
-        |enable=true
-        |db_type=mysql
-        |url=mysql://chk
-        |batch_size=7
-        |queue_size=11
-        |check_log_s3=true
-        |s3_bucket=bkt
-        |s3_region=us-east-1
         |""".stripMargin)
     assert(t3.partitionColsByTable == Map(("d1", "t1") -> "id"))
-    assert(t3.source.kafkaGroup == "g1" &&
-      t3.source.kafkaTopic == "events" &&
-      t3.source.kafkaPartition.contains(3) &&
-      t3.source.kafkaOffset.contains(42L))
-    assert(t3.source.replId.contains("abc123") &&
-      t3.source.replOffset.contains(777L) &&
-      t3.source.replPort == 10009 &&
-      t3.source.startTimestamp.contains(1700000000L))
     assert(t3.sinkType == "sql")
-    assert(t3.resumer == TaskConfig.ResumeFromDb("mysql://dst",
-      "mysql", "meta.positions", 8, fromTarget = true))
-    val ck3 = t3.checker.get
-    assert(ck3.dbType == "mysql" && ck3.url == "mysql://chk" &&
-      ck3.batchSize == 7 && ck3.queueSize == 11 && ck3.checkLogS3 &&
-      ck3.s3.contains(TaskConfig.S3Cfg("bkt", region = "us-east-1")))
+    assert(t3.resumer == TaskConfig.ResumeFromDb("meta.positions"))
     // legacy [resumer] keys are a config error (task_config.rs:1343)
     intercept[IllegalArgumentException](TaskConfig.fromIni(
       """[extractor]
@@ -242,6 +162,59 @@ class TaskSurfaceSpec extends SparkSuite {
         |enable=true
         |sample_rate=200
         |""".stripMargin))
+  }
+
+  test("ini: reference keys no lane reads parse to the same Task as " +
+      "their absence") {
+    // each key set to a value other than the reference default; a
+    // from_db resumer is the same database-table recorder as from_target
+    val ignored = Map(
+      "extractor" -> Seq("sample_rate=10", "heartbeat_interval_secs=7",
+        "heartbeat_tb=meta.hb", "keepalive_idle_secs=120",
+        "keepalive_interval_secs=3", "source=op_log", "app_name=my_app",
+        "db_batch_size=25", "ddl_meta_tb=meta.ddl_log", "now_db_id=3",
+        "ack_interval_secs=2", "group=g1", "topic=events",
+        "partition=3", "offset=42", "repl_id=abc123",
+        "repl_offset=777", "repl_port=10009",
+        "start_timestamp=1700000000"),
+      "sinker" -> Seq("replace=false", "disable_foreign_key_checks=false",
+        "transaction_isolation=repeatable_read",
+        "mongo_require_shard_key_filter=false", "ack_timeout_secs=9",
+        "required_acks=all", "with_field_defs=false", "method=rewrite",
+        "is_cluster=true", "stream_load_url=http://fe:8030",
+        "app_name=my_app"),
+      "pipeline" -> Seq("buffer_size=7", "buffer_memory_mb=256",
+        "batch_sink_interval_secs=3", "with_field_defs=false"),
+      "parallelizer" -> Seq("parallel_type=table"),
+      "runtime" -> Seq("log_level=debug", "log_dir=/tmp/logs",
+        "check_result_stdout_only=true"),
+      "data_marker" -> Seq("topo_nodes=node1,node2"),
+      "checker" -> Seq("db_type=mysql", "url=mysql://chk",
+        "batch_size=7", "queue_size=11", "check_log_s3=true",
+        "s3_bucket=bkt", "s3_region=us-east-1"),
+      "resumer" -> Seq("url=mysql://meta", "db_type=mysql",
+        "max_connections=2"))
+    def ini(resumeType: String, withIgnored: Boolean): String = Seq(
+      "extractor" -> Seq("extract_type=cdc", "url=/tmp/x"),
+      "sinker" -> Seq("url=mysql://dst", "db_type=mysql"),
+      "pipeline" -> Seq("counter_max_sub_count=50"),
+      "parallelizer" -> Nil,
+      "runtime" -> Nil,
+      "data_marker" -> Seq("topo_name=topo1"),
+      "checker" -> Seq("enable=true", "sample_rate=25"),
+      "resumer" -> Seq(s"resume_type=$resumeType",
+        "table_full_name=meta.positions")
+    ).map { case (section, kept) =>
+      val keys =
+        if (withIgnored) kept ++ ignored(section) else kept
+      (s"[$section]" +: keys).mkString("\n")
+    }.mkString("\n\n")
+    val bare = TaskConfig.fromIni(ini("from_target", withIgnored = false))
+    assert(bare.resumer == TaskConfig.ResumeFromDb("meta.positions"))
+    assert(bare.dataMarker.nonEmpty && bare.checker.nonEmpty)
+    Seq("from_target", "from_db").foreach { r =>
+      assert(TaskConfig.fromIni(ini(r, withIgnored = true)) == bare, r)
+    }
   }
 
   test("ini: every reference extract_type token parses to its variant") {

@@ -234,6 +234,35 @@ object ScenarioRunner {
       perTable: Map[String, (Seq[Map[String, Value]],
         Seq[Map[String, Value]])])
 
+  /** INI keys only the runner's statement and parallelizer lanes act
+    * on (no src/main lane reads them), parsed from the same task file
+    * with the reference defaults.
+    */
+  private final case class LaneKeys(
+      parallelType: String,
+      bufferSize: Int,
+      replace: Boolean,
+      disableForeignKeyChecks: Boolean,
+      transactionIsolation: Option[String],
+      withFieldDefs: Boolean)
+
+  private def laneKeys(ini: String): LaneKeys = {
+    val p = TaskConfig.parseIni(ini)
+    val sk = p.section("sinker")
+    val pl = p.section("pipeline")
+    LaneKeys(
+      parallelType = p.section("parallelizer")
+        .get("parallel_type", "rdb_merge"),
+      bufferSize = pl.get("buffer_size", "16000").toInt,
+      replace = sk.get("replace", "true").toBoolean,
+      disableForeignKeyChecks =
+        sk.get("disable_foreign_key_checks", "true").toBoolean,
+      transactionIsolation =
+        sk("transaction_isolation").filter(_.nonEmpty),
+      withFieldDefs = sk.get("with_field_defs",
+        pl.get("with_field_defs", "true")).toBoolean)
+  }
+
   private def dialectOf(dbType: String): RdbQueryBuilder.Dialect =
     dbType match {
       case "pg" | "postgres" | "postgresql" => RdbQueryBuilder.Postgres
@@ -250,6 +279,7 @@ object ScenarioRunner {
     // relative-path resolution production uses (TaskConfig resolves
     // lua_code_file against the INI's directory)
     val task = TaskConfig.fromIni(ini, Some(dir))
+    val lane = laneKeys(ini)
     val dialect = dialectOf(task.sinkDbType)
     val runId = s"${dir.getFileName}-${System.nanoTime()}"
 
@@ -694,7 +724,7 @@ object ScenarioRunner {
         // with_field_defs (default true): the per-field type list
         // rides the envelope unless the config turns it off
         val defs =
-          if (task.sink.withFieldDefs)
+          if (lane.withFieldDefs)
             AvroEnvelope.fieldDefsFor(r.before, r.after)
           else null
         wire.getOrElseUpdate(topic, mutable.ArrayBuffer.empty) +=
@@ -1042,7 +1072,7 @@ object ScenarioRunner {
           StructField("row_type", StringType)) ++
           cols.map(StructField(_, StringType)))
       normalized.sortBy(e => (e.seq, e.sub))
-        .grouped(math.max(1, task.bufferSize)).zipWithIndex
+        .grouped(math.max(1, lane.bufferSize)).zipWithIndex
         .foreach { case (chunk, i) =>
           val rows = chunk.map { e =>
             val img = if (e.rowType == "delete") e.before else e.after
@@ -1299,12 +1329,12 @@ object ScenarioRunner {
       val mkSink = Applier.withSessionInit(
         { val rid = runId; () => MemDb.Sink(rid) },
         RdbQueryBuilder.connSettings(dialect,
-          task.sink.disableForeignKeyChecks,
-          task.sink.transactionIsolation.getOrElse("default")))
+          lane.disableForeignKeyChecks,
+          lane.transactionIsolation.getOrElse("default")))
       Applier.applyCompacted(dialect, qt, compacted, d.keyCols,
         d.cols, Seq("seq", "sub"), mkSink,
         batchSize = task.batchSize,
-        insertOnly = !task.sink.replace)
+        insertOnly = !lane.replace)
     }
 
     val ddlPresent = admitted.exists(_.rowType == "ddl")
@@ -1319,8 +1349,8 @@ object ScenarioRunner {
     if (ddlPresent) {
       import graft.meta.{AlterParser, DdlParser}
       require(!isSnapshot, "ddl events only arise in cdc scenarios")
-      require(task.parallelType != "table" &&
-        task.parallelType != "serial",
+      require(lane.parallelType != "table" &&
+        lane.parallelType != "serial",
         "ddl scenarios run the rdb_merge lane")
       // DDL barriers segment the stream (reference base_pipeline.rs
       // barrier semantics): each segment compacts+applies under the
@@ -1359,8 +1389,8 @@ object ScenarioRunner {
         }
       }
       flush()
-    } else if (task.parallelType == "table" ||
-      task.parallelType == "serial") {
+    } else if (lane.parallelType == "table" ||
+      lane.parallelType == "serial") {
       // table parallelizer lane (table_parallelizer.rs): DML
       // partitions by full table name, each table's rows apply IN
       // ORDER as per-row statements — updates were already split to
